@@ -182,12 +182,9 @@ object Sources {
     * estimate (e.g. rewrapped micro-batches, which report
     * `defaultSizeInBytes`) hit the cap and pass through unchanged.
     * Results are layout-independent — file counts change, rows never
-    * do. `SPARK_GRAFT_WRITE_ADAPTIVE=off` restores the old behavior
-    * (the A/B switch and the escape hatch for a deployment that wants
-    * explicit layout control). */
+    * do. */
   def sizedForWrite(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_WRITE_ADAPTIVE").contains("off")) df
-    else df.coalesce(sizeDerivedPartitions(df.sparkSession,
+    df.coalesce(sizeDerivedPartitions(df.sparkSession,
       df.queryExecution.optimizedPlan.stats.sizeInBytes))
 
   /** DataFrameWriter for graft-INTERNAL writes (staging dirs, logged
@@ -236,31 +233,11 @@ object Sources {
   }
 
   /** [[withShufflePartitions]] with the count derived from an input
-    * path's size — the one-line form the streaming queries use.
-    * `SPARK_GRAFT_STREAM_ADAPTIVE=off` disables the derivation (the
-    * run then keeps the session's `spark.sql.shuffle.partitions`),
-    * which is the A/B switch the round-15 optimization evidence uses
-    * and the escape hatch for a deployment that wants explicit
-    * control of its state layout. */
+    * path's size — the one-line form the streaming queries use. */
   def withStreamPartitionsFor[A](spark: SparkSession, inputPath: String)
                                 (f: => A): A =
-    if (sys.env.get("SPARK_GRAFT_STREAM_ADAPTIVE").contains("off")) f
-    else withShufflePartitions(spark,
+    withShufflePartitions(spark,
       streamShufflePartitions(spark, pathBytes(spark, inputPath)))(f)
-
-  /** `q.awaitTermination()` plus an opt-in dump of the LAST micro-
-    * batch's executed physical plan (`SPARK_GRAFT_EXPLAIN_STREAM=1`) —
-    * the streaming analog of `df.explain("formatted")`, used to record
-    * the state-operator partitioning evidence in plans/r15 (a bounded
-    * stream's plan is otherwise gone with its temp checkpoint). */
-  def awaitExplained(q: org.apache.spark.sql.streaming.StreamingQuery)
-  : Unit = {
-    q.awaitTermination()
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_STREAM")) {
-      println(s"=== stream plan: ${q.name} ===")
-      q.explain()
-    }
-  }
 
   /** Recursive local-path delete for scratch staging/sink directories
     * (deepest-first, tolerant of already-missing entries). Runs inside

@@ -123,18 +123,19 @@ object AnnIndex {
       s"ann build: sampleFraction $sampleFraction out of (0, 1]")
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (gen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = m.files
     require(live.nonEmpty, s"ann build on an empty sink $path")
-    val meta = CommitLog.metaRecords(fs, hPath)
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
+    val meta = m.meta
+    val cms = m.colmaps
+    val cts = m.coltypes
     // 1. centroids: train ONCE over the current table, reuse forever
     // (catch-ups assign against the committed centroids — an index
     // whose cells drift per build would not be an index)
     val (centroidRel, trainedNow) = meta.get(centroidKey(column)) match {
       case Some(rel) => (rel, false)
       case None =>
-        val full = CommitLog.read(spark, path)
+        val full = CommitLog.readSnapshot(spark, path, fs, m)
           .select(col(idColumn).cast("long").as("vec_id"),
             col(column).as("embedding"))
         // seeded sample → deterministic training set; k-means seeds
@@ -153,10 +154,9 @@ object AnnIndex {
         (rel, true)
     }
     // 2. catch-up: exactly the files with no record for the column
-    val existing = CommitLog.annRecords(fs, hPath)
     val targets = live.filter { f =>
       val phys = physOf(cms.getOrElse(f, Map.empty), column)
-      !existing.getOrElse(f, Map.empty).contains(phys)
+      !m.anns.getOrElse(f, Map.empty).contains(phys)
     }
     if (targets.isEmpty && !trainedNow) return 0L
     val newRecs: Map[String, Map[String, String]] =
@@ -252,9 +252,9 @@ object AnnIndex {
            idColumn: String = "vec_id"): DataFrame = {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val gens = CommitLog.generations(fs, hPath)
-    require(gens.nonEmpty, s"ann topK: $path is not a logged sink")
-    val m = CommitLog.manifestAt(fs, hPath, gens.last)
+    val (_, m) = CommitLog.latestSnapshot(fs, hPath).getOrElse(
+      throw new IllegalArgumentException(
+        s"ann topK: $path is not a logged sink"))
     val centroidRel = m.meta.getOrElse(centroidKey(column),
       throw new IllegalArgumentException(
         s"ann topK: no committed ANN index for '$column' at $path — " +
@@ -323,8 +323,8 @@ object AnnIndex {
     // IVF coverage first (trains centroids if absent) — PQ serving
     // probes the IVF cells, and codes encode the postings' vectors
     build(spark, path, column, idColumn)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
-    val m = CommitLog.manifestAt(fs, hPath, gen)
+    val (gen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = m.files
     val cms = m.colmaps
     def postsOf(files: Seq[String]): DataFrame = {
       val rels = files.flatMap(f => m.anns(f).get(
@@ -427,9 +427,9 @@ object AnnIndex {
              idColumn: String = "vec_id"): DataFrame = {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val gens = CommitLog.generations(fs, hPath)
-    require(gens.nonEmpty, s"ann topKPq: $path is not a logged sink")
-    val m = CommitLog.manifestAt(fs, hPath, gens.last)
+    val (_, m) = CommitLog.latestSnapshot(fs, hPath).getOrElse(
+      throw new IllegalArgumentException(
+        s"ann topKPq: $path is not a logged sink"))
     val centroidRel = m.meta.getOrElse(centroidKey(column),
       throw new IllegalArgumentException(
         s"ann topKPq: no committed ANN index for '$column' at $path " +

@@ -78,7 +78,8 @@ object Cluster {
     require(nFiles >= 1, "nFiles must be positive")
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (baseGen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (baseGen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
     require(live.nonEmpty, s"zorderBy on an empty sink $path")
     val partCols = CommitLog.partitionColsOf(live)
     require(!cols.exists(partCols.contains),
@@ -86,15 +87,12 @@ object Cluster {
         .mkString(", ")} are PARTITION columns of $path — constant " +
         "within each partition, so clustering on them is meaningless; " +
         "partition pruning already serves them")
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
-    val dvs = CommitLog.dvRecords(fs, hPath)
     // stats coverage BEFORE the rewrite (records leave with files)
-    val priorStatsCols = CommitLog.statsRecords(fs, hPath)
-      .values.flatMap(_.keySet).toSeq.distinct.sorted
+    val priorStatsCols =
+      snap.stats.values.flatMap(_.keySet).toSeq.distinct.sorted
     // logical, DV-applied view: the rewrite pays down mapping/DV debt
-    val scan = CommitLog.mappedScan(spark, hPath, live, cms, dvs,
-      coltypes = cts)
+    val scan = CommitLog.mappedScan(spark, hPath, live, snap.colmaps,
+      snap.dvs, coltypes = snap.coltypes)
     val missing = cols.filterNot(scan.columns.contains)
     require(missing.isEmpty,
       s"zorderBy column(s) ${missing.mkString(", ")} not in $path's " +

@@ -199,6 +199,7 @@ object CommitLog {
   /** All committed generation numbers, ascending; empty when the sink
     * has never been logged. */
   def generations(fs: FileSystem, sink: Path): Seq[Long] = {
+    logListings.incrementAndGet()
     val dir = logDir(sink)
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).map(_.getPath.getName)
@@ -216,6 +217,12 @@ object CommitLog {
     * asserted against this counter (CommitProtocolSpec retains 100+
     * generations and shows a writer's entry reads exactly one). */
   private[graft] val manifestReads =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Test observability: [[generations]] calls (log-dir resolutions)
+    * since process start — the per-call listing budgets of the
+    * snapshot-reading operators are asserted against this counter. */
+  private[graft] val logListings =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Per-file, per-column statistics record — the manifest-resident
@@ -445,54 +452,27 @@ object CommitLog {
                            gen: Long): Seq[String] =
     readManifestFull(fs, sink, gen).files
 
+  /** The latest committed (generation, parsed manifest), or None when
+    * the sink has never been logged — THE read-only view of table
+    * state: one log listing + one (cached) manifest parse, and every
+    * record family a caller consults comes from that one generation.
+    * Never bootstraps; writers take [[ensureSnapshotAt]] instead. */
+  private[graft] def latestSnapshot(fs: FileSystem, sink: Path)
+  : Option[(Long, Manifest)] =
+    generations(fs, sink).lastOption.map(g => g -> readManifestFull(fs,
+      sink, g))
+
+  /** Latest committed (generation, live files), or None when the sink
+    * has never been logged. */
+  def committed(fs: FileSystem, sink: Path): Option[(Long, Seq[String])] =
+    latestSnapshot(fs, sink).map { case (g, m) => g -> m.files }
+
   /** The FULL parsed manifest of a committed generation — the
     * snapshot a [[graft.sources.GraftDataSource]] V2 table pins at
     * load time (files + every record family in one cached parse). */
   private[graft] def manifestAt(fs: FileSystem, sink: Path,
                                 gen: Long): Manifest =
     readManifestFull(fs, sink, gen)
-
-  /** The latest committed generation's column-mapping records
-    * (data file → physical → logical), empty for unlogged or unmapped
-    * sinks ([[SchemaEvolve]]). */
-  def colmapRecords(fs: FileSystem, sink: Path)
-  : Map[String, Map[String, String]] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).colmaps)
-      .getOrElse(Map.empty)
-
-  /** Column-mapping records AT a pinned committed generation — what a
-    * writer's rebase loop compares against to detect that a
-    * concurrent winner evolved the schema after the writer's read
-    * snapshot (its staged files' physical names are then stale). */
-  def colmapRecordsAt(fs: FileSystem, sink: Path, gen: Long)
-  : Map[String, Map[String, String]] =
-    if (gen < 0) Map.empty
-    else readManifestFull(fs, sink, gen).colmaps
-
-  /** The latest committed generation's widening-cast records
-    * (data file → physical → catalog DDL type),
-    * [[SchemaEvolve.widenColumn]]. */
-  def coltypeRecords(fs: FileSystem, sink: Path)
-  : Map[String, Map[String, String]] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).coltypes)
-      .getOrElse(Map.empty)
-
-  /** Widening-cast records AT a pinned committed generation — the
-    * [[colmapRecordsAt]] twin for rebase-loop schema-race detection
-    * (staged files racing a widen carry the NARROW physical type). */
-  def coltypeRecordsAt(fs: FileSystem, sink: Path, gen: Long)
-  : Map[String, Map[String, String]] =
-    if (gen < 0) Map.empty
-    else readManifestFull(fs, sink, gen).coltypes
-
-  /** The latest committed generation's CHECK constraints
-    * (name → SQL boolean expression), empty when none declared. */
-  def checkRecords(fs: FileSystem, sink: Path): Map[String, String] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).checks)
-      .getOrElse(Map.empty)
 
   /** Declare a table-level CHECK constraint (Delta's `ADD CONSTRAINT
     * ... CHECK`): one manifest commit carrying the `#check` record —
@@ -510,13 +490,13 @@ object CommitLog {
       "addCheck needs a name and a boolean SQL expression")
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, live) = ensureLoggedAt(fs, hPath)
-    val offender = read(spark, path)
+    val (gen, m) = ensureSnapshotAt(fs, hPath)
+    val offender = readSnapshot(spark, path, fs, m)
       .filter(!org.apache.spark.sql.functions.expr(sqlExpr)).take(1)
     require(offender.isEmpty,
       s"addCheck '$name': existing rows violate ($sqlExpr) — first " +
         s"offender: ${offender.headOption.fold("")(_.toString)}")
-    commitNext(fs, hPath, gen, live, checks = Map(name -> sqlExpr))
+    commitNext(fs, hPath, gen, m.files, checks = Map(name -> sqlExpr))
   }
 
   /** Drop a CHECK constraint: one manifest commit with the empty-expr
@@ -525,117 +505,11 @@ object CommitLog {
   : Long = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, live) = ensureLoggedAt(fs, hPath)
-    require(checkRecords(fs, hPath).contains(name),
+    val (gen, m) = ensureSnapshotAt(fs, hPath)
+    require(m.checks.contains(name),
       s"dropCheck: no constraint '$name' at $path")
-    commitNext(fs, hPath, gen, live, checks = Map(name -> ""))
+    commitNext(fs, hPath, gen, m.files, checks = Map(name -> ""))
   }
-
-  /** Writer-side enforcement: refuse `batch` if any row violates any
-    * declared constraint — called BEFORE a write stages anything, so
-    * a violating batch never moves a byte. One filter job per
-    * constraint over the BATCH (delta-sized, never the table); free
-    * when no constraints are declared (one cached manifest read). A
-    * NULL result counts as a violation (Delta semantics: the
-    * constraint must evaluate TRUE). */
-  private[graft] def requireChecks(spark: SparkSession,
-                                   fs: FileSystem, sink: Path,
-                                   batch: DataFrame,
-                                   op: String): Unit = {
-    val checks = checkRecords(fs, sink)
-    checks.foreach { case (name, e) =>
-      val pass = org.apache.spark.sql.functions.expr(e)
-      val offender = batch.filter(
-        !org.apache.spark.sql.functions.coalesce(pass,
-          org.apache.spark.sql.functions.lit(false))).take(1)
-      require(offender.isEmpty,
-        s"$op: batch violates CHECK constraint '$name' ($e) — first " +
-          s"offender: ${offender.headOption.fold("")(_.toString)}")
-    }
-  }
-
-  /** Refuse an operator whose scan resolves columns by PHYSICAL name
-    * on files carrying a column mapping — it would read renamed
-    * columns under stale names (mergeSchema unioning old+new names as
-    * distinct null-padded columns) or resurrect dropped ones.
-    * [[SchemaEvolve.normalize]] is the explicit rewrite that clears
-    * the records, exactly as [[DeleteVectors.applyDeletes]] clears
-    * DVs for the raw-reading rewrite family. */
-  private[operators] def requireNoColmaps(fs: FileSystem, sink: Path,
-                                          op: String,
-                                          files: Option[Seq[String]] =
-                                            None): Unit = {
-    val cms = colmapRecords(fs, sink)
-    val cts = coltypeRecords(fs, sink)
-    val mapped = cms.keySet ++ cts.keySet
-    val hit = files match {
-      case None => mapped.toSeq
-      case Some(fl) => fl.filter(mapped)
-    }
-    require(hit.isEmpty,
-      s"$op reads files by physical column name but these carry a " +
-        s"column mapping (${hit.sorted.take(3).mkString(", ")}${
-          if (hit.size > 3) ", …" else ""}) — run " +
-        "SchemaEvolve.normalize first to rewrite them to the logical " +
-        "schema")
-  }
-
-  /** The latest committed generation's deletion-vector records
-    * (data file → DV path), empty for unlogged or DV-free sinks. */
-  def dvRecords(fs: FileSystem, sink: Path): Map[String, String] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).dvs).getOrElse(Map.empty)
-
-  /** The latest generation's deletion-vector CARDINALITIES (data file
-    * → number of deleted positions) where recorded — the manifest-only
-    * metadata [[TableStats]] uses to prune a fully-deleted file
-    * without opening its DV. A file with a DV record but no count
-    * (pre-extension manifests) is simply absent here. */
-  def dvMarkCounts(fs: FileSystem, sink: Path): Map[String, Long] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).dvMarks).getOrElse(Map.empty)
-
-  /** The latest committed generation's per-file column statistics
-    * (data file → column → [[ColStats]]), empty for unlogged or
-    * never-analyzed sinks. */
-  def statsRecords(fs: FileSystem, sink: Path)
-  : Map[String, Map[String, ColStats]] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).stats).getOrElse(Map.empty)
-
-  /** Highest committed version for an idempotent writer's `appId`
-    * ([[Replicate]]'s exactly-once subscription ledger), None when the app has never committed here. */
-  /** The latest committed generation's table-property records
-    * (`#meta` — the catalog's declared bootstrap schema and partition
-    * layout), empty for unlogged sinks or tables never CREATE'd
-    * through the catalog. */
-  def metaRecords(fs: FileSystem, sink: Path): Map[String, String] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).meta)
-      .getOrElse(Map.empty)
-
-  /** The latest committed generation's Bloom-index records
-    * (data file → PHYSICAL column name → sidecar path under
-    * [[BloomDirName]]), empty when none built. Keyed by physical name
-    * so the records survive renames without rewrites: the consumer
-    * resolves a filter's logical name through the file's own
-    * `#colmap` ([[TableStats]]), and a stale-name reuse can never
-    * mis-prune. */
-  def bloomRecords(fs: FileSystem, sink: Path)
-  : Map[String, Map[String, String]] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).blooms)
-      .getOrElse(Map.empty)
-
-  /** The LATEST generation's ANN index records (data file → PHYSICAL
-    * column name → postings sidecar under [[AnnDirName]]) — keyed
-    * physically for the same rename-survival reason as
-    * [[bloomRecords]]. */
-  def annRecords(fs: FileSystem, sink: Path)
-  : Map[String, Map[String, String]] =
-    generations(fs, sink).lastOption
-      .map(readManifestFull(fs, sink, _).anns)
-      .getOrElse(Map.empty)
 
   /** Partition column names of a hive-layout live set, from the `k=v`
     * directory levels of the relative file paths — manifest-only (no
@@ -649,42 +523,6 @@ object CommitLog {
     require(sigs.size <= 1,
       s"inconsistent partition layouts across live files: $sigs")
     sigs.headOption.getOrElse(Nil)
-  }
-
-  def txnVersion(fs: FileSystem, sink: Path,
-                 appId: String): Option[Long] =
-    generations(fs, sink).lastOption
-      .flatMap(readManifestFull(fs, sink, _).txns.get(appId))
-
-  /** Fail-loud composition guard for rewrite operators that read live
-    * files RAW (explicit file lists without DV application — Merge,
-    * Compact, Upsert): rewriting a file whose deletion vector still
-    * holds unapplied deletes would resurrect the deleted rows into
-    * the rewritten output. Such sinks must run
-    * [[DeleteVectors.applyDeletes]] first. `files = None` guards the
-    * whole sink (operators that scan every live file). */
-  private[operators] def requireNoDvs(fs: FileSystem, sink: Path,
-                                      op: String,
-                                      files: Option[Seq[String]] = None)
-  : Unit = {
-    val dvs = dvRecords(fs, sink)
-    val hit = files match {
-      case None => dvs.keys.toSeq
-      case Some(fl) => fl.filter(dvs.contains)
-    }
-    require(hit.isEmpty,
-      s"$op would rewrite files with unapplied deletion vectors " +
-        s"(${hit.sorted.take(3).mkString(", ")}${
-          if (hit.size > 3) ", …" else ""}) — run " +
-        s"DeleteVectors.applyDeletes on $sink first")
-  }
-
-  /** Latest committed (generation, live files), or None when the sink
-    * has never been logged. */
-  def committed(fs: FileSystem, sink: Path): Option[(Long, Seq[String])] = {
-    val gens = generations(fs, sink)
-    if (gens.isEmpty) None
-    else Some(gens.last -> readManifest(fs, sink, gens.last))
   }
 
   /** Every data file referenced by ANY retained generation — the set
@@ -1080,7 +918,7 @@ object CommitLog {
     * winner may have inserted the same keys after this writer's
     * anti-join scan. Writers needing exactly-once batches across
     * concurrent processes pass `txn` (the `#txn` idempotence ledger,
-    * [[txnVersion]]); the rebase re-merges it against the winner's
+    * [[Manifest.txns]]); the rebase re-merges it against the winner's
     * ledger on every attempt. Rewriters (compaction, merge, partition
     * replace) must NOT use this — their read snapshot is invalidated
     * by any winner, which is what the terminal [[commitNext]] conflict
@@ -1690,17 +1528,10 @@ object CommitLog {
     require(generations(fs, hPath).contains(gen),
       s"generation $gen is not committed (or expired) at $sink")
     val m = readManifestFull(fs, hPath, gen)
-    if (m.files.isEmpty) return spark.emptyDataFrame
     val missing = m.files.filterNot(r => fs.exists(new Path(hPath, r)))
     require(missing.isEmpty,
       s"generation $gen files were reclaimed (vacuumed): $missing")
-    if (m.colmaps.nonEmpty || m.coltypes.nonEmpty)
-      mappedScan(spark, hPath, m.files, m.colmaps, m.dvs,
-        coltypes = m.coltypes, meta = m.meta)
-    else applyDvs(spark, hPath, fs,
-      spark.read.option("basePath", sink)
-        .parquet(m.files.map(r => new Path(hPath, r).toString): _*),
-      m.dvs)
+    readSnapshot(spark, sink, fs, m)
   }
 
   /** Anti-join a frame read from a sink's live files against the
@@ -1965,51 +1796,49 @@ object CommitLog {
     }
   }
 
-  /** Bring the sink under log control and return (generation, live
-    * files): bootstrap generation 0 from the directory listing when no
-    * log exists, else read the LATEST manifest — exactly one manifest
-    * read, O(1) regardless of retained history, and NO deletion of any
-    * kind (torn-swap debris is invisible to manifest-resolving readers
-    * and is reclaimed only by explicit [[vacuum]] maintenance — a
-    * write-path reclaim could destroy a concurrent writer's staged
-    * files). Every logged writer calls this FIRST — which is what
-    * makes the bootstrap listing trustworthy by induction — and passes
-    * the returned generation to [[commitNext]] as its CAS base. A lost
-    * bootstrap race adopts the winner's log. */
-  def ensureLoggedAt(fs: FileSystem, sink: Path): (Long, Seq[String]) =
-    committed(fs, sink) match {
-      case None =>
-        val files = listDataFiles(fs, sink)
-        try {
-          (commitNext(fs, sink, -1L, files), files)
-        } catch {
-          case _: CommitConflictException => committed(fs, sink).get
-        }
-      case Some(gAndLive) => gAndLive
+  /** Bring the sink under log control and return (generation, parsed
+    * manifest) — the writer's form of [[latestSnapshot]]: bootstrap
+    * generation 0 from the directory listing when no log exists, else
+    * read the LATEST manifest — one log-dir listing + one (cached)
+    * manifest parse, O(1) regardless of retained history, serving
+    * every record family the operator call consults (live files, DVs,
+    * colmaps/coltypes, checks, meta, txns, stats) from the generation
+    * it commits against. NO deletion of any kind (torn-swap debris is
+    * invisible to manifest-resolving readers and is reclaimed only by
+    * explicit [[vacuum]] maintenance — a write-path reclaim could
+    * destroy a concurrent writer's staged files). Every logged writer
+    * calls this FIRST — which is what makes the bootstrap listing
+    * trustworthy by induction — and passes the returned generation to
+    * [[commitNext]] as its CAS base. A lost bootstrap race adopts the
+    * winner's log. */
+  private[graft] def ensureSnapshotAt(fs: FileSystem, sink: Path)
+  : (Long, Manifest) =
+    latestSnapshot(fs, sink).getOrElse {
+      val files = listDataFiles(fs, sink)
+      // generation 0 records nothing but the listed files
+      try (commitNext(fs, sink, -1L, files),
+        Manifest(files, Map.empty, Map.empty, Map.empty))
+      catch {
+        case _: CommitConflictException => latestSnapshot(fs, sink).get
+      }
     }
 
-  /** [[ensureLoggedAt]] returning the FULL parsed manifest: one
-    * log-dir listing + one (cached) manifest parse serve every record
-    * family a writer consults — live files, DVs, colmaps/coltypes,
-    * checks, meta, txns, stats. The per-family accessors
-    * ([[colmapRecords]], [[checkRecords]], …) each re-list the log dir
-    * to find the latest generation, so an operator calling five of
-    * them paid five listings (+ five cache-key stat calls) per
-    * invocation — per-call fs ops an object store bills individually
-    * (guide §6). Writers that need more than one family should take
-    * this snapshot once and read its fields. */
-  private[graft] def ensureSnapshotAt(fs: FileSystem, sink: Path)
-  : (Long, Manifest) = {
-    val (gen, _) = ensureLoggedAt(fs, sink)
-    (gen, manifestAt(fs, sink, gen))
+  /** [[ensureSnapshotAt]] for callers that need only (generation, live
+    * files). */
+  def ensureLoggedAt(fs: FileSystem, sink: Path): (Long, Seq[String]) = {
+    val (gen, m) = ensureSnapshotAt(fs, sink)
+    (gen, m.files)
   }
 
-  /** [[requireChecks]] over a PREFETCHED constraint map (one manifest
-    * snapshot serving the whole operator call — see
-    * [[ensureSnapshotAt]]). */
-  private[graft] def requireChecksIn(checks: Map[String, String],
-                                     batch: DataFrame,
-                                     op: String): Unit =
+  /** Writer-side enforcement: refuse `batch` if any row violates any
+    * of the snapshot's declared `checks` — called BEFORE a write stages
+    * anything, so a violating batch never moves a byte. One filter job
+    * per constraint over the BATCH (delta-sized, never the table);
+    * free when no constraints are declared. A NULL result counts as a
+    * violation (Delta semantics: the constraint must evaluate TRUE). */
+  private[graft] def requireChecks(checks: Map[String, String],
+                                   batch: DataFrame,
+                                   op: String): Unit =
     checks.foreach { case (name, e) =>
       val pass = org.apache.spark.sql.functions.expr(e)
       val offender = batch.filter(
@@ -2020,8 +1849,15 @@ object CommitLog {
           s"offender: ${offender.headOption.fold("")(_.toString)}")
     }
 
-  /** [[requireNoColmaps]] over PREFETCHED mapping maps. */
-  private[operators] def requireNoColmapsIn(
+  /** Refuse an operator whose scan resolves columns by PHYSICAL name
+    * on files carrying a column mapping (the snapshot's `cms`/`cts`) —
+    * it would read renamed columns under stale names (mergeSchema
+    * unioning old+new names as distinct null-padded columns) or
+    * resurrect dropped ones. [[SchemaEvolve.normalize]] is the explicit
+    * rewrite that clears the records, exactly as
+    * [[DeleteVectors.applyDeletes]] clears DVs for the raw-reading
+    * rewrite family. `files = None` guards the whole sink. */
+  private[operators] def requireNoColmaps(
       cms: Map[String, Map[String, String]],
       cts: Map[String, Map[String, String]],
       op: String,
@@ -2039,11 +1875,17 @@ object CommitLog {
         "schema")
   }
 
-  /** [[requireNoDvs]] over a PREFETCHED DV map. */
-  private[operators] def requireNoDvsIn(dvs: Map[String, String],
-                                        sink: Path, op: String,
-                                        files: Option[Seq[String]] =
-                                          None): Unit = {
+  /** Fail-loud composition guard for rewrite operators that read live
+    * files RAW (explicit file lists without DV application — Merge,
+    * Compact, Upsert): rewriting a file whose deletion vector (in the
+    * snapshot's `dvs`) still holds unapplied deletes would resurrect
+    * the deleted rows into the rewritten output. Such sinks must run
+    * [[DeleteVectors.applyDeletes]] first. `files = None` guards the
+    * whole sink (operators that scan every live file). */
+  private[operators] def requireNoDvs(dvs: Map[String, String],
+                                      sink: Path, op: String,
+                                      files: Option[Seq[String]] =
+                                        None): Unit = {
     val hit = files match {
       case None => dvs.keys.toSeq
       case Some(fl) => fl.filter(dvs.contains)
@@ -2064,28 +1906,39 @@ object CommitLog {
     * so partition columns still materialize from directory names),
     * plain directory read otherwise. This is THE reader the protocol's
     * guarantee is stated for — a plain `spark.read.parquet(sink)` is
-    * only equivalent once [[vacuum]] has run. */
-  /** `mergeSchema = true` unions the live files' footer schemas — the
-    * reader side of [[Merge.mergeParquet]]'s lazy schema evolution,
-    * where untouched files legitimately carry an older (narrower)
-    * schema and their rows take NULLs for the widened columns. */
+    * only equivalent once [[vacuum]] has run. `mergeSchema = true`
+    * unions the live files' footer schemas — the reader side of
+    * [[Merge.mergeParquet]]'s lazy schema evolution, where untouched
+    * files legitimately carry an older (narrower) schema and their
+    * rows take NULLs for the widened columns. */
   def read(spark: SparkSession, sink: String,
            mergeSchema: Boolean = false): DataFrame = {
     val hPath = new Path(sink)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rd = spark.read.option("mergeSchema", mergeSchema.toString)
-    generations(fs, hPath).lastOption
-      .map(readManifestFull(fs, hPath, _)) match {
-      case None => rd.parquet(sink)
-      case Some(m) if m.files.isEmpty => spark.emptyDataFrame
-      case Some(m) if m.colmaps.nonEmpty || m.coltypes.nonEmpty =>
-        mappedScan(spark, hPath, m.files, m.colmaps, m.dvs,
-          coltypes = m.coltypes, meta = m.meta)
-      case Some(m) =>
-        applyDvs(spark, hPath, fs,
-          rd.option("basePath", sink)
-            .parquet(m.files.map(r => new Path(hPath, r).toString): _*),
-          m.dvs)
+    latestSnapshot(fs, hPath) match {
+      case None => spark.read.option("mergeSchema", mergeSchema.toString)
+        .parquet(sink)
+      case Some((_, m)) => readSnapshot(spark, sink, fs, m, mergeSchema)
     }
+  }
+
+  /** The visible rows of one manifest: its live files through their
+    * column mappings and deletion vectors — what [[read]] and
+    * [[readAt]] return, and the read for a caller already holding the
+    * snapshot it commits against. */
+  private[graft] def readSnapshot(spark: SparkSession, sink: String,
+                                  fs: FileSystem, m: Manifest,
+                                  mergeSchema: Boolean = false)
+  : DataFrame = {
+    val hPath = new Path(sink)
+    if (m.files.isEmpty) spark.emptyDataFrame
+    else if (m.colmaps.nonEmpty || m.coltypes.nonEmpty)
+      mappedScan(spark, hPath, m.files, m.colmaps, m.dvs,
+        coltypes = m.coltypes, meta = m.meta)
+    else applyDvs(spark, hPath, fs,
+      spark.read.option("mergeSchema", mergeSchema.toString)
+        .option("basePath", sink)
+        .parquet(m.files.map(r => new Path(hPath, r).toString): _*),
+      m.dvs)
   }
 }

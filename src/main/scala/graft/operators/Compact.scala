@@ -85,8 +85,8 @@ object Compact {
     // declaration (CommitLog.ensureSnapshotAt, guide §6)
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
-    CommitLog.requireNoDvsIn(m.dvs, hPath, "compactSink")
-    CommitLog.requireNoColmapsIn(m.colmaps, m.coltypes, "compactSink")
+    CommitLog.requireNoDvs(m.dvs, hPath, "compactSink")
+    CommitLog.requireNoColmaps(m.colmaps, m.coltypes, "compactSink")
     // a declared bucket layout is PRESERVED through compaction: rows
     // re-route by the same hash the writers used and the bucket id
     // rides the rewritten file names — the bin-packing unit becomes
@@ -248,9 +248,9 @@ object Compact {
     val live = m.files
     val assigned = live.filter(plan.contains)
     require(assigned.nonEmpty, "plan assigns no live file of this sink")
-    CommitLog.requireNoDvsIn(m.dvs, hPath, "compactByPlan",
+    CommitLog.requireNoDvs(m.dvs, hPath, "compactByPlan",
       Some(assigned))
-    CommitLog.requireNoColmapsIn(m.colmaps, m.coltypes,
+    CommitLog.requireNoColmaps(m.colmaps, m.coltypes,
       "compactByPlan", Some(assigned))
     val tmp = new Path(hPath.getParent, hPath.getName + "__plan_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)

@@ -247,12 +247,11 @@ object DeleteVectors {
               throw new CommitConflictException(
                 s"deleteWhere: gave up after $maxAttempts rebase " +
                   s"attempts at $path — ${e.getMessage}")
-            val (g2, l2) = CommitLog.ensureLoggedAt(fs, hPath)
-            val liveSet2 = l2.toSet
-            val dv2 = CommitLog.dvRecords(fs, hPath)
+            val (g2, m2) = CommitLog.ensureSnapshotAt(fs, hPath)
+            val liveSet2 = m2.files.toSet
             if (affected.forall(f =>
-              liveSet2(f) && dv2.get(f) == dvs.get(f))) {
-              base = g2; liveNow = l2
+              liveSet2(f) && m2.dvs.get(f) == dvs.get(f))) {
+              base = g2; liveNow = m2.files
             } else recompute = true // our staged DV becomes debris
         }
       }
@@ -325,7 +324,7 @@ object DeleteVectors {
     // byte-layout-compatible with the originals
     val conformed = updates.select(sinkCols.toIndexedSeq.map(col): _*)
     // CHECK constraints gate the update rows before any mark or append
-    CommitLog.requireChecksIn(m.checks, conformed, "mergeOnRead")
+    CommitLog.requireChecks(m.checks, conformed, "mergeOnRead")
     val batch = updates.select(keys.map(col): _*).distinct()
     // matched = visible rows (existing DVs anti-joined) whose key is
     // in the batch; only keys + identity are ever projected
@@ -408,7 +407,6 @@ object DeleteVectors {
     var seen = live.toSet ++ newFiles
     var committed = false
     var attempt = 0
-    val mBase = CommitLog.manifestAt(fs, hPath, baseGen)
     while (!committed) {
       try {
         CommitLog.commitNext(fs, hPath, base, liveNow ++ newFiles,
@@ -417,10 +415,8 @@ object DeleteVectors {
       } catch {
         case e: CommitConflictException =>
           attempt += 1
-          // one consistent manifest read per retry (not four record
-          // reads that could straddle yet another commit)
-          val g2 = CommitLog.generations(fs, hPath).last
-          val m2 = CommitLog.manifestAt(fs, hPath, g2)
+          // one consistent manifest read per retry
+          val (g2, m2) = CommitLog.ensureSnapshotAt(fs, hPath)
           val l2 = m2.files
           val liveSet2 = l2.toSet
           val dv2 = m2.dvs
@@ -428,7 +424,7 @@ object DeleteVectors {
           // files' physical column names (see upsertParquet) — never
           // commutes
           if ((m2.colmaps, m2.coltypes) !=
-            (mBase.colmaps, mBase.coltypes))
+            (m.colmaps, m.coltypes))
             throw new CommitConflictException(
               s"mergeOnRead: a concurrent writer evolved the schema " +
                 s"at $path — re-run the MERGE against the new " +
@@ -436,7 +432,7 @@ object DeleteVectors {
           // a winner that added a CHECK invalidates this batch's
           // constraint gate (requireChecks ran against the pinned
           // snapshot) — never commutes
-          if (m2.checks != mBase.checks)
+          if (m2.checks != m.checks)
             throw new CommitConflictException(
               s"mergeOnRead: a concurrent writer changed CHECK " +
                 s"constraints at $path — re-run the MERGE so the " +
@@ -590,14 +586,12 @@ object DeleteVectors {
       } catch {
         case e: CommitConflictException =>
           attempt += 1
-          // ONE consistent manifest read decides the commute — four
-          // separate record reads could straddle yet another commit.
+          // ONE consistent manifest read decides the commute.
           // Commute requires the winner changed NO live file, NO
           // schema mapping, NO affected DV record, and NO CHECK
           // constraint (a new CHECK must re-gate this statement's
           // rows — requireChecks ran against the pinned snapshot)
-          val g2 = CommitLog.generations(fs, hPath).last
-          val m2 = CommitLog.manifestAt(fs, hPath, g2)
+          val (g2, m2) = CommitLog.ensureSnapshotAt(fs, hPath)
           val commutes = attempt < maxAttempts &&
             m2.files.toSet == baseSet &&
             (m2.colmaps, m2.coltypes) ==
@@ -640,7 +634,7 @@ object DeleteVectors {
     // positional rewrite binds rows to the raw physical layout —
     // SchemaEvolve.normalize is the rewrite that handles mapped files
     // (and clears their DVs in the same pass)
-    CommitLog.requireNoColmapsIn(m.colmaps, m.coltypes,
+    CommitLog.requireNoColmaps(m.colmaps, m.coltypes,
       "applyDeletes", Some(targets))
     val tmp = new Path(hPath.getParent, hPath.getName + "__dv_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)

@@ -180,11 +180,10 @@ object Merge {
     // exactly-once file set everything below reads (torn-swap debris
     // on disk is invisible to it)
     // ONE manifest snapshot serves live set, DV guard, mappings and
-    // checks — the per-family accessors re-listed the log dir each
-    // (CommitLog.ensureSnapshotAt, guide §6)
+    // checks (CommitLog.ensureSnapshotAt, guide §6)
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
-    CommitLog.requireNoDvsIn(m.dvs, hPath, "mergeParquet")
+    CommitLog.requireNoDvs(m.dvs, hPath, "mergeParquet")
     val cms = m.colmaps
     val cts = m.coltypes
     val scan = liveScan(spark, hPath, live, cms, cts)
@@ -203,7 +202,7 @@ object Merge {
           s"match sink schema ${sinkSchema.fieldNames.sorted.mkString(",")}")
     val keyed = updates.select(updates.columns.toIndexedSeq.map(col): _*)
     // CHECK constraints gate the batch before anything stages
-    CommitLog.requireChecksIn(m.checks, keyed, "mergeParquet")
+    CommitLog.requireChecks(m.checks, keyed, "mergeParquet")
 
     // small frame, three consumers (touched files, matched rewrite,
     // insert anti-join) — cache, released in the finally (a crash —
@@ -344,7 +343,7 @@ object Merge {
     // one snapshot per call, as in mergeParquet
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
-    CommitLog.requireNoDvsIn(m.dvs, hPath, "eraseParquet")
+    CommitLog.requireNoDvs(m.dvs, hPath, "eraseParquet")
     val cms = m.colmaps
     val cts = m.coltypes
     // mergeSchema (inside liveScan): a sink widened by
@@ -422,7 +421,7 @@ object Merge {
     // one snapshot per call, as in mergeParquet
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
-    CommitLog.requireNoDvsIn(m.dvs, hPath, "applyCdcParquet")
+    CommitLog.requireNoDvs(m.dvs, hPath, "applyCdcParquet")
     val cms = m.colmaps
     val cts = m.coltypes
     // mergeSchema (inside liveScan) for the same reason as
@@ -474,7 +473,7 @@ object Merge {
     val upserts = batch.filter(col(opCol) === "U").drop(opCol)
     // CHECK constraints gate the rows that will LAND (U payloads; a
     // delete op's payload columns are ignored by contract)
-    CommitLog.requireChecksIn(m.checks, upserts, "applyCdcParquet")
+    CommitLog.requireChecks(m.checks, upserts, "applyCdcParquet")
     val delKeys = batch.filter(col(opCol) === "D")
       .select(keyCols.map(col): _*)
 

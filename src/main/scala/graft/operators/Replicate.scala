@@ -82,7 +82,8 @@ object Replicate {
     val hUp = new Path(up); val hDown = new Path(down)
     val fsUp = fsOf(spark, hUp)
     val fsDown = fsOf(spark, hDown)
-    val from = CommitLog.txnVersion(fsDown, hDown, appId).getOrElse(
+    val from = CommitLog.latestSnapshot(fsDown, hDown)
+      .flatMap(_._2.txns.get(appId)).getOrElse(
       throw new IllegalStateException(
         s"replica $down carries no ledger for '$appId' — run " +
           "Replicate.init first"))

@@ -93,12 +93,10 @@ object SchemaEvolve {
   def logicalColumns(spark: SparkSession, path: String): Seq[String] = {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (_, live) = CommitLog.ensureLoggedAt(fs, hPath)
-    if (live.isEmpty) return Nil
-    CommitLog.mappedScan(spark, hPath, live,
-      CommitLog.colmapRecords(fs, hPath),
-      coltypes = CommitLog.coltypeRecords(fs, hPath))
-      .columns.toIndexedSeq
+    val (_, m) = CommitLog.ensureSnapshotAt(fs, hPath)
+    if (m.files.isEmpty) return Nil
+    CommitLog.mappedScan(spark, hPath, m.files, m.colmaps,
+      coltypes = m.coltypes).columns.toIndexedSeq
   }
 
   /** Widening promotions allowed per target catalog DDL type —
@@ -153,10 +151,11 @@ object SchemaEvolve {
     val target = toDdl.trim.toLowerCase
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (gen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = m.files
     require(live.nonEmpty, s"widen on an empty sink $path")
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
+    val cms = m.colmaps
+    val cts = m.coltypes
     val schema = CommitLog.mappedScan(spark, hPath, live, cms,
       coltypes = cts).schema
     require(schema.fieldNames.contains(name),
@@ -178,11 +177,10 @@ object SchemaEvolve {
       if (!widenInvalidatesStats(target))
         Map.empty[String, Map[String, CommitLog.ColStats]]
       else {
-        val stats = CommitLog.statsRecords(fs, hPath)
         val liveSet = live.toSet
-        stats.collect {
-          case (f, m) if liveSet(f) && m.contains(name) =>
-            f -> (m - name)
+        m.stats.collect {
+          case (f, cs) if liveSet(f) && cs.contains(name) =>
+            f -> (cs - name)
         }
       }
     CommitLog.commitNext(fs, hPath, gen, live, coltypes = newTypes,
@@ -249,21 +247,22 @@ object SchemaEvolve {
     require(changes.nonEmpty, "applyChanges: no changes given")
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (gen, m0) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = m0.files
     require(live.nonEmpty, s"applyChanges on an empty sink $path")
     val resolver = spark.sessionState.conf.resolver
-    val cms0 = CommitLog.colmapRecords(fs, hPath)
-    val cts0 = CommitLog.coltypeRecords(fs, hPath)
+    val cms0 = m0.colmaps
+    val cts0 = m0.coltypes
     // working state, folded change by change: per-file mappings and
     // casts (materialized for every live file so the final commit is
     // a full per-file replace), the full stats map, the check overlay
     // accumulated so far, and the evolving logical schema
     var cms = live.map(f => f -> cms0.getOrElse(f, Map.empty)).toMap
     var cts = live.map(f => f -> cts0.getOrElse(f, Map.empty)).toMap
-    var stats = CommitLog.statsRecords(fs, hPath)
-    val baseChecks = CommitLog.checkRecords(fs, hPath)
+    var stats = m0.stats
+    val baseChecks = m0.checks
     var checkOverlay = Map.empty[String, String]
-    val meta0 = CommitLog.metaRecords(fs, hPath)
+    val meta0 = m0.meta
     // declaration order of metadata-added columns — ADD appends,
     // RENAME follows the name, DROP retires it; committed alongside
     // so readers surface added columns in ADD order (positional
@@ -393,11 +392,12 @@ object SchemaEvolve {
     require(oldName != newName, s"rename to itself: $oldName")
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (gen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
     require(live.nonEmpty, s"rename on an empty sink $path")
-    val cms = CommitLog.colmapRecords(fs, hPath)
+    val cms = snap.colmaps
     val logical = CommitLog.mappedScan(spark, hPath, live, cms,
-      coltypes = CommitLog.coltypeRecords(fs, hPath)).columns.toSeq
+      coltypes = snap.coltypes).columns.toSeq
     require(logical.contains(oldName),
       s"rename: no logical column '$oldName' (have ${
         logical.mkString(",")})")
@@ -411,15 +411,13 @@ object SchemaEvolve {
         else m + (phys -> newName)
       f -> m2
     }.toMap
-    val newChecks = rewriteChecks(spark,
-      CommitLog.checkRecords(fs, hPath), oldName, newName)
-    val stats = CommitLog.statsRecords(fs, hPath)
-    val rekeyed = stats.collect {
+    val newChecks = rewriteChecks(spark, snap.checks, oldName, newName)
+    val rekeyed = snap.stats.collect {
       case (f, m) if m.contains(oldName) =>
         f -> (m - oldName + (newName -> m(oldName)))
     }
     // the add-order record follows a renamed added column
-    val order = CommitLog.metaRecords(fs, hPath).get("schema.addorder")
+    val order = snap.meta.get("schema.addorder")
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     val orderMeta =
       if (!order.contains(oldName)) Map.empty[String, String]
@@ -447,18 +445,19 @@ object SchemaEvolve {
                  name: String): Long = {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (gen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
     require(live.nonEmpty, s"drop on an empty sink $path")
     val resolver = spark.sessionState.conf.resolver
-    val refChecks = CommitLog.checkRecords(fs, hPath).filter {
+    val refChecks = snap.checks.filter {
       case (_, e) => checkRefs(spark, e).exists(resolver(_, name))
     }
     require(refChecks.isEmpty,
       s"drop: CHECK constraint(s) ${refChecks.keys.toSeq.sorted
         .mkString(", ")} reference column '$name' — dropCheck first")
-    val cms = CommitLog.colmapRecords(fs, hPath)
+    val cms = snap.colmaps
     val logical = CommitLog.mappedScan(spark, hPath, live, cms,
-      coltypes = CommitLog.coltypeRecords(fs, hPath)).columns.toSeq
+      coltypes = snap.coltypes).columns.toSeq
     require(logical.contains(name),
       s"drop: no logical column '$name' (have ${logical.mkString(",")})")
     require(logical.size > 1, s"drop: cannot drop the only column")
@@ -466,12 +465,11 @@ object SchemaEvolve {
       val m = cms.getOrElse(f, Map.empty)
       f -> (m + (physOf(m, name) -> ""))
     }.toMap
-    val stats = CommitLog.statsRecords(fs, hPath)
-    val dekeyed = stats.collect {
+    val dekeyed = snap.stats.collect {
       case (f, m) if m.contains(name) => f -> (m - name)
     }
     // a dropped added column leaves the add-order record too
-    val order = CommitLog.metaRecords(fs, hPath).get("schema.addorder")
+    val order = snap.meta.get("schema.addorder")
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     val orderMeta =
       if (!order.contains(name)) Map.empty[String, String]
@@ -496,15 +494,15 @@ object SchemaEvolve {
                 failpoint: String => Unit = _ => ()): (Long, Long) = {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
-    val (baseGen, live) = CommitLog.ensureLoggedAt(fs, hPath)
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
+    val (baseGen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
+    val cms = snap.colmaps
+    val cts = snap.coltypes
     val targets = live.filter(f =>
       cms.contains(f) || cts.contains(f)).sorted
     if (targets.isEmpty) return (0L, live.length.toLong)
     val tSet = targets.toSet
-    val dvs = CommitLog.dvRecords(fs, hPath)
-      .filter { case (f, _) => tSet(f) }
+    val dvs = snap.dvs.filter { case (f, _) => tSet(f) }
     val mapped = CommitLog.mappedScan(spark, hPath, targets, cms, dvs,
       coltypes = cts)
     // logical partition columns: the physical k=v levels of the rel
@@ -582,14 +580,14 @@ object SchemaEvolve {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
     require(fs.exists(hPath), s"normalizeCompact target $path missing")
-    val (baseGen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (baseGen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
     val assigned = live.filter(plan.contains)
     require(assigned.nonEmpty, "plan assigns no live file of this sink")
     val aSet = assigned.toSet
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
-    val dvs = CommitLog.dvRecords(fs, hPath)
-      .filter { case (f, _) => aSet(f) }
+    val cms = snap.colmaps
+    val cts = snap.coltypes
+    val dvs = snap.dvs.filter { case (f, _) => aSet(f) }
     // logical view WITH per-row file identity: the bin lookup needs
     // the owning file, and metadata pseudo-columns don't survive the
     // epoch union — mappedScan materializes them per branch

@@ -225,14 +225,14 @@ object TableStats {
     require(cols.nonEmpty, "analyze needs at least one column")
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
+    val (gen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
+    val cms = snap.colmaps
+    val cts = snap.coltypes
     val mapped = cms.keySet ++ cts.keySet
-    val existing = CommitLog.statsRecords(fs, hPath)
     val targets = live.filter { f =>
       !onlyMissing ||
-        !cols.forall(existing.getOrElse(f, Map.empty).contains)
+        !cols.forall(snap.stats.getOrElse(f, Map.empty).contains)
     }
     if (targets.isEmpty) return 0L
     val prefix = fs.makeQualified(hPath).toUri.getPath + "/"
@@ -506,16 +506,22 @@ object TableStats {
     * needs no per-file mapping resolution. */
   def pruneFiles(fs: org.apache.hadoop.fs.FileSystem, sink: Path,
                  filters: Seq[sources.Filter])
+  : (Seq[String], Seq[String]) =
+    pruneSnapshot(fs, sink, CommitLog.ensureSnapshotAt(fs, sink)._2,
+      filters)
+
+  /** [[pruneFiles]] over one snapshot's manifest: the free
+    * (manifest-only) prunes, then the Bloom tier. */
+  private def pruneSnapshot(fs: org.apache.hadoop.fs.FileSystem,
+                            sink: Path, m: CommitLog.Manifest,
+                            filters: Seq[sources.Filter])
   : (Seq[String], Seq[String]) = {
-    val (_, live) = CommitLog.ensureLoggedAt(fs, sink)
-    val (kept, skipped) = pruneIn(live, CommitLog.statsRecords(fs, sink),
-      CommitLog.dvMarkCounts(fs, sink), filters)
+    val (kept, skipped) = pruneIn(m.files, m.stats, m.dvMarks, filters)
     // second tier: Bloom point-lookup evidence on whatever survived
     // the free (manifest-only) prunes — costs one small sidecar read
     // per surviving indexed file, only for =/IN conjuncts
-    val (kept2, bloomSkipped) = bloomPruneIn(fs, sink, kept,
-      CommitLog.bloomRecords(fs, sink),
-      CommitLog.colmapRecords(fs, sink), filters)
+    val (kept2, bloomSkipped) = bloomPruneIn(fs, sink, kept, m.blooms,
+      m.colmaps, filters)
     (kept2, skipped ++ bloomSkipped)
   }
 
@@ -567,11 +573,12 @@ object TableStats {
     require(cols.nonEmpty, "buildBloom needs at least one column")
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
+    val (gen, snap) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val live = snap.files
     if (live.isEmpty) return 0L
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
-    val existing = CommitLog.bloomRecords(fs, hPath)
+    val cms = snap.colmaps
+    val cts = snap.coltypes
+    val existing = snap.blooms
     def physOf(f: String, logical: String): String =
       cms.getOrElse(f, Map.empty)
         .collectFirst { case (p, l) if l == logical => p }
@@ -689,53 +696,40 @@ object TableStats {
   def pruneBand(fs: org.apache.hadoop.fs.FileSystem, sink: Path,
                 column: String, lo: Any, hi: Any)
   : (Seq[String], Seq[String]) =
-    pruneFiles(fs, sink, Seq(
-      sources.GreaterThanOrEqual(column, lo),
-      sources.LessThanOrEqual(column, hi)))
+    pruneFiles(fs, sink, bandFilters(column, lo, hi))
 
-  /** Scan exactly `keep` (sink-relative live files) under the sink's
-    * current mapping/DV/coltype records — the post-pruning read both
-    * [[readBand]] and the `graft` DataSource V2 relation plan. Does
-    * NOT re-apply any predicate; callers own exactness. */
-  private[graft] def prunedScan(spark: SparkSession, hPath: Path,
-                                keep: Seq[String]): DataFrame = {
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cms = CommitLog.colmapRecords(fs, hPath)
-    val cts = CommitLog.coltypeRecords(fs, hPath)
-    val keepSet = keep.toSet
-    val dvs = CommitLog.dvRecords(fs, hPath)
-      .filter { case (f, _) => keepSet(f) }
-    CommitLog.mappedScan(spark, hPath, keep, cms, dvs, coltypes = cts)
-  }
+  private def bandFilters(column: String, lo: Any, hi: Any)
+  : Seq[sources.Filter] =
+    Seq(sources.GreaterThanOrEqual(column, lo),
+      sources.LessThanOrEqual(column, hi))
 
   /** Manifest-pruned band read: plan the scan over ONLY the files
     * whose bounds can hold `column ∈ [lo, hi]`, apply deletion
     * vectors, then re-apply the exact predicate — identical rows to
-    * the unpruned filter, minus the skipped files' I/O. Falls back to
-    * the plain (still exact) filtered read when nothing can be
-    * skipped. */
+    * the unpruned filter, minus the skipped files' I/O. */
   def readBand(spark: SparkSession, path: String, column: String,
-               lo: Any, hi: Any): DataFrame = {
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (keep, _) = pruneBand(fs, hPath, column, lo, hi)
-    val band = col(column) >= lit(lo) && col(column) <= lit(hi)
-    if (keep.isEmpty)
-      return CommitLog.read(spark, path).filter(band).limit(0)
-    prunedScan(spark, hPath, keep).filter(band)
-  }
+               lo: Any, hi: Any): DataFrame =
+    readWhere(spark, path, bandFilters(column, lo, hi),
+      col(column) >= lit(lo) && col(column) <= lit(hi))
 
-  /** Manifest-pruned CONJUNCTIVE read: prune the file list with
-    * [[pruneFiles]], then re-apply the exact predicate column —
-    * the multi-column generalization of [[readBand]]. */
+  /** Manifest-pruned CONJUNCTIVE read: prune one snapshot's file list
+    * as [[pruneFiles]] does, scan exactly the kept files under that
+    * snapshot's mapping/DV/coltype records, then re-apply the exact
+    * predicate column — the multi-column generalization of
+    * [[readBand]]. */
   def readWhere(spark: SparkSession, path: String,
                 filters: Seq[sources.Filter],
                 predicate: Column): DataFrame = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (keep, _) = pruneFiles(fs, hPath, filters)
+    val (_, m) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val (keep, _) = pruneSnapshot(fs, hPath, m, filters)
     if (keep.isEmpty)
-      return CommitLog.read(spark, path).filter(predicate).limit(0)
-    prunedScan(spark, hPath, keep).filter(predicate)
+      return CommitLog.readSnapshot(spark, path, fs, m).filter(predicate)
+        .limit(0)
+    val keepSet = keep.toSet
+    CommitLog.mappedScan(spark, hPath, keep, m.colmaps,
+      m.dvs.filter { case (f, _) => keepSet(f) }, coltypes = m.coltypes)
+      .filter(predicate)
   }
 }

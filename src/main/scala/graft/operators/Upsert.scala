@@ -476,20 +476,16 @@ object Upsert {
     // cost). NOTHING is deleted on this path — debris reclaim is
     // explicit vacuum maintenance, never a writer's side effect.
     // one manifest snapshot serves the live set, the DV guard, the
-    // mappings and the checks below (CommitLog.ensureSnapshotAt,
-    // guide §6 — the accessor-per-family shape re-listed the log dir
-    // five times per logged publish)
+    // mappings and the checks below (CommitLog.latestSnapshot — a
+    // never-logged sink stays unlogged, guide §6)
     val snapBefore: Option[(Long, CommitLog.Manifest)] =
-      if (existed && CommitLog.generations(fs, hPath).nonEmpty) {
-        val snap = CommitLog.ensureSnapshotAt(fs, hPath)
-        // the existing-keys anti-join below reads live files RAW: a
-        // deletion vector's rows would count as present and wrongly
-        // suppress re-inserting a deleted key
-        CommitLog.requireNoDvsIn(snap._2.dvs, hPath, "upsertParquet")
-        Some(snap)
-      } else None
-    val liveBefore: Option[(Long, Seq[String])] =
-      snapBefore.map { case (g, m) => (g, m.files) }
+      if (existed) CommitLog.latestSnapshot(fs, hPath) else None
+    // the existing-keys anti-join below reads live files RAW: a
+    // deletion vector's rows would count as present and wrongly
+    // suppress re-inserting a deleted key
+    snapBefore.foreach { case (_, m) =>
+      CommitLog.requireNoDvs(m.dvs, hPath, "upsertParquet")
+    }
     // batch partition values, collected ONCE and shared by the pruned
     // anti-join scan and the pruned before/after counts
     val pvals = partitionCol match {
@@ -506,21 +502,19 @@ object Upsert {
     // partitioned sink each listing is its own driver latency.
     val existedSink: Option[DataFrame] =
       (if (!existed) None
-       else liveBefore match {
+       else snapBefore match {
          // logged sink: resolve through the manifest so uncommitted
          // torn-swap debris can never suppress (or double-count) rows;
          // a SchemaEvolve-mapped sink reads its LOGICAL view so the
          // keys anti-join matches renamed columns
-         case Some((_, lv)) if lv.isEmpty => None
-         case Some((_, lv)) =>
-           val cms = snapBefore.map(_._2.colmaps).getOrElse(Map.empty)
-           val cts = snapBefore.map(_._2.coltypes).getOrElse(Map.empty)
-           if (cms.isEmpty && cts.isEmpty)
+         case Some((_, m)) if m.files.isEmpty => None
+         case Some((_, m)) =>
+           if (m.colmaps.isEmpty && m.coltypes.isEmpty)
              Some(spark.read.option("basePath", path).parquet(
-               lv.map(r =>
+               m.files.map(r =>
                  new org.apache.hadoop.fs.Path(hPath, r).toString): _*))
-           else Some(CommitLog.mappedScan(spark, hPath, lv, cms,
-             coltypes = cts))
+           else Some(CommitLog.mappedScan(spark, hPath, m.files,
+             m.colmaps, coltypes = m.coltypes))
          case None => Some(spark.read.parquet(path))
        }).map { s =>
         pvals match {
@@ -535,7 +529,7 @@ object Upsert {
     // CHECK constraints gate the rows actually being appended, BEFORE
     // anything stages — a violating batch never moves a byte
     snapBefore.foreach { case (_, m) =>
-      CommitLog.requireChecksIn(m.checks, delta, "upsertParquet")
+      CommitLog.requireChecks(m.checks, delta, "upsertParquet")
     }
     // appended-row count from the write command's own committed-task
     // metrics — zero extra jobs; a footer count over exactly the new
@@ -543,7 +537,7 @@ object Upsert {
     // Logged sinks write to a scratch dir (unique per attempt —
     // concurrent upserts must not collide in staging) and move the
     // EXACT staged names in; unlogged sinks append directly.
-    val scratch = liveBefore.map { _ =>
+    val scratch = snapBefore.map { _ =>
       new org.apache.hadoop.fs.Path(hPath.getParent,
         hPath.getName + "__append_tmp-" +
           java.util.UUID.randomUUID().toString)
@@ -561,7 +555,7 @@ object Upsert {
         .mode("append").parquet(writeTarget)
     }
     var n = watch.rows()
-    liveBefore.foreach { case (baseGen, lv) =>
+    snapBefore.foreach { case (baseGen, mBase) =>
       val tmp = scratch.get
       // move the staged files in under their exact (globally-unique
       // part-<uuid>) names, commit exactly that list — no listing
@@ -608,14 +602,11 @@ object Upsert {
         def absOf(rels: Seq[String]) = rels.map(r =>
           new org.apache.hadoop.fs.Path(hPath, r).toString)
         var base = baseGen
-        var live = lv
-        var seen = lv.toSet ++ newFiles
+        var live = mBase.files
+        var seen = live.toSet ++ newFiles
         var attempt = 0
         var stagedKeys: DataFrame = null
         var committed = false
-        val cmsAtBase =
-          (CommitLog.colmapRecordsAt(fs, hPath, baseGen),
-            CommitLog.coltypeRecordsAt(fs, hPath, baseGen))
         while (!committed) {
           try {
             CommitLog.commitNext(fs, hPath, base, live ++ newFiles)
@@ -627,15 +618,16 @@ object Upsert {
                 throw new CommitConflictException(
                   s"upsertParquet: gave up after $attempt rebase " +
                     s"attempts at $path — ${e.getMessage}")
-              val (g2, l2) = CommitLog.ensureLoggedAt(fs, hPath)
+              val (g2, m2) = CommitLog.ensureSnapshotAt(fs, hPath)
+              val l2 = m2.files
               // a winner that evolved the schema (SchemaEvolve
               // rename/drop) invalidates our staged files' PHYSICAL
               // column names — rebasing would land unmapped files
               // under stale names that the logical reader then unions
               // as a phantom extra column. Terminal; the re-run
               // writes the new logical schema.
-              if ((CommitLog.colmapRecords(fs, hPath),
-                  CommitLog.coltypeRecords(fs, hPath)) != cmsAtBase)
+              if ((m2.colmaps, m2.coltypes) !=
+                  (mBase.colmaps, mBase.coltypes))
                 throw new CommitConflictException(
                   s"upsertParquet: a concurrent writer evolved the " +
                     s"schema at $path — re-run the upsert against " +
@@ -667,7 +659,7 @@ object Upsert {
       }
       fs.delete(tmp, true)
     }
-    if (n < 0 && liveBefore.isEmpty) {
+    if (n < 0 && snapBefore.isEmpty) {
       System.err.println(s"[upsert] write metrics for $path did not " +
         "arrive — falling back to parquet footer counts")
       val before = existedSink.map(_.count()).getOrElse(0L) // frozen

@@ -202,7 +202,7 @@ object AnalyticsQueries {
     graft.io.Sources.withStreamPartitionsFor(s, s"$dir/events.parquet") {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     s.table(name).orderBy("carrier")
   }

@@ -866,8 +866,9 @@ object MaintenanceQueries {
       val liveBefore = CommitLog.ensureLogged(fs, hPath)
       DeleteVectors.deleteWhere(s, sink, col("doc_id") % 5 === 3)
       DeleteVectors.deleteWhere(s, sink, col("doc_id") % 7 === 2)
-      val liveAfter = CommitLog.committed(fs, hPath).get._2
-      val dvRecs = CommitLog.dvRecords(fs, hPath)
+      val (_, snapAfter) = CommitLog.latestSnapshot(fs, hPath).get
+      val liveAfter = snapAfter.files
+      val dvRecs = snapAfter.dvs
       def langOf(rel: String): String =
         rel.split('/')(0).stripPrefix("lang=")
       val fb = liveBefore.groupBy(langOf).view.mapValues(_.size).toMap
@@ -936,8 +937,9 @@ object MaintenanceQueries {
       DeleteVectors.applyDeletes(s, sink)
       val hPath = new org.apache.hadoop.fs.Path(sink)
       val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val liveAfter = CommitLog.committed(fs, hPath).get._2
-      val dvAfter = CommitLog.dvRecords(fs, hPath)
+      val (_, snapAfter) = CommitLog.latestSnapshot(fs, hPath).get
+      val liveAfter = snapAfter.files
+      val dvAfter = snapAfter.dvs
       def langOf(rel: String): String =
         rel.split('/')(0).stripPrefix("lang=")
       val fa = liveAfter.groupBy(langOf).view.mapValues(_.size).toMap
@@ -1074,8 +1076,9 @@ object MaintenanceQueries {
             lit(77L).as("n_chars")))
       DeleteVectors.mergeOnRead(s, sink, updates, Seq("doc_id"),
         partitionCol = Some("lang"))
-      val liveAfter = CommitLog.committed(fs, hPath).get._2
-      val dvRecs = CommitLog.dvRecords(fs, hPath)
+      val (_, snapAfter) = CommitLog.latestSnapshot(fs, hPath).get
+      val liveAfter = snapAfter.files
+      val dvRecs = snapAfter.dvs
       def langOf(rel: String): String =
         rel.split('/')(0).stripPrefix("lang=")
       val dvf = dvRecs.keys.toSeq.groupBy(langOf).view
@@ -1363,8 +1366,9 @@ object MaintenanceQueries {
       DeleteVectors.deleteWhere(s, up, col("doc_id") % 7 === 1)
       val s2 = Replicate.syncOnce(s, up, down, Seq("doc_id"), "q325")
       val windows = Seq(s1, s2).count(st => st.toGen > st.fromGen)
-      val caughtUp = CommitLog.txnVersion(fs,
-          new org.apache.hadoop.fs.Path(down), "q325")
+      val caughtUp = CommitLog.latestSnapshot(fs,
+          new org.apache.hadoop.fs.Path(down))
+        .flatMap(_._2.txns.get("q325"))
         .contains(CommitLog.committed(fs, hUp).get._1)
       val stats = CommitLog.read(s, down)
         .groupBy("lang").agg(count(lit(1)).as("rows_after"),
@@ -1554,7 +1558,7 @@ object MaintenanceQueries {
             (col("n_chars") + 1000L).as("n_chars")),
         Seq("doc_id"))
       DeleteVectors.applyDeletes(s, sink)
-      val carried = CommitLog.checkRecords(fs, hPath)
+      val carried = CommitLog.latestSnapshot(fs, hPath).get._2.checks
         .contains("valid_doc")
       val stats = CommitLog.read(s, sink)
         .groupBy("lang").agg(count(lit(1)).as("rows_after"),
@@ -1827,9 +1831,10 @@ object MaintenanceQueries {
       }.toMap
       val (rewritten, after) = SchemaEvolve.normalizeCompact(
         s, sink, plan, partitionCol = Some("yr"))
-      val mappedAfter = (CommitLog.colmapRecords(fs, hPath).keySet ++
-        CommitLog.coltypeRecords(fs, hPath).keySet).size
-      val dvAfter = CommitLog.dvRecords(fs, hPath).size
+      val (_, snapAfter) = CommitLog.latestSnapshot(fs, hPath).get
+      val mappedAfter =
+        (snapAfter.colmaps.keySet ++ snapAfter.coltypes.keySet).size
+      val dvAfter = snapAfter.dvs.size
       val rows = CommitLog.read(s, sink)
         .groupBy(col("yr").cast("long").as("yr"))
         .agg(count(lit(1)).as("rows_after"), sum("okey").as("sum_okey"))
@@ -2080,7 +2085,7 @@ object MaintenanceQueries {
       val hDown = new org.apache.hadoop.fs.Path(down)
       val fs = hDown.getFileSystem(s.sparkContext.hadoopConfiguration)
       val before = CommitLog.read(s, down).count()
-      val lastV = CommitLog.txnVersion(fs, hDown, "q336").get
+      val lastV = CommitLog.latestSnapshot(fs, hDown).get._2.txns("q336")
       graft.sources.GraftWriter.write(part(9), down,
         overwrite = false, txn = Some(("q336", lastV)))
       val txnOnce = CommitLog.read(s, down).count() == before
@@ -2540,9 +2545,9 @@ object MaintenanceQueries {
         val cut = s.table(s"$cat.db.d").agg(max("okey"))
           .head.getLong(0) / 2
         s.sql(s"DELETE FROM $cat.db.d WHERE okey > $cut")
+        val (_, snapAfter) = CommitLog.ensureSnapshotAt(fs, hp)
         val morNoRewrite =
-          CommitLog.ensureLoggedAt(fs, hp)._2.toSet == filesBefore &&
-            CommitLog.dvRecords(fs, hp).nonEmpty
+          snapAfter.files.toSet == filesBefore && snapAfter.dvs.nonEmpty
         val r = s.sql(
           s"""SELECT CAST(count(*) AS BIGINT),
                      CAST(sum(okey) AS BIGINT)
@@ -2804,7 +2809,7 @@ object MaintenanceQueries {
               new org.apache.hadoop.fs.Path(hp, r))
             (st.getLen, st.getModificationTime) == stamp
           }
-        } && CommitLog.dvRecords(fs, hp).nonEmpty &&
+        } && CommitLog.latestSnapshot(fs, hp).get._2.dvs.nonEmpty &&
           liveAfter.exists(f => !before.contains(f))
         val oneCommit =
           CommitLog.committed(fs, hp).get._1 == genBefore + 1
@@ -2884,7 +2889,7 @@ object MaintenanceQueries {
               new org.apache.hadoop.fs.Path(hp, r))
             (st.getLen, st.getModificationTime) == stamp
           }
-        } && CommitLog.dvRecords(fs, hp).nonEmpty
+        } && CommitLog.latestSnapshot(fs, hp).get._2.dvs.nonEmpty
         val oneCommit =
           CommitLog.committed(fs, hp).get._1 == genBefore + 1
         val r = s.sql(
@@ -2964,9 +2969,10 @@ object MaintenanceQueries {
         s.sql(s"DELETE FROM $cat.db.d WHERE okey > $cut")
         val hp = new org.apache.hadoop.fs.Path(s"$root/db/d")
         val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val hadDvs = CommitLog.dvRecords(fs, hp).nonEmpty
+        def dvs() = CommitLog.latestSnapshot(fs, hp).get._2.dvs
+        val hadDvs = dvs().nonEmpty
         s.sql(s"CALL $cat.system.apply_deletes('db.d')")
-        val dvsGone = CommitLog.dvRecords(fs, hp).isEmpty
+        val dvsGone = dvs().isEmpty
         // explicit 1 GiB target so the one-file pin holds at ANY
         // driver SF (the 128 MB default would legitimately bin-pack
         // a big enough table into several files)
@@ -3114,7 +3120,8 @@ object MaintenanceQueries {
         val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
         // stats coverage declared BEFORE the ADD — must survive it
         s.sql(s"CALL $cat.system.analyze('db.d', 'okey')")
-        val statsBefore = CommitLog.statsRecords(fs, hp)
+        def stats() = CommitLog.latestSnapshot(fs, hp).get._2.stats
+        val statsBefore = stats()
         def footprint() = CommitLog.ensureLoggedAt(fs, hp)._2.sorted
           .map { r =>
             val st = fs.getFileStatus(
@@ -3129,8 +3136,7 @@ object MaintenanceQueries {
         val byteIdentical = footprint() == before
         val oneCommit =
           CommitLog.committed(fs, hp).get._1 == genBefore + 1
-        val statsIntact =
-          CommitLog.statsRecords(fs, hp) == statsBefore
+        val statsIntact = stats() == statsBefore
         val oldRowsNull = s.table(s"$cat.db.d")
           .filter(col("flag").isNull && col("bonus").isNull)
           .count() == oldRows
@@ -3505,8 +3511,9 @@ object MaintenanceQueries {
       CommitLog.ensureLoggedAt(fs, hp)
       val filesBefore = CommitLog.ensureLoggedAt(fs, hp)._2.size
       AnnIndex.build(s, sink, numCentroids = 8, iters = 2)
-      val centRel = CommitLog.metaRecords(fs, hp)(
-        "ann.embedding.centroids")
+      def centroids() = CommitLog.latestSnapshot(fs, hp).get._2
+        .meta("ann.embedding.centroids")
+      val centRel = centroids()
       // append + catch-up: only the new files index, centroids reused
       emb.filter(col("vec_id") % 3 === 2).repartition(2)
         .write.format("graft").mode("append")
@@ -3514,8 +3521,7 @@ object MaintenanceQueries {
       val newFiles =
         CommitLog.ensureLoggedAt(fs, hp)._2.size - filesBefore
       val n2 = AnnIndex.build(s, sink, numCentroids = 8, iters = 2)
-      val trainedOnce = CommitLog.metaRecords(fs, hp)(
-        "ann.embedding.centroids") == centRel
+      val trainedOnce = centroids() == centRel
       val catchupIncremental = n2 == newFiles.toLong
       DeleteVectors.deleteWhere(s, sink, col("vec_id") % 7 === 0)
       val queries = emb.filter(col("vec_id") < 10)
@@ -3766,7 +3772,7 @@ object MaintenanceQueries {
       DeleteVectors.deleteWhere(s, sink,
         col("o_orderpriority") === "1-URGENT" &&
           col("o_orderkey") % 10 === 0)
-      val dirtyCount = CommitLog.dvRecords(fs, hp).size
+      val dirtyCount = CommitLog.latestSnapshot(fs, hp).get._2.dvs.size
       def read = s.read.format("graft").load(sink)
       def nodes(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] =

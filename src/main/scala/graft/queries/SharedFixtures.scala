@@ -18,22 +18,32 @@ import org.apache.spark.sql.SparkSession
   * each query built privately before. */
 object SharedFixtures {
 
+  /** One fixture's root, built on first `root` access. The map only
+    * stores the cell; the build runs outside the map's bin lock, so a
+    * build may itself seed another fixture (the evolved orders
+    * fixture seeds the plain one), and concurrent callers of the same
+    * key wait on the cell's lazy initializer. */
+  private final class Cell(mk: () => String) {
+    lazy val root: String = mk()
+  }
+
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Cell]
 
   /** The shared root for `name` over `dir`'s tables, built by `build`
     * exactly once per JVM. `build` receives the (created) root and
-    * must treat it as write-once. */
+    * must treat it as write-once; it may call [[seeded]] for other
+    * fixtures. */
   def seeded(s: SparkSession, dir: String, name: String)
             (build: String => Unit): String =
-    cache.computeIfAbsent((dir, name), _ => {
+    cache.computeIfAbsent((dir, name), _ => new Cell(() => {
       val root = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get(
           sys.props.getOrElse("java.io.tmpdir", "/tmp")),
         s"graft_shared_${name}_").toString
       build(root)
       root
-    })
+    })).root
 
   /** Copy a seeded directory tree into a query-private destination
     * (parents created; commit log included verbatim). */

@@ -421,7 +421,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val p = tablePath(ident)
     if (!isTable(p)) throw new NoSuchTableException(ident)
     val spark = SparkSession.active
-    val (gen, live) = CommitLog.ensureLoggedAt(fs, p)
+    val (gen, snap) = CommitLog.ensureSnapshotAt(fs, p)
     def single(c: TableChange.ColumnChange): String = {
       require(c.fieldNames.length == 1,
         "graft catalog: nested columns are not supported")
@@ -457,8 +457,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val colChanges = changes.filterNot(c =>
       c.isInstanceOf[TableChange.SetProperty] ||
         c.isInstanceOf[TableChange.RemoveProperty])
-    if (live.isEmpty) {
-      val meta = CommitLog.metaRecords(fs, p)
+    if (snap.files.isEmpty) {
+      val meta = snap.meta
       val ddl = meta.getOrElse("schema.ddl",
         throw new UnsupportedOperationException(
           s"graft catalog: $ident is empty and has no declared " +
@@ -544,7 +544,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       SchemaEvolve.applyChanges(spark, p.toString, evolveChanges,
         meta = propMeta)
     else if (propMeta.nonEmpty)
-      CommitLog.commitNext(fs, p, gen, live, meta = propMeta)
+      CommitLog.commitNext(fs, p, gen, snap.files, meta = propMeta)
     loadTable(ident)
   }
 
@@ -697,10 +697,9 @@ private[sources] final class GraftStagedTable(
     // the existing log — prior generations stay readable via time
     // travel; a CAS loss is terminal (a REPLACE that raced another
     // writer must be re-decided), exactly the truncate contract
-    val (gen, _) = CommitLog.ensureLoggedAt(fs, real)
-    val (sGen, sLive) = CommitLog.ensureLoggedAt(fs, staged)
-    val sm = CommitLog.manifestAt(fs, staged, sGen)
-    val moved = sLive.map { r =>
+    val (gen, rm) = CommitLog.ensureSnapshotAt(fs, real)
+    val (_, sm) = CommitLog.ensureSnapshotAt(fs, staged)
+    val moved = sm.files.map { r =>
       val dest = new Path(real, r)
       if (fs.exists(dest))
         throw new java.io.IOException(
@@ -714,10 +713,8 @@ private[sources] final class GraftStagedTable(
     }
     // the replaced table's properties and CHECK constraints are
     // tombstoned — REPLACE re-declares the table from scratch
-    val metaTomb = CommitLog.metaRecords(fs, real).keys
-      .map(_ -> "").toMap
-    val checkTomb = CommitLog.checkRecords(fs, real).keys
-      .map(_ -> "").toMap
+    val metaTomb = rm.meta.keys.map(_ -> "").toMap
+    val checkTomb = rm.checks.keys.map(_ -> "").toMap
     CommitLog.commitNext(fs, real, gen, moved,
       checks = checkTomb, meta = metaTomb ++ sm.meta,
       stats = sm.stats, statsReplace = true)

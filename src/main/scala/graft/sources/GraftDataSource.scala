@@ -1244,9 +1244,8 @@ private[graft] object GraftWriter {
     // bring the sink under log control (bootstraps generation 0 for a
     // fresh/unlogged path — the CREATE case). ONE manifest snapshot
     // serves every record family this write consults (meta, colmaps,
-    // coltypes, checks, txns, stats) — the per-family accessors each
-    // re-listed the log dir, ~6 listings per format write
-    // (CommitLog.ensureSnapshotAt, guide §6)
+    // coltypes, checks, txns, stats) (CommitLog.ensureSnapshotAt,
+    // guide §6)
     val (gen, mainManifest) = CommitLog.ensureSnapshotAt(fs, hPath)
     val mainLive = mainManifest.files
     // a BRANCH write stages identically but validates against and
@@ -1537,7 +1536,10 @@ private[graft] object GraftWriter {
     if (autoAnalyze) {
       // coverage from the PRE-WRITE snapshot: analyze itself re-reads
       // the post-commit state, so the set of covered columns (a
-      // declaration, not per-file state) is stable across the append
+      // declaration, not per-file state) is stable across the write.
+      // That holds for a truncate/overwrite too: the replaced files'
+      // records leave with them, but the table's declared coverage
+      // carries over to the new files in one more (stats-only) commit
       val covered = mainManifest.stats.values
         .flatMap(_.keySet).toSet.intersect(data.columns.toSet)
       if (covered.nonEmpty) {

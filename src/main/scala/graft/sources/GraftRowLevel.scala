@@ -521,32 +521,24 @@ private[sources] final class GraftDynamicOverwriteBatchWrite(
     val fs = fsOf(spark)
     // a branch write validates against and routes by the BRANCH's own
     // table state (its layout/checks may have diverged from main)
-    val (live, checks) = branch match {
-      case Some(b) =>
-        val (_, bm) = CommitLog.branchHead(fs, hPath, b)
-        (bm.files, bm.checks)
-      case None =>
-        val (_, l) = CommitLog.ensureLoggedAt(fs, hPath)
-        (l, CommitLog.checkRecords(fs, hPath))
+    val m = branch match {
+      case Some(b) => CommitLog.branchHead(fs, hPath, b)._2
+      case None => CommitLog.ensureSnapshotAt(fs, hPath)._2
     }
     // the committed layout (or, while empty, the declared #meta one)
     // routes the batch's rows — same rule as every other graft write
-    val committed = CommitLog.partitionColsOf(live)
+    val committed = CommitLog.partitionColsOf(m.files)
     val partCols =
       if (committed.nonEmpty) committed
-      else CommitLog.metaRecords(fs, hPath).get("partition.cols")
+      else m.meta.get("partition.cols")
         .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(Nil)
-    val meta = branch match {
-      case Some(b) => CommitLog.branchHead(fs, hPath, b)._2.meta
-      case None => CommitLog.metaRecords(fs, hPath)
-    }
     GraftInsertWriterFactory(
       GraftRowLevel.writerFactory(stagingPath, dataSchema, partCols,
         // CHECK constraints evaluated per row in the same pass that
         // writes — no re-read of the staged batch at commit time
-        checks = GraftRowLevel.boundChecks(dataSchema, checks),
-        bucketSpec = graft.operators.Bucketing.specOf(meta)
+        checks = GraftRowLevel.boundChecks(dataSchema, m.checks),
+        bucketSpec = graft.operators.Bucketing.specOf(m.meta)
           .filter { case (c, _) =>
             dataSchema.fieldNames.contains(c) }))
   }
@@ -558,7 +550,8 @@ private[sources] final class GraftDynamicOverwriteBatchWrite(
     try {
       // idempotent-writer fast path, the format writer's #txn rule
       txn.foreach { case (app, v) =>
-        if (CommitLog.txnVersion(fs, hPath, app).exists(_ >= v)) return
+        if (CommitLog.latestSnapshot(fs, hPath)
+            .flatMap(_._2.txns.get(app)).exists(_ >= v)) return
       }
       val insertRels = messages.toSeq
         .collect { case m: GraftDeltaCommitMessage => m }

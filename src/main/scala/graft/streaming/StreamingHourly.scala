@@ -72,7 +72,7 @@ object StreamingHourly {
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     spark.table(name)
       .select(col("w.start").as("hour_ts"), col("n_events"),
@@ -113,7 +113,7 @@ object StreamingHourly {
         s"$dir/events.parquet") {
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     spark.table(name).orderBy("user_id", "hour", "a_id", "b_id")
   }
@@ -152,7 +152,7 @@ object StreamingHourly {
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     spark.table(name)
       .select(col("user_id"), col("w.start").as("session_start"),
@@ -188,7 +188,7 @@ object StreamingHourly {
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     spark.table(name)
       .select(col("user_id"), col("w.start").as("session_start"),
@@ -235,7 +235,7 @@ object StreamingHourly {
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
           .start()
-        graft.io.Sources.awaitExplained(q)
+        q.awaitTermination()
       }
       // cents-exact sum (the q125 discipline): a double sum would
       // depend on accumulation order, which the memory-sink batch does
@@ -289,7 +289,7 @@ object StreamingHourly {
         s"$dir/events.parquet") {
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     spark.table(name)
       .orderBy(col("user_id"), col("hour"), col("a_id"),
@@ -317,7 +317,7 @@ object StreamingHourly {
         s"$dir/events.parquet") {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      graft.io.Sources.awaitExplained(q)
+      q.awaitTermination()
     }
     spark.table(name)
       .select(col("w.start").as("w_start"), col("n_events"), col("cents"))
@@ -386,7 +386,7 @@ object StreamingHourly {
       graft.io.Sources.withStreamPartitionsFor(spark, s"$root/in") {
         val q = out.writeStream.format("memory").queryName(name)
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        graft.io.Sources.awaitExplained(q)
+        q.awaitTermination()
       }
       // final state per key = the emitted row with max n_events
       // (strictly increasing per update, so the max is unique)
@@ -540,7 +540,7 @@ object StreamingHourly {
       graft.io.Sources.withStreamPartitionsFor(spark, s"$root/qfeed") {
         val q = scored.writeStream.format("memory").queryName(name)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        graft.io.Sources.awaitExplained(q)
+        q.awaitTermination()
       }
       val out = spark.table(name)
         .select(col("qid"), (-col("best.neg_did")).as("best_did"),
@@ -628,7 +628,7 @@ object StreamingHourly {
         val q = out.toDF("user_id", "n_types")
           .writeStream.format("memory").queryName(name)
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        graft.io.Sources.awaitExplained(q)
+        q.awaitTermination()
       }
       val fin = spark.table(name)
         .groupBy("user_id").agg(max("n_types").as("n_types"))

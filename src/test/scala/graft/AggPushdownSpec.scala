@@ -367,8 +367,8 @@ class AggPushdownSpec extends SparkSpec {
     // dirty a strict subset: DVs land on partition 1's files only
     DeleteVectors.deleteWhere(spark, sink,
       col("p") === 1 && col("k") <= 200)
-    val dirtyCount = CommitLog.dvRecords(fsOf(sink),
-      new Path(sink)).size
+    val dirtyCount = latest(fsOf(sink),
+      new Path(sink)).dvs.size
     assert(dirtyCount >= 1)
     val t = graftRead(sink)
     val oracle = CommitLog.read(spark, sink)

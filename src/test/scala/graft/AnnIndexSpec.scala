@@ -40,7 +40,7 @@ class AnnIndexSpec extends SparkSpec {
     // build: trains centroids + indexes every file, ONE commit
     val n1 = AnnIndex.build(spark, sink, numCentroids = 6, iters = 2)
     assert(n1 == filesBefore.toLong, s"indexed $n1 of $filesBefore")
-    val centRel = CommitLog.metaRecords(fs, hp)("ann.embedding.centroids")
+    val centRel = latest(fs, hp).meta("ann.embedding.centroids")
     def cents = spark.read.parquet(new Path(hp, centRel).toString)
     val queries = vectors(0L until 5L)
     def indexed = AnnIndex.topK(spark, sink, queries,
@@ -64,7 +64,7 @@ class AnnIndexSpec extends SparkSpec {
     val n2 = AnnIndex.build(spark, sink, numCentroids = 6, iters = 2)
     assert(n2 == newFiles.toLong,
       s"catch-up must index only the $newFiles new files, got $n2")
-    assert(CommitLog.metaRecords(fs, hp)("ann.embedding.centroids")
+    assert(latest(fs, hp).meta("ann.embedding.centroids")
       == centRel, "catch-up must NOT retrain the centroids")
     assert(key(indexed) == key(inline))
     // deletes: DV'd rows never surface as candidates
@@ -143,10 +143,10 @@ class AnnIndexSpec extends SparkSpec {
     val n = AnnIndex.build(spark, sink, numCentroids = 5,
       sampleFraction = 0.3)
     assert(n == 4L)
-    val centRel = CommitLog.metaRecords(fs, hp)("ann.embedding.centroids")
+    val centRel = latest(fs, hp).meta("ann.embedding.centroids")
     val cents = spark.read.parquet(new Path(hp, centRel).toString)
     // every row is assigned (coverage is NOT sampled — only training)
-    val postRels = CommitLog.annRecords(fs, hp).values
+    val postRels = latest(fs, hp).anns.values
       .flatMap(_.values).toSeq.distinct
     val assigned = spark.read.parquet(
       postRels.map(r => new Path(hp, r).toString): _*).count()
@@ -162,7 +162,7 @@ class AnnIndexSpec extends SparkSpec {
     vectors(200L until 230L).coalesce(1)
       .write.format("graft").mode("append").option("path", sink).save()
     AnnIndex.build(spark, sink, numCentroids = 5, sampleFraction = 0.3)
-    assert(CommitLog.metaRecords(fs, hp)("ann.embedding.centroids")
+    assert(latest(fs, hp).meta("ann.embedding.centroids")
       == centRel, "catch-up must not retrain")
   }
 
@@ -181,7 +181,7 @@ class AnnIndexSpec extends SparkSpec {
     val n1 = AnnIndex.buildPq(spark, sink, subspaces = 4,
       codebookSize = 64)
     assert(n1 == 3L)
-    val meta = CommitLog.metaRecords(fs, hp)
+    val meta = latest(fs, hp).meta
     val cbRel = meta("ann.embedding.pq")
     assert(meta("ann.embedding.pq.m") == "4" &&
       meta("ann.embedding.pq.dims") == "8")
@@ -227,7 +227,7 @@ class AnnIndexSpec extends SparkSpec {
     val n2 = AnnIndex.buildPq(spark, sink, subspaces = 4,
       codebookSize = 64)
     assert(n2 == 1L, s"code catch-up must target only the new file: $n2")
-    assert(CommitLog.metaRecords(fs, hp)("ann.embedding.pq") == cbRel,
+    assert(latest(fs, hp).meta("ann.embedding.pq") == cbRel,
       "catch-up must not retrain the codebook")
     assert(served == hybridServed,
       "inline encoding must equal the committed codes exactly")

@@ -101,7 +101,7 @@ class BloomIndexSpec extends SparkSpec {
     Seq((1L, 1L)).toDF("key", "v")
       .write.format("graft").mode("overwrite").save(sink)
     CommitLog.expireGenerations(fs, hp, keepLast = 1) // expire vacuums
-    assert(CommitLog.bloomRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).blooms.isEmpty)
     val bloomDir = new Path(sink, CommitLog.BloomDirName)
     assert(!fs.exists(bloomDir) || fs.listStatus(bloomDir).isEmpty,
       "expired sidecars must be reclaimed with their generations")

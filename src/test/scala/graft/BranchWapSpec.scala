@@ -66,7 +66,7 @@ class BranchWapSpec extends SparkSpec {
     // pre-publish history stays readable
     assert(CommitLog.readAt(spark, sink, newGen - 1).count() == 3L)
     // the branch.base guard key must NOT leak into main's meta
-    assert(!CommitLog.metaRecords(fs, hp).contains("branch.base"))
+    assert(!latest(fs, hp).meta.contains("branch.base"))
     // drop the branch; its chain files go
     assert(CommitLog.dropBranch(fs, hp, "audit") >= 2)
     assert(CommitLog.branches(fs, hp).isEmpty)

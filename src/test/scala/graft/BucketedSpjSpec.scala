@@ -157,8 +157,8 @@ class BucketedSpjSpec extends SparkSpec {
       fsOf(aPath), new Path(aPath))
     assert(liveAfter.forall(Bucketing.conforms(_, 8)),
       s"DML delta files must bucket-route: $liveAfter")
-    assert(Bucketing.specOf(CommitLog.metaRecords(
-      fsOf(aPath), new Path(aPath))).contains(("k", 8)),
+    assert(Bucketing.specOf(latest(
+      fsOf(aPath), new Path(aPath)).meta).contains(("k", 8)),
       "the declaration must survive row-level DML")
     spjConfs {
       val df = spark.sql(q)
@@ -193,7 +193,7 @@ class BucketedSpjSpec extends SparkSpec {
     val (_, live) = CommitLog.ensureLoggedAt(fs, hp)
     assert(live.forall(Bucketing.conforms(_, 4)),
       s"compaction lost bucket routing: $live")
-    assert(Bucketing.specOf(CommitLog.metaRecords(fs, hp)).nonEmpty,
+    assert(Bucketing.specOf(latest(fs, hp).meta).nonEmpty,
       "compaction must preserve the declaration")
     val q = "SELECT a.k, a.v, d.w FROM spj2.db.a a " +
       "JOIN spj2.db.d d ON a.k = d.k"
@@ -213,7 +213,7 @@ class BucketedSpjSpec extends SparkSpec {
     val (gen, liveNow) = CommitLog.ensureLoggedAt(fs, hp)
     CommitLog.commitAppend(fs, hp, gen, liveNow,
       Seq("extra-unrouted.parquet"))
-    val meta = CommitLog.metaRecords(fs, hp)
+    val meta = latest(fs, hp).meta
     assert(Bucketing.specOf(meta).isEmpty,
       "declaration must drop when an unrouted file lands")
     assert(meta.get(Bucketing.DroppedKey).exists(
@@ -238,7 +238,7 @@ class BucketedSpjSpec extends SparkSpec {
     val (_, live2) = CommitLog.ensureLoggedAt(fs, hp)
     assert(live2.nonEmpty && live2.forall(Bucketing.conforms(_, 4)),
       s"rebucket must route every file: $live2")
-    assert(Bucketing.specOf(CommitLog.metaRecords(fs, hp))
+    assert(Bucketing.specOf(latest(fs, hp).meta)
       .contains(("k", 4)))
     spjConfs {
       val df = spark.sql(q)

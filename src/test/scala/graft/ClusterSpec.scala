@@ -45,10 +45,10 @@ class ClusterSpec extends SparkSpec {
     assert(got == want, s"rewrite must preserve rows: $got vs $want")
     assert(CommitLog.read(spark, sink).filter(col("x") === 5L)
       .count() == 0L, "DV'd rows must stay deleted after the rewrite")
-    assert(CommitLog.dvRecords(fs, hp).isEmpty,
+    assert(latest(fs, hp).dvs.isEmpty,
       "the rewrite replaces DV'd files — no records remain")
     // the non-clustering column's stats coverage survived the rewrite
-    assert(CommitLog.statsRecords(fs, hp).values
+    assert(latest(fs, hp).stats.values
       .forall(_.contains("payload")),
       "zorderBy must re-analyze previously covered columns too")
     // BOTH dimensions prune: a 5%-wide band on either column skips

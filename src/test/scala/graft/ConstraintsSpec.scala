@@ -35,7 +35,7 @@ class ConstraintsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("existing rows violate"))
     assert(CommitLog.committed(fs, hp).get._1 == gBefore)
-    assert(CommitLog.checkRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).checks.isEmpty)
   }
 
   test("a violating batch is refused BEFORE anything stages — sink " +
@@ -101,13 +101,13 @@ class ConstraintsSpec extends SparkSpec {
     DeleteVectors.deleteWhere(spark, sink, col("k") === 2L)
     DeleteVectors.applyDeletes(spark, sink)
     graft.operators.Compact.compactSink(spark, sink)
-    assert(CommitLog.checkRecords(fs, hp) == Map("v_pos" -> "v > 0"))
+    assert(latest(fs, hp).checks == Map("v_pos" -> "v > 0"))
     intercept[IllegalArgumentException] {
       Upsert.upsertParquet(spark, Seq((9L, -1L)).toDF("k", "v"),
         Seq("k"), Seq("k"), sink)
     }
     CommitLog.dropCheck(spark, sink, "v_pos")
-    assert(CommitLog.checkRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).checks.isEmpty)
     // the formerly-violating write now lands
     Upsert.upsertParquet(spark, Seq((9L, -1L)).toDF("k", "v"),
       Seq("k"), Seq("k"), sink)
@@ -126,7 +126,7 @@ class ConstraintsSpec extends SparkSpec {
     val fs = fsOf(sink); val hp = new Path(sink)
     CommitLog.addCheck(spark, sink, "v_pos", "v > 0")
     SchemaEvolve.renameColumn(spark, sink, "v", "val")
-    val rewritten = CommitLog.checkRecords(fs, hp)("v_pos")
+    val rewritten = latest(fs, hp).checks("v_pos")
     assert(rewritten.contains("val"),
       s"check must reference the new name, got: $rewritten")
     // enforcement still fires — with the CLEAN constraint error, not
@@ -153,7 +153,7 @@ class ConstraintsSpec extends SparkSpec {
     CommitLog.ensureLoggedAt(fsOf(sink2), new Path(sink2))
     CommitLog.addCheck(spark, sink2, "v_pos", "v > 0")
     SchemaEvolve.renameColumn(spark, sink2, "k", "key")
-    assert(CommitLog.checkRecords(fsOf(sink2), new Path(sink2)) ==
+    assert(latest(fsOf(sink2), new Path(sink2)).checks ==
       Map("v_pos" -> "v > 0"))
   }
 }

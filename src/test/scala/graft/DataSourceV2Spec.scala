@@ -322,7 +322,7 @@ class DataSourceV2Spec extends SparkSpec {
     // the same app id must not double-land (the crash-replay path)
     val fs = fsOf(b); val hp = new Path(b)
     val before = CommitLog.read(spark, b).count()
-    val lastVersion = CommitLog.txnVersion(fs, hp, "ds9-pipe").get
+    val lastVersion = latest(fs, hp).txns.get("ds9-pipe").get
     graft.sources.GraftWriter.write(
       Seq((99L, 990L)).toDF("k", "v"), b, overwrite = false,
       txn = Some(("ds9-pipe", lastVersion)))
@@ -671,7 +671,7 @@ class DataSourceV2Spec extends SparkSpec {
       .write.format("graft").mode("append").save(sink)
     val fs = fsOf(sink); val hp = new Path(sink)
     TableStats.analyze(spark, sink, Seq("k")) // declare coverage
-    def recorded: Int = CommitLog.statsRecords(fs, hp)
+    def recorded: Int = latest(fs, hp).stats
       .count(_._2.contains("k"))
     assert(recorded == 1)
     // a plain append opens a hole: the new file has no record, so a
@@ -696,6 +696,26 @@ class DataSourceV2Spec extends SparkSpec {
       s"full coverage prunes both high-key files: $kept1")
     assert(spark.read.format("graft").load(sink)
       .filter(col("k") <= 2L).count() == 2L)
+  }
+
+  test("option(\"autoAnalyze\") on a truncate overwrite keeps the " +
+    "declared stats coverage: the new files carry stats records") {
+    val root = java.nio.file.Files.createTempDirectory("ds16t").toString
+    val sink = s"$root/t"
+    Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1)
+      .write.format("graft").mode("append").save(sink)
+    val fs = fsOf(sink); val hp = new Path(sink)
+    TableStats.analyze(spark, sink, Seq("k")) // declare coverage
+    val replaced = latest(fs, hp).files.toSet
+    Seq((100L, 1L), (200L, 2L)).toDF("k", "v").coalesce(1)
+      .write.format("graft").mode("overwrite")
+      .option("autoAnalyze", "true").save(sink)
+    val m = latest(fs, hp)
+    assert(m.files.nonEmpty && !m.files.exists(replaced),
+      s"the truncate must replace every file: ${m.files}")
+    assert(m.files.forall(f => m.stats.get(f).exists(_.contains("k"))),
+      s"new files must carry k's stats: ${m.stats}")
+    assert(m.files.map(m.stats(_)("k").nRows).sum == 2L)
   }
 
   test("SQL consumers get the same surface via a temp view") {

@@ -99,7 +99,7 @@ class DeleteVectorsSpec extends SparkSpec {
       Seq((50L, "b")).toDF("k", "pt").withColumn("v", col("k") * 10),
       Seq("k", "pt"), Seq("v"), sink, "pt")
     assert(rows(sink).map(_._1) == Seq(2L, 3L, 4L, 9L, 50L))
-    val recs = CommitLog.dvRecords(fs, p)
+    val recs = latest(fs, p).dvs
     assert(recs.nonEmpty && recs.keys.forall(_.startsWith("pt=a/")),
       s"only pt=a records should remain, got ${recs.keys}")
     graft.io.Sources.deleteRecursively(root)
@@ -125,7 +125,7 @@ class DeleteVectorsSpec extends SparkSpec {
       .filter(_.startsWith("pt=b/"))
     val (rewritten, after) = DeleteVectors.applyDeletes(spark, sink)
     assert(rewritten == 2L && after >= 1L)
-    assert(CommitLog.dvRecords(fs, p).isEmpty)
+    assert(latest(fs, p).dvs.isEmpty)
     assert(rows(sink) == want, "apply must not change the visible rows")
     val liveAfter = CommitLog.committed(fs, p).get._2
     assert(untouched.forall(liveAfter.contains),
@@ -164,7 +164,7 @@ class DeleteVectorsSpec extends SparkSpec {
     // every pre-merge data file is still live and byte-untouched
     val liveAfter = CommitLog.committed(fs, p).get._2
     assert(liveBefore.forall(liveAfter.contains))
-    assert(CommitLog.dvRecords(fs, p).size == 1,
+    assert(latest(fs, p).dvs.size == 1,
       "exactly the file holding k=2 carries a mark")
     // the change feed across the merge: one delete (old version of 2),
     // two inserts (new 2, new 10) — debris from the killed attempt is
@@ -238,7 +238,7 @@ class DeleteVectorsSpec extends SparkSpec {
     assert(rows(sink).map(_._1) == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L))
     // re-run completes; the rewrite holds
     DeleteVectors.applyDeletes(spark, sink)
-    assert(CommitLog.dvRecords(fs, p).isEmpty)
+    assert(latest(fs, p).dvs.isEmpty)
     assert(rows(sink).map(_._1) == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L))
     // expire history, vacuum: the now-unreferenced DV dir is reclaimed
     CommitLog.expireGenerations(fs, p, keepLast = 1)

@@ -44,7 +44,7 @@ class EscapedPathsSpec extends SparkSpec {
       live.exists(_.contains("%3A")),
       s"fixture must cover both escape shapes: $live")
     TableStats.analyze(spark, sink, Seq("k"))
-    val stats = CommitLog.statsRecords(fs, hp)
+    val stats = latest(fs, hp).stats
     val missing = live.filterNot(stats.contains)
     assert(missing.isEmpty,
       s"every live file needs a stats record, missing: $missing")
@@ -61,7 +61,7 @@ class EscapedPathsSpec extends SparkSpec {
     val fs = fsOf(sink); val hp = new Path(sink)
     DeleteVectors.deleteWhere(spark, sink,
       col("p") === "NOT SPECIFIED" && col("k") === 1L)
-    val dvs = CommitLog.dvRecords(fs, hp)
+    val dvs = latest(fs, hp).dvs
     assert(dvs.keySet.forall(_.contains("NOT SPECIFIED")),
       s"DV keys must be the raw manifest names: ${dvs.keySet}")
     assert(CommitLog.read(spark, sink).count() == 5L)
@@ -69,7 +69,7 @@ class EscapedPathsSpec extends SparkSpec {
     // live file), not drop it
     Seq((7L, "plain")).toDF("k", "p")
       .write.format("graft").mode("append").option("path", sink).save()
-    assert(CommitLog.dvRecords(fs, hp).nonEmpty,
+    assert(latest(fs, hp).dvs.nonEmpty,
       "the DV record must survive the append's carry-forward")
     assert(CommitLog.read(spark, sink).count() == 6L)
     assert(CommitLog.read(spark, sink)
@@ -93,7 +93,7 @@ class EscapedPathsSpec extends SparkSpec {
     // bloom build over escaped dirs keys records by raw names
     TableStats.buildBloom(spark, sink, Seq("k"),
       expectedKeysPerFile = 100L)
-    val blooms = CommitLog.bloomRecords(fsOf(sink), new Path(sink))
+    val blooms = latest(fsOf(sink), new Path(sink)).blooms
     val live = CommitLog.ensureLoggedAt(fsOf(sink), new Path(sink))._2
     assert(live.forall(blooms.contains),
       s"every live file needs a bloom record: missing ${

@@ -149,7 +149,7 @@ class GraftCatalogSpec extends SparkSpec {
     // merge-on-read: the data files are untouched, only DVs landed
     assert(CommitLog.ensureLoggedAt(fs, hp)._2.toSet == filesBefore,
       "DELETE must not rewrite or remove data files")
-    assert(CommitLog.dvRecords(fs, hp).nonEmpty,
+    assert(latest(fs, hp).dvs.nonEmpty,
       "DELETE must land as deletion vectors")
     // a non-filter-expressible condition can't take the metadata-only
     // path (a partial conversion would delete a superset) — since the
@@ -414,7 +414,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT * FROM gc12.db.t VERSION AS OF " +
       s"$genBefore").columns.toSeq == Seq("k", "v"))
     // REPLACE re-declares: old CHECKs and properties are gone
-    assert(CommitLog.checkRecords(fs, hp).isEmpty,
+    assert(latest(fs, hp).checks.isEmpty,
       "REPLACE must not inherit the old table's constraints")
     assert(!spark.sql("SHOW TBLPROPERTIES gc12.db.t").collect()
       .map(_.getString(0)).contains("tier"))

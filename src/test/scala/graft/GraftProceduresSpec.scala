@@ -34,14 +34,14 @@ class GraftProceduresSpec extends SparkSpec {
     assert(CommitLog.ensureLoggedAt(fs, hp)._2.size >= 3)
 
     spark.sql("DELETE FROM gp1.db.t WHERE k >= 250")
-    assert(CommitLog.dvRecords(fs, hp).nonEmpty)
+    assert(latest(fs, hp).dvs.nonEmpty)
 
     // pay down the DV debt purely from SQL
     val applied = spark.sql(
       "CALL gp1.system.apply_deletes('db.t')").head
     assert(applied.getLong(0) >= 1,
       s"apply_deletes must rewrite the DV'd file: $applied")
-    assert(CommitLog.dvRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).dvs.isEmpty)
     assert(spark.table("gp1.db.t").count() == 250)
 
     // bin-pack the small files into one
@@ -91,7 +91,7 @@ class GraftProceduresSpec extends SparkSpec {
         "columns => 'a,b', n_files => 4)").head
     assert(z.getLong(1) == 4L, s"zorder must land n_files: $z")
     // zorder re-analyzes its clustering columns — stats present
-    assert(CommitLog.statsRecords(fs, hp).nonEmpty)
+    assert(latest(fs, hp).stats.nonEmpty)
 
     val an = spark.sql("CALL gp2.system.analyze('db.t', 'a,b')").head
     assert(an.getLong(0) == 0L,

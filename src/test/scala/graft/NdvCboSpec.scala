@@ -46,7 +46,7 @@ class NdvCboSpec extends SparkSpec {
     val fs = fsOf(sink); val hp = new Path(sink)
     CommitLog.ensureLoggedAt(fs, hp)
     TableStats.analyze(spark, sink, Seq("k", "v"))
-    val recs = CommitLog.statsRecords(fs, hp)
+    val recs = latest(fs, hp).stats
     assert(recs.nonEmpty)
     // every record carries an NDV; per-file k-NDV ≈ 500 (HLL ±5%)
     recs.values.foreach { cols =>
@@ -61,7 +61,7 @@ class NdvCboSpec extends SparkSpec {
     val (g, live) = CommitLog.ensureLoggedAt(fs, hp)
     CommitLog.commitNext(fs, hp, g, live,
       meta = Map("prop.touch" -> "1"))
-    val recs2 = CommitLog.statsRecords(fs, hp)
+    val recs2 = latest(fs, hp).stats
     assert(recs2 == recs, "stats records must round-trip byte-stably")
     cboConfs {
       val df = spark.read.format("graft").load(sink)

@@ -340,7 +340,7 @@ class RebaseSpec extends SparkSpec {
     val (n, files) = DeleteVectors.deleteWhere(spark, sink,
       col("k") % 5L =!= 0L, dvShardRows = 100L)
     assert(n == 800L && files == 4L)
-    val dvs = CommitLog.dvRecords(fs, hp)
+    val dvs = latest(fs, hp).dvs
     assert(dvs.size == 4)
     // sharded layout: every record names a part FILE inside one DV dir
     assert(dvs.values.forall(_.matches(
@@ -372,7 +372,7 @@ class RebaseSpec extends SparkSpec {
     // MoR → CoW compaction clears the sharded DVs
     val (rewritten, _) = DeleteVectors.applyDeletes(spark, sink)
     assert(rewritten == 4L)
-    assert(CommitLog.dvRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).dvs.isEmpty)
     assert(CommitLog.read(spark, sink).count() == 201L)
   }
 
@@ -397,7 +397,7 @@ class RebaseSpec extends SparkSpec {
       assert((n, f) == (240L, 1L))
     } finally
       spark.conf.set("spark.sql.files.maxRecordsPerFile", "0")
-    val dvs = CommitLog.dvRecords(fs, hp)
+    val dvs = latest(fs, hp).dvs
     assert(dvs.size == 1)
     assert(!dvs.values.head.contains("part-"),
       s"multi-part marks must bind the DV directory: ${dvs.values}")
@@ -409,6 +409,6 @@ class RebaseSpec extends SparkSpec {
     assert(CommitLog.read(spark, sink).agg(min(col("k")))
       .head.getLong(0) == 240L)
     // the recorded cardinality is the FULL merged set
-    assert(CommitLog.dvMarkCounts(fs, hp).values.toSeq == Seq(240L))
+    assert(latest(fs, hp).dvMarks.values.toSeq == Seq(240L))
   }
 }

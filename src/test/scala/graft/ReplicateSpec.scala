@@ -124,7 +124,7 @@ class ReplicateSpec extends SparkSpec {
     assert(s.toGen > s.fromGen &&
       s.rowsUpdated + s.rowsDeleted + s.rowsInserted == 0L)
     val fs = fsOf(down)
-    assert(CommitLog.txnVersion(fs, new Path(down), "sub1")
+    assert(latest(fs, new Path(down)).txns.get("sub1")
       .contains(s.toGen), "the no-effect window must still be recorded")
     assert(rows(down) == Seq((1L, 10L)))
   }

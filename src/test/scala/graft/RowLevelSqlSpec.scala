@@ -70,7 +70,7 @@ class RowLevelSqlSpec extends SparkSpec {
         s"UPDATE must not rewrite live data file $f") }
     val newFiles = after.keySet -- before.keySet
     assert(newFiles.nonEmpty, "UPDATE must append the new row versions")
-    val dvs = CommitLog.dvRecords(fs, hp)
+    val dvs = latest(fs, hp).dvs
     assert(dvs.nonEmpty, "UPDATE must land #dv records")
     assert(CommitLog.committed(fs, hp).get._1 == genBefore + 1,
       "UPDATE must publish exactly one commit")
@@ -111,7 +111,7 @@ class RowLevelSqlSpec extends SparkSpec {
     before.foreach { case (f, stamp) =>
       assert(after.get(f).contains(stamp)) }
     assert(CommitLog.committed(fs, hp).get._1 == genBefore + 1)
-    assert(CommitLog.dvRecords(fs, hp).nonEmpty)
+    assert(latest(fs, hp).dvs.nonEmpty)
   }
 
   test("pushable SQL DELETE keeps the metadata-only DV path (no new " +
@@ -136,7 +136,7 @@ class RowLevelSqlSpec extends SparkSpec {
     val after = dataFileStamps(path)
     assert(after == before,
       "both DELETE forms must leave the data file set untouched")
-    assert(CommitLog.dvRecords(fs, hp).nonEmpty)
+    assert(latest(fs, hp).dvs.nonEmpty)
   }
 
   test("SQL UPDATE routes rows into the hive layout (including a " +
@@ -270,7 +270,7 @@ class RowLevelSqlSpec extends SparkSpec {
 
     def snapshot() = {
       val (g, live) = CommitLog.ensureLoggedAt(fs, hp)
-      (g, live, CommitLog.dvRecords(fs, hp))
+      (g, live, latest(fs, hp).dvs)
     }
     def staged(tag: String): (Path, Seq[String], Seq[String]) = {
       // a real task-shaped staging payload: one insert file, one mark
@@ -391,7 +391,7 @@ class RowLevelSqlSpec extends SparkSpec {
       .filter($"k".isin(2L, 4L, 6L)).count() == 0)
     assert(dataFileStamps(s"$root/db/t") == before,
       "MATCHED DELETE must land as DVs, not rewrites")
-    assert(CommitLog.dvRecords(fs, hp).nonEmpty)
+    assert(latest(fs, hp).dvs.nonEmpty)
   }
 
   test("two CONCURRENT SQL UPDATEs never corrupt: each either commits " +

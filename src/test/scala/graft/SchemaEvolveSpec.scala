@@ -63,7 +63,7 @@ class SchemaEvolveSpec extends SparkSpec {
     // metadata-only: the live file set is IDENTICAL
     val (g1, live1) = CommitLog.ensureLoggedAt(fs, hp)
     assert(g1 == g0 + 1 && live1.sorted == live0.sorted)
-    assert(CommitLog.colmapRecords(fs, hp).values.toSet ==
+    assert(latest(fs, hp).colmaps.values.toSet ==
       Set(Map("v" -> "score")))
     // logical read
     val df = CommitLog.read(spark, sink)
@@ -76,7 +76,7 @@ class SchemaEvolveSpec extends SparkSpec {
     val df2 = CommitLog.read(spark, sink).orderBy("k")
     assert(df2.columns.sorted.toSeq == Seq("k", "score"))
     assert(df2.collect().map(_.getLong(1)).toSeq == Seq(10L, 20L, 30L))
-    assert(CommitLog.colmapRecords(fs, hp).size == 2,
+    assert(latest(fs, hp).colmaps.size == 2,
       "the appended file must carry NO record")
     // time travel: the pre-rename snapshot reads under ITS names
     assert(CommitLog.readAt(spark, sink, g0).columns.sorted.toSeq ==
@@ -86,7 +86,7 @@ class SchemaEvolveSpec extends SparkSpec {
     // rename back: the original files' mapping returns to identity and
     // the records shed; the post-rename file now carries score→v
     SchemaEvolve.renameColumn(spark, sink, "score", "v")
-    val cms = CommitLog.colmapRecords(fs, hp)
+    val cms = latest(fs, hp).colmaps
     assert(cms.values.toSet == Set(Map("score" -> "v")),
       s"only the mid-epoch file keeps a record, got $cms")
     assert(CommitLog.read(spark, sink).columns.sorted.toSeq ==
@@ -126,7 +126,7 @@ class SchemaEvolveSpec extends SparkSpec {
       (9L, 90L)))
     // the touched file was rewritten with the logical schema → its
     // record left; untouched files keep theirs
-    val cms = CommitLog.colmapRecords(fs, hp)
+    val cms = latest(fs, hp).colmaps
     assert(cms.size == 3 &&
       cms.values.toSet == Set(Map("v" -> "score")))
     // ERASE by logical key column
@@ -207,7 +207,7 @@ class SchemaEvolveSpec extends SparkSpec {
     assert(CommitLog.read(spark, sink).orderBy("k")
       .collect().map(_.getLong(1)).toSeq ==
       Seq(4000000000L, 20L, 3000000000L))
-    assert(CommitLog.coltypeRecords(fs, hp).size == 1)
+    assert(latest(fs, hp).coltypes.size == 1)
     // narrowing and unknown targets are refused
     intercept[IllegalArgumentException] {
       SchemaEvolve.widenColumn(spark, sink, "v", "int")
@@ -222,7 +222,7 @@ class SchemaEvolveSpec extends SparkSpec {
     }
     val (rewritten, _) = SchemaEvolve.normalize(spark, sink)
     assert(rewritten == 1L)
-    assert(CommitLog.coltypeRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).coltypes.isEmpty)
     assert(CommitLog.read(spark, sink).schema("v").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(CommitLog.read(spark, sink).count() == 3L)
@@ -270,7 +270,7 @@ class SchemaEvolveSpec extends SparkSpec {
     // normalize: mapped files rewrite to the logical schema
     val (rewritten, _) = SchemaEvolve.normalize(spark, sink)
     assert(rewritten == 2L)
-    assert(CommitLog.colmapRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).colmaps.isEmpty)
     assert(CommitLog.read(spark, sink).columns.toSeq == Seq("k"))
     assert(CommitLog.read(spark, sink).count() == 2L)
   }
@@ -305,8 +305,8 @@ class SchemaEvolveSpec extends SparkSpec {
     // the re-run completes: records cleared, DVs applied, compaction OK
     val (rewritten, _) = SchemaEvolve.normalize(spark, sink)
     assert(rewritten == 4L)
-    assert(CommitLog.colmapRecords(fs, hp).isEmpty)
-    assert(CommitLog.dvRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).colmaps.isEmpty)
+    assert(latest(fs, hp).dvs.isEmpty)
     assert(CommitLog.read(spark, sink).orderBy("k")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     graft.operators.Compact.compactSink(spark, sink)
@@ -327,7 +327,7 @@ class SchemaEvolveSpec extends SparkSpec {
     // untouched (a wave-based planner's partial pass)
     val keyOf: Map[String, Long] = live.map { f =>
       f -> CommitLog.mappedScan(spark, hp, Seq(f),
-        CommitLog.colmapRecords(fs, hp)).select("key")
+        latest(fs, hp).colmaps).select("key")
         .head.getLong(0)
     }.toMap
     val assigned = live.filter(f => keyOf(f) <= 10L)
@@ -356,10 +356,10 @@ class SchemaEvolveSpec extends SparkSpec {
       bins.count(_.startsWith("bin0-")) == 1 &&
       bins.count(_.startsWith("bin1-")) == 1, bins.toString)
     // assigned files' records left WITH them; untouched keep theirs
-    val cmAfter = CommitLog.colmapRecords(fs, hp)
+    val cmAfter = latest(fs, hp).colmaps
     assert(cmAfter.keySet == untouched.toSet,
       "mapping debt cleared exactly on the rewritten files")
-    val dvAfter = CommitLog.dvRecords(fs, hp)
+    val dvAfter = latest(fs, hp).dvs
     assert(dvAfter.keySet.forall(untouched.contains) &&
       dvAfter.nonEmpty,
       "DVs cleared on rewritten files, kept on untouched ones")
@@ -379,8 +379,8 @@ class SchemaEvolveSpec extends SparkSpec {
     // a full normalizeCompact wave clears the rest
     val plan2 = untouched.map(f => f -> "bin2").toMap
     SchemaEvolve.normalizeCompact(spark, sink, plan2)
-    assert(CommitLog.colmapRecords(fs, hp).isEmpty &&
-      CommitLog.dvRecords(fs, hp).isEmpty)
+    assert(latest(fs, hp).colmaps.isEmpty &&
+      latest(fs, hp).dvs.isEmpty)
     graft.operators.Compact.compactSink(spark, sink)
     assert(CommitLog.read(spark, sink).count() == 16L)
     assert(CommitLog.committed(fs, hp).get._1 > gAfter)
@@ -429,8 +429,8 @@ class SchemaEvolveSpec extends SparkSpec {
     // dependent families moved in the same commit: the CHECK now
     // references `val`, and the stats records are rekeyed so pruning
     // keeps working without a re-analyze
-    assert(CommitLog.checkRecords(fs, hp)("v_pos").contains("val"))
-    assert(CommitLog.statsRecords(fs, hp).values
+    assert(latest(fs, hp).checks("v_pos").contains("val"))
+    assert(latest(fs, hp).stats.values
       .forall(m => m.contains("key") && m.contains("val")),
       "stats must rekey to the new logical names")
     // the legality checks run against the EVOLVED schema: key is now

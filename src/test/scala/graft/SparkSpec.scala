@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.CommitLog
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the shared session alive
+
+  /** The latest committed manifest of a logged sink. */
+  def latest(fs: FileSystem, sink: Path): CommitLog.Manifest =
+    CommitLog.latestSnapshot(fs, sink).get._2
 }
 
 object SparkSpec {

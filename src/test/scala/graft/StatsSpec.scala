@@ -36,7 +36,7 @@ class StatsSpec extends SparkSpec {
     val sink = mkSink(root)
     val fs = fsOf(sink); val hp = new Path(sink)
     assert(TableStats.analyze(spark, sink, Seq("k", "s")) == 5L)
-    val stats = CommitLog.statsRecords(fs, hp)
+    val stats = latest(fs, hp).stats
     assert(stats.size == 5 &&
       stats.values.forall(m => m.contains("k") && m.contains("s")))
     // numeric band spanning two buckets
@@ -172,7 +172,7 @@ class StatsSpec extends SparkSpec {
       .orderBy("key").collect().map(_.getLong(0)).toSeq ==
       (20L to 25L))
     // the retired name resolves nothing — no stale-key pruning
-    assert(CommitLog.statsRecords(fs, hp).values
+    assert(latest(fs, hp).stats.values
       .forall(m => !m.contains("k")), "old key must be gone")
     // re-analyze now reads the mapped files through their LOGICAL
     // view — same keying, refreshed bounds, pruning intact
@@ -271,7 +271,7 @@ class StatsSpec extends SparkSpec {
     val fs = fsOf(sink); val hp = new Path(sink)
     CommitLog.ensureLoggedAt(fs, hp)
     assert(TableStats.analyze(spark, sink, Seq("x")) == 3L)
-    val stats = CommitLog.statsRecords(fs, hp)
+    val stats = latest(fs, hp).stats
     assert(stats.values.count(m => m("x").min.isEmpty &&
       m("x").max.isEmpty) == 2, "non-finite files record None bounds")
     // the NaN/Inf files never prune (conservative); the finite one does
@@ -292,7 +292,7 @@ class StatsSpec extends SparkSpec {
     // bounds still intersect [20,29], but its mark count == row count
     DeleteVectors.deleteWhere(spark, sink,
       col("k") >= 20L && col("k") <= 29L)
-    val full = CommitLog.dvMarkCounts(fs, hp)
+    val full = latest(fs, hp).dvMarks
     assert(full.values.toSeq == Seq(10L), s"mark cardinality: $full")
     val (keep, skip) = TableStats.pruneBand(fs, hp, "k", 20L, 29L)
     assert(keep.isEmpty && skip.size == 5,
