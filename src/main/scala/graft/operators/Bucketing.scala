@@ -48,8 +48,9 @@ object Bucketing {
   val DroppedKey = "bucket.dropped"
 
   /** The staging-only routing column writers partition by before the
-    * move-in strips it into the file-name prefix. Reserved: a data
-    * column of this name would collide with the router. */
+    * move-in ([[CommitLog.stageIn]]) folds it into the file-name
+    * prefix. Reserved: a data column of this name would collide with
+    * the router. */
   val StageCol = "__graft_bucket"
 
   private val FileRe = """^b(\d{5})-""".r
@@ -77,20 +78,6 @@ object Bucketing {
     * function ([[graft.sources.GraftBucketFunction]]): Murmur3 seed
     * 42 (`functions.hash`), positive modulo. */
   def bucketExpr(c: String, n: Int): Column = pmod(hash(col(c)), lit(n))
-
-  /** Rewrite a staged relative path produced under
-    * `partitionBy(..., StageCol)` into the committed form: the
-    * `__graft_bucket=K` directory level is stripped and the bucket id
-    * becomes the `b%05d-` file-name prefix. */
-  def stripStageDir(rel: String): String = {
-    val segs = rel.split('/')
-    val bucketSeg = segs.find(_.startsWith(StageCol + "="))
-      .getOrElse(throw new IllegalStateException(
-        s"bucketed staged file $rel lost its $StageCol level"))
-    val id = bucketSeg.stripPrefix(StageCol + "=").toInt
-    (segs.filterNot(_.startsWith(StageCol + "="))
-      .dropRight(1) :+ f"b$id%05d-${segs.last}").mkString("/")
-  }
 
   /** Declare bucketing on an EMPTY table (freshly created, or
     * truncated): one metadata commit carrying the two records. A

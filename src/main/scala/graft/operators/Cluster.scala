@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions.{array_distinct, broadcast, coalesce,
   * Z-ordering, the Morton-curve layout every lakehouse engine ships
   * for multi-column pruning): rewrite a logged sink so each output
   * file covers a small HYPERCUBE of the clustering columns' value
-  * space instead of a slab of one column. After the rewrite +
-  * re-ANALYZE, the manifest's per-file `#stats` bounds are tight on
+  * space instead of a slab of one column. After the rewrite, the
+  * manifest's per-file `#stats` bounds are tight on
   * EVERY clustering column, so [[TableStats.pruneIn]] skips files for
   * a selective band on ANY of them — a linear sort can only ever
   * serve its leading column.
@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions.{array_distinct, broadcast, coalesce,
   *      make the segments balanced under skew;
   *   4. the new file set REPLACES the live set in one terminal CAS
   *      commit (rewriter semantics — a concurrent writer's commit
-  *      makes this one conflict loudly), and a re-ANALYZE commits the
-  *      new tight bounds.
+  *      makes this one conflict loudly) that also carries the new
+  *      files' tight bounds, so no generation shows them unanalyzed.
   *
   * The scan reads through column mappings, widening casts AND
   * deletion vectors ([[CommitLog.mappedScan]]), so like
@@ -57,10 +57,11 @@ import org.apache.spark.sql.functions.{array_distinct, broadcast, coalesce,
   * `#stats` bounds are re-derived from the written data). */
 object Cluster {
 
-  /** Rewrite `path` Z-ordered by `cols` into ~`nFiles` files and
-    * re-ANALYZE the clustering columns. Returns (files before, files
-    * after). `bitsPerCol` bounds the curve resolution; cols.size ×
-    * bitsPerCol must fit a long. `keepReplaced = true` skips the
+  /** Rewrite `path` Z-ordered by `cols` into ~`nFiles` files, whose
+    * stats on the clustering columns (and on every column the table
+    * had stats for) ride the rewrite's one commit. Returns (files
+    * before, files after). `bitsPerCol` bounds the curve resolution;
+    * cols.size × bitsPerCol must fit a long. `keepReplaced = true` skips the
     * post-commit GC so every prior generation stays readable via
     * [[CommitLog.readAt]] — Z-ordering a time-travel sink is then a
     * pure layout optimization ([[Compact.compactSink]]'s contract);
@@ -169,8 +170,6 @@ object Cluster {
           .withColumn("__z", mortonKey(cols, bitsPerCol, bucketOf))
       }
 
-    val tmp = new Path(hPath.getParent, hPath.getName + "__z_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     val dataCols = scan.columns.toIndexedSeq.map(col)
     // 3) one range shuffle lands contiguous (partition, Z-curve)
     //    segments; the hive layout (if any) is preserved verbatim
@@ -179,41 +178,22 @@ object Cluster {
       .repartitionByRange(nFiles, rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .select(dataCols: _*)
-    if (partCols.isEmpty) staged.write.parquet(tmp.toString)
-    else staged.write.partitionBy(partCols: _*).parquet(tmp.toString)
-    // 4) add → terminal-CAS COMMIT (full replacement) → GC
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"zorderBy: could not move $f into $dest")
-        added += rel
-      }
+    val newFiles = CommitLog.stageIn(fs, hPath, "z") { tmp =>
+      if (partCols.isEmpty) staged.write.parquet(tmp.toString)
+      else staged.write.partitionBy(partCols: _*).parquet(tmp.toString)
     }
-    failpoint("added")
-    val newFiles = added.result()
-    // old files leave the manifest → their DV/stats/mapping records
-    // drop with them in the same atomic publish
-    CommitLog.commitNext(fs, hPath, baseGen, newFiles)
-    failpoint("committed")
-    if (!keepReplaced) live.foreach { r => // GC, best-effort
-      try fs.delete(new Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
-    // the new tight hypercube bounds are the whole point; the old
-    // files' records left with them, so re-ANALYZE the UNION of the
-    // previously covered columns and the clustering columns — a
-    // rewrite must never silently shrink the table's stats coverage
+    // 4) the new tight hypercube bounds are the whole point: the old
+    //    files' records leave with them, so the new files' stats cover
+    //    the UNION of the previously covered columns and the clustering
+    //    columns — a rewrite must never silently shrink the table's
+    //    stats coverage — and ride the one terminal-CAS commit (full
+    //    replacement) → GC
     val covered = (priorStatsCols ++ cols).distinct
       .filter(scan.columns.contains)
-    TableStats.analyze(spark, path, covered)
+    CommitLog.swap(fs, hPath, baseGen, live, live, newFiles, failpoint,
+      keepReplaced,
+      stats = TableStats.plainFileStats(spark, fs, hPath, newFiles,
+        covered))
     (live.size.toLong, newFiles.size.toLong)
   }
 

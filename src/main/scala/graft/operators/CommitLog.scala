@@ -462,6 +462,17 @@ object CommitLog {
     generations(fs, sink).lastOption.map(g => g -> readManifestFull(fs,
       sink, g))
 
+  /** The table state a READ plans against: the latest manifest, or —
+    * for a never-logged sink — an in-memory manifest over the data
+    * files on disk. Never commits, so a read never bootstraps the
+    * log. */
+  private[graft] def readView(fs: FileSystem, sink: Path): Manifest =
+    latestSnapshot(fs, sink).fold(listedManifest(fs, sink))(_._2)
+
+  /** A manifest recording nothing but the data files on disk. */
+  private def listedManifest(fs: FileSystem, sink: Path): Manifest =
+    Manifest(listDataFiles(fs, sink), Map.empty, Map.empty, Map.empty)
+
   /** Latest committed (generation, live files), or None when the sink
     * has never been logged. */
   def committed(fs: FileSystem, sink: Path): Option[(Long, Seq[String])] =
@@ -958,6 +969,107 @@ object CommitLog {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Stage → move-in, the first two steps of every table writer:
+    * `write` lays its parquet into a fresh scratch directory beside
+    * the sink, `<sink>__<tag>_tmp-<uuid>`, and the staged data files
+    * then [[moveIn]] under the sink. Returns their sink-relative
+    * names, still uncommitted. The scratch name is unique per call,
+    * so a writer never deletes or adopts another writer's staged
+    * files. The directory is deleted on success and on failure alike;
+    * only a killed JVM leaves it behind, as a sibling no listing of
+    * the sink surfaces. */
+  private[graft] def stageIn(fs: FileSystem, sink: Path, tag: String)
+                            (write: Path => Unit): Seq[String] = {
+    val staging = scratchDir(sink, tag)
+    try {
+      write(staging)
+      val staged = Seq.newBuilder[(Path, String)]
+      val it = fs.listFiles(staging, true) // recursive: hive dirs too
+      while (it.hasNext) {
+        val f = it.next().getPath
+        if (f.getName.endsWith(".parquet"))
+          staged += f -> relativize(fs, staging, f.toString)
+      }
+      moveAll(fs, sink, staged.result())
+    } finally
+      try fs.delete(staging, true)
+      catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  /** A fresh scratch directory name beside `sink`:
+    * `<sink>__<tag>_tmp-<uuid>`, never shared by two writers. */
+  private[graft] def scratchDir(sink: Path, tag: String): Path =
+    new Path(sink.getParent, sink.getName + s"__${tag}_tmp-" +
+      java.util.UUID.randomUUID().toString)
+
+  /** Move-in of an explicit list: `rels` are data files relative to
+    * `staging` (a task-written staging directory the caller owns). */
+  private[graft] def moveIn(fs: FileSystem, staging: Path, sink: Path,
+                            rels: Seq[String]): Seq[String] =
+    moveAll(fs, sink, rels.map(r => new Path(staging, r) -> r))
+
+  /** Rename each staged file to its committed name, creating each
+    * distinct parent directory once. Hive levels are kept; the
+    * scaffolding levels fold into the file name: `__graft_bucket=K`
+    * becomes the `b%05d-` prefix [[Bucketing.bucketIdOf]] reads, and
+    * a compaction bin's `__bin=V` becomes a `V-` prefix. */
+  private def moveAll(fs: FileSystem, sink: Path,
+                      staged: Seq[(Path, String)]): Seq[String] = {
+    val bucketLevel = Bucketing.StageCol + "="
+    val binLevel = "__bin="
+    def committedName(rel: String): String = {
+      val segs = rel.split('/')
+      val dirs = segs.init
+      val bucket = dirs.find(_.startsWith(bucketLevel)).fold("")(s =>
+        f"b${s.stripPrefix(bucketLevel).toInt}%05d-")
+      val bin = dirs.find(_.startsWith(binLevel))
+        .fold("")(_.stripPrefix(binLevel) + "-")
+      (dirs.filterNot(s => s.startsWith(bucketLevel) ||
+        s.startsWith(binLevel)) :+ (bucket + bin + segs.last))
+        .mkString("/")
+    }
+    val moves = staged.map { case (f, rel) =>
+      (f, committedName(rel)) }
+    moves.map(m => new Path(sink, m._2).getParent).distinct
+      .foreach(fs.mkdirs)
+    moves.map { case (f, rel) =>
+      val dest = new Path(sink, rel)
+      if (!fs.rename(f, dest))
+        throw new java.io.IOException(
+          s"move-in: could not move $f into $dest")
+      rel
+    }
+  }
+
+  /** The swap: commit `live − replaced ++ added` as the generation
+    * after `baseGen` in ONE atomic manifest publish, then GC the
+    * replaced originals (pure garbage collection — the committed
+    * generation never references them; skipped when `keepReplaced`,
+    * which preserves older generations for [[readAt]] time travel).
+    * `failpoint` fires after the adds ("added") and after the commit
+    * ("committed") so CommitProtocolSpec can kill the swap at both
+    * windows. A lost CAS is terminal: a rewriter's read snapshot is
+    * invalid once another writer commits. `stats` rides the commit as
+    * in [[commitNext]]. Returns the committed generation. */
+  private[graft] def swap(fs: FileSystem, sink: Path, baseGen: Long,
+                          live: Seq[String], replaced: Seq[String],
+                          added: Seq[String],
+                          failpoint: String => Unit,
+                          keepReplaced: Boolean = false,
+                          txn: Option[(String, Long)] = None,
+                          stats: Map[String, Map[String, ColStats]] =
+                            Map.empty): Long = {
+    failpoint("added")
+    val gen = commitNext(fs, sink, baseGen, live.diff(replaced) ++ added,
+      stats = stats, txn = txn)
+    failpoint("committed")
+    if (!keepReplaced) replaced.foreach { r => // GC, best-effort
+      try fs.delete(new Path(sink, r), false)
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+    gen
   }
 
   /** EXPLICIT maintenance: delete data files on disk that NO retained
@@ -1814,10 +1926,9 @@ object CommitLog {
   private[graft] def ensureSnapshotAt(fs: FileSystem, sink: Path)
   : (Long, Manifest) =
     latestSnapshot(fs, sink).getOrElse {
-      val files = listDataFiles(fs, sink)
       // generation 0 records nothing but the listed files
-      try (commitNext(fs, sink, -1L, files),
-        Manifest(files, Map.empty, Map.empty, Map.empty))
+      val m = listedManifest(fs, sink)
+      try (commitNext(fs, sink, -1L, m.files), m)
       catch {
         case _: CommitConflictException => latestSnapshot(fs, sink).get
       }

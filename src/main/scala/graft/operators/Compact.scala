@@ -73,7 +73,6 @@ object Compact {
     // dir INSIDE the sink (where the swap would destroy it)
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(hPath.getParent, hPath.getName + "__compact_tmp")
     if (!fs.exists(hPath)) return (0L, 0L)
 
     // bootstrap gen 0 / read the latest manifest. Everything below
@@ -146,62 +145,39 @@ object Compact {
     val stageCols = partitionCols ++
       bucketSpec.map(_ => Bucketing.StageCol)
 
-    if (fs.exists(tmp)) fs.delete(tmp, true) // stale tmp from a failed WRITE
-    if (partitionCols.nonEmpty) {
-      // read every partition column as STRING via an explicit schema:
-      // directory names round-trip verbatim (no int re-inference)
-      val dataSchema = spark.read
-        .parquet(before.head.getPath.toString).schema
-      val readSchema = StructType(dataSchema.fields ++
-        partitionCols.map(StructField(_, StringType)))
-      graft.io.Sources.internalWriter(
-        routed(spark.read.schema(readSchema)
-            .option("basePath", hPath.toString)
-            .parquet(liveAbs: _*))
-          // one task per LEAF (partition tuple, bucket) → one file per
-          // leaf (a partition larger than targetBytes stays one file
-          // here; a finer split would hash-salt within the partition)
-          .repartition(stageCols.map(col): _*))
-        .partitionBy(stageCols: _*).parquet(tmp.toString)
-    } else if (bucketSpec.isDefined) {
-      graft.io.Sources.internalWriter(
-        routed(spark.read.parquet(liveAbs: _*))
-          .repartition(col(Bucketing.StageCol)))
-        .partitionBy(Bucketing.StageCol).parquet(tmp.toString)
-    } else {
-      graft.io.Sources.internalWriter(
-        spark.read.parquet(liveAbs: _*)
-          .repartition(targetFiles.toInt)).parquet(tmp.toString)
-    }
-    // add → COMMIT → delete: move the compacted files in (partition
-    // directories preserved, names are fresh write UUIDs), commit the
-    // new generation, then GC every pre-compaction file
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel0 = CommitLog.relativize(fs, tmp, f.toString)
-        val rel =
-          if (bucketSpec.isDefined) Bucketing.stripStageDir(rel0)
-          else rel0
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"compaction: could not move $f into $dest")
-        added += rel
+    // add → COMMIT → delete: the compacted files move in (partition
+    // directories preserved, bucket ids folded into fresh names), the
+    // new generation commits, then every pre-compaction file is GC'd
+    val newFiles = CommitLog.stageIn(fs, hPath, "compact") { tmp =>
+      if (partitionCols.nonEmpty) {
+        // read every partition column as STRING via an explicit schema:
+        // directory names round-trip verbatim (no int re-inference)
+        val dataSchema = spark.read
+          .parquet(before.head.getPath.toString).schema
+        val readSchema = StructType(dataSchema.fields ++
+          partitionCols.map(StructField(_, StringType)))
+        graft.io.Sources.internalWriter(
+          routed(spark.read.schema(readSchema)
+              .option("basePath", hPath.toString)
+              .parquet(liveAbs: _*))
+            // one task per LEAF (partition tuple, bucket) → one file per
+            // leaf (a partition larger than targetBytes stays one file
+            // here; a finer split would hash-salt within the partition)
+            .repartition(stageCols.map(col): _*))
+          .partitionBy(stageCols: _*).parquet(tmp.toString)
+      } else if (bucketSpec.isDefined) {
+        graft.io.Sources.internalWriter(
+          routed(spark.read.parquet(liveAbs: _*))
+            .repartition(col(Bucketing.StageCol)))
+          .partitionBy(Bucketing.StageCol).parquet(tmp.toString)
+      } else {
+        graft.io.Sources.internalWriter(
+          spark.read.parquet(liveAbs: _*)
+            .repartition(targetFiles.toInt)).parquet(tmp.toString)
       }
     }
-    failpoint("added")
-    val newFiles = added.result()
-    CommitLog.commitNext(fs, hPath, baseGen, newFiles)
-    failpoint("committed")
-    if (!keepReplaced) live.foreach { r => // GC, best-effort
-      try fs.delete(new Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
+    CommitLog.swap(fs, hPath, baseGen, live, live, newFiles, failpoint,
+      keepReplaced)
     (before.size, newFiles.size)
   }
 
@@ -252,8 +228,6 @@ object Compact {
       Some(assigned))
     CommitLog.requireNoColmaps(m.colmaps, m.coltypes,
       "compactByPlan", Some(assigned))
-    val tmp = new Path(hPath.getParent, hPath.getName + "__plan_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // keyed by URI PATH (no scheme/authority): `_metadata.file_path`
     // spells the scheme differently across filesystems (file:/ vs
     // file:///) and a raw-string key would silently never match
@@ -275,56 +249,30 @@ object Compact {
       // disagrees with the plan keys.
       val planDF = absPlan.toSeq.toDF("__plan_path", "__plan_bin")
       val pathRe = "^(?:[A-Za-z][A-Za-z0-9+.-]*:(?://[^/]*)?)?(/.*)$"
-      spark.read.option("basePath", hPath.toString)
-        .parquet(assigned.map(r => new Path(hPath, r).toString): _*)
-        .withColumn("__norm",
-          regexp_extract(col("_metadata.file_path"), pathRe, 1))
-        .join(broadcast(planDF), col("__norm") === col("__plan_path"),
-          "left")
-        .withColumn("__bin",
-          when(col("__plan_bin").isNotNull, col("__plan_bin"))
-            .otherwise(raise_error(concat(
-              lit("compactByPlan: scanned file not in plan after " +
-                "path normalization: "), col("__norm")))))
-        .drop("__norm", "__plan_path", "__plan_bin")
-        .drop(collapseCols: _*)
-        .repartition(col("__bin"))
-        .write.option(
-          "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy(partitionCol, "__bin").parquet(tmp.toString)
-      // add → COMMIT → delete: move each bin's single file into its
-      // partition directory (the __bin level is planning scaffolding)
-      val added = Seq.newBuilder[String]
-      val it = fs.listFiles(tmp, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) {
-          val rel = CommitLog.relativize(fs, tmp, f.toString)
-          val segs = rel.split('/')
-          val binSeg = segs.find(_.startsWith("__bin="))
-            .getOrElse(throw new IllegalStateException(
-              s"compacted file $rel lost its __bin level"))
-          val binVal = binSeg.stripPrefix("__bin=")
-          val outRel = (segs.filterNot(_.startsWith("__bin="))
-            .dropRight(1) :+ s"$binVal-${f.getName}").mkString("/")
-          val dest = new Path(hPath, outRel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(f, dest))
-            throw new java.io.IOException(
-              s"plan compaction: could not move $f into $dest")
-          added += outRel
-        }
+      // add → COMMIT → delete: each bin's single file moves into its
+      // partition directory (the __bin level is planning scaffolding,
+      // folded into the file name by the move-in)
+      val newFiles = CommitLog.stageIn(fs, hPath, "plan") { tmp =>
+        spark.read.option("basePath", hPath.toString)
+          .parquet(assigned.map(r => new Path(hPath, r).toString): _*)
+          .withColumn("__norm",
+            regexp_extract(col("_metadata.file_path"), pathRe, 1))
+          .join(broadcast(planDF), col("__norm") === col("__plan_path"),
+            "left")
+          .withColumn("__bin",
+            when(col("__plan_bin").isNotNull, col("__plan_bin"))
+              .otherwise(raise_error(concat(
+                lit("compactByPlan: scanned file not in plan after " +
+                  "path normalization: "), col("__norm")))))
+          .drop("__norm", "__plan_path", "__plan_bin")
+          .drop(collapseCols: _*)
+          .repartition(col("__bin"))
+          .write.option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .partitionBy(partitionCol, "__bin").parquet(tmp.toString)
       }
-      failpoint("added")
-      val newFiles = added.result()
-      CommitLog.commitNext(fs, hPath, baseGen,
-        live.diff(assigned) ++ newFiles)
-      failpoint("committed")
-      assigned.foreach { r => // GC, best-effort
-        try fs.delete(new Path(hPath, r), false)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      fs.delete(tmp, true)
+      CommitLog.swap(fs, hPath, baseGen, live, assigned, newFiles,
+        failpoint)
       (assigned.size.toLong, newFiles.size.toLong)
     }
   }

@@ -364,34 +364,19 @@ object DeleteVectors {
           dvShardRows)
       }
     // append every update row as fresh files, staged then moved in
-    val tmp = new Path(hPath.getParent, hPath.getName + "__mor_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    partitionCol match {
-      case Some(p) => graft.io.Sources.internalWriter(
-          conformed.repartition(col(p)))
-        .partitionBy(p).parquet(tmp.toString)
-      // flat appends: file count ∝ update bytes, never task count
-      // (Sources.sizedForWrite — guide §2.2/§6)
-      case None => graft.io.Sources.internalWriter(
-          graft.io.Sources.sizedForWrite(conformed))
-        .parquet(tmp.toString)
-    }
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"mergeOnRead: could not move $f into $dest")
-        added += rel
+    val newFiles = CommitLog.stageIn(fs, hPath, "mor") { tmp =>
+      partitionCol match {
+        case Some(p) => graft.io.Sources.internalWriter(
+            conformed.repartition(col(p)))
+          .partitionBy(p).parquet(tmp.toString)
+        // flat appends: file count ∝ update bytes, never task count
+        // (Sources.sizedForWrite — guide §2.2/§6)
+        case None => graft.io.Sources.internalWriter(
+            graft.io.Sources.sizedForWrite(conformed))
+          .parquet(tmp.toString)
       }
     }
     failpoint("staged")
-    val newFiles = added.result()
     // commit with bounded in-place rebase: the appended files are
     // fresh names invisible to every other writer, so they ALWAYS
     // commute at the file level; the DV marks commute iff the winner
@@ -459,7 +444,6 @@ object DeleteVectors {
       }
     }
     failpoint("committed")
-    fs.delete(tmp, true)
     (nMarked, updates.count())
   }
 
@@ -542,16 +526,8 @@ object DeleteVectors {
     // move staged inserts in preserving hive directories, then one
     // commit (crash between move and commit leaves debris files no
     // manifest references — vacuum-reclaimable, never visible)
-    val added = insertRels.map { r =>
-      val rel = r.stripPrefix("inserts/")
-      val dest = new Path(hPath, rel)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(new Path(staging, r), dest))
-        throw new java.io.IOException(
-          s"row-level SQL write: could not move ${new Path(staging, r)
-            } into $dest")
-      rel
-    }
+    val added = CommitLog.moveIn(fs, new Path(staging, "inserts"), hPath,
+      insertRels.map(_.stripPrefix("inserts/")))
     // BRANCH DML (write-audit-publish: UPDATE/MERGE/DELETE patch the
     // staged batch ON the branch, main is untouched until
     // fast_forward): one CAS commit onto the branch chain — terminal
@@ -636,8 +612,6 @@ object DeleteVectors {
     // (and clears their DVs in the same pass)
     CommitLog.requireNoColmaps(m.colmaps, m.coltypes,
       "applyDeletes", Some(targets))
-    val tmp = new Path(hPath.getParent, hPath.getName + "__dv_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // partition columns, from the rel-path layout (all live files of a
     // partitioned sink share the same k=v directory levels)
     val partCols = targets.head.split('/').dropRight(1)
@@ -658,42 +632,21 @@ object DeleteVectors {
       .join(dv, col("__rel") === col("__dv_file") &&
         col("__pos") === col("__dv_pos"), "left_anti")
       .drop("__rel", "__pos")
-    if (partCols.nonEmpty)
-      graft.io.Sources.internalWriter(
-          kept.repartition(partCols.map(col).toIndexedSeq: _*))
-        .partitionBy(partCols.toIndexedSeq: _*)
-        .parquet(tmp.toString)
-    // flat rewrite: file count ∝ surviving bytes, never task count
-    // (Sources.sizedForWrite — guide §2.2/§6)
-    else graft.io.Sources.internalWriter(
-        graft.io.Sources.sizedForWrite(kept)).parquet(tmp.toString)
-    // add → COMMIT → delete, exactly the Compact swap
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"applyDeletes: could not move $f into $dest")
-        added += rel
-      }
+    // add → COMMIT → delete: the targets leave the manifest, and
+    // their DV records (and only theirs) drop with them
+    val newFiles = CommitLog.stageIn(fs, hPath, "dv") { tmp =>
+      if (partCols.nonEmpty)
+        graft.io.Sources.internalWriter(
+            kept.repartition(partCols.map(col).toIndexedSeq: _*))
+          .partitionBy(partCols.toIndexedSeq: _*)
+          .parquet(tmp.toString)
+      // flat rewrite: file count ∝ surviving bytes, never task count
+      // (Sources.sizedForWrite — guide §2.2/§6)
+      else graft.io.Sources.internalWriter(
+          graft.io.Sources.sizedForWrite(kept)).parquet(tmp.toString)
     }
-    failpoint("added")
-    val newFiles = added.result()
-    // targets leave the manifest → their DV records (and only theirs)
-    // drop with them; no explicit dv map needed
-    CommitLog.commitNext(fs, hPath, baseGen,
-      live.diff(targets) ++ newFiles)
-    failpoint("committed")
-    targets.foreach { r => // GC, best-effort
-      try fs.delete(new Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
+    CommitLog.swap(fs, hPath, baseGen, live, targets, newFiles,
+      failpoint)
     (targets.length.toLong, newFiles.length.toLong)
   }
 }

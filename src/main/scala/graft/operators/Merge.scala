@@ -243,10 +243,8 @@ object Merge {
     val nInserted = batch.count() - nUpdated
 
     // 3. rewrite = touched files' unmatched rows + matched payloads;
-    // inserts ride the same write. Written to a scratch dir first so a
-    // failed job can't leave partial part-files inside the sink.
-    val tmp = new Path(hPath.getParent, hPath.getName + "__merge_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    // inserts ride the same write. Staged first so a failed job can't
+    // leave partial part-files inside the sink.
     val rewritten =
       if (touched.isEmpty) inserts
       else touchedScan(spark, hPath, touchedRel, cms,
@@ -256,55 +254,26 @@ object Merge {
         // batch's new columns
         .unionByName(matched, allowMissingColumns = allowSchemaEvolution)
         .unionByName(inserts, allowMissingColumns = allowSchemaEvolution)
-    if (nUpdated + nInserted > 0) {
-      writeRewrite(rewritten, tmp, partColsOf(live))
-      swapIn(fs, hPath, tmp, baseGen, live, touchedRel, failpoint,
-        keepReplaced)
-    }
+    if (nUpdated + nInserted > 0)
+      rewriteIn(fs, hPath, "merge", rewritten, baseGen, live,
+        touchedRel, failpoint, keepReplaced)
     MergeStats(live.length.toLong, touched.length.toLong,
       nUpdated, nInserted)
     } finally batch.unpersist(blocking = false)
   }
 
-  /** The shared add → COMMIT → delete swap: move `tmp`'s part-files
-    * into the sink under their (unique) names, commit the next
-    * generation (live minus `touchedRel` plus the moved files) in ONE
-    * atomic manifest rename, then GC the replaced originals (pure
-    * garbage collection — the committed generation never references
-    * them; skipped when `keepReplaced`, which preserves older
-    * generations for [[CommitLog.readAt]] time travel). `failpoint`
-    * fires after the adds ("added") and after the commit
-    * ("committed") so CommitProtocolSpec can kill the swap at both
-    * windows. */
-  private def swapIn(fs: org.apache.hadoop.fs.FileSystem, hPath: Path,
-                     tmp: Path, baseGen: Long, live: Seq[String],
-                     touchedRel: Seq[String],
-                     failpoint: String => Unit,
-                     keepReplaced: Boolean = false,
-                     txn: Option[(String, Long)] = None): Unit = {
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true) // recursive: partition dirs too
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"swap: could not move $f into $dest")
-        added += rel
-      }
-    }
-    failpoint("added")
-    CommitLog.commitNext(fs, hPath, baseGen,
-      live.diff(touchedRel) ++ added.result(), txn = txn)
-    failpoint("committed")
-    if (!keepReplaced) touchedRel.foreach { r => // GC, best-effort
-      try fs.delete(new Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
+  /** Stage `rewritten` in the sink's layout, move it in and swap it
+    * for `touchedRel` ([[CommitLog.stageIn]] → [[CommitLog.swap]]). */
+  private def rewriteIn(fs: org.apache.hadoop.fs.FileSystem, hPath: Path,
+                        tag: String, rewritten: DataFrame, baseGen: Long,
+                        live: Seq[String], touchedRel: Seq[String],
+                        failpoint: String => Unit,
+                        keepReplaced: Boolean = false,
+                        txn: Option[(String, Long)] = None): Unit = {
+    val added = CommitLog.stageIn(fs, hPath, tag)(
+      writeRewrite(rewritten, _, partColsOf(live)))
+    CommitLog.swap(fs, hPath, baseGen, live, touchedRel, added,
+      failpoint, keepReplaced, txn)
   }
 
   /** Erasure outcome: live files in the sink before, files rewritten,
@@ -374,10 +343,8 @@ object Merge {
       // touched-file count jobs (count(full) − count(kept) re-read
       // every touched column twice; guide §1.2 / §2.3 project early)
       deleted = touchedRows.join(batch, keyCols, "left_semi").count()
-      val tmp = new Path(hPath.getParent, hPath.getName + "__erase_tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      writeRewrite(kept, tmp, partColsOf(live))
-      swapIn(fs, hPath, tmp, baseGen, live, touchedRel, failpoint)
+      rewriteIn(fs, hPath, "erase", kept, baseGen, live, touchedRel,
+        failpoint)
     }
     EraseStats(live.length.toLong, touched.length.toLong, deleted)
     } finally batch.unpersist(blocking = false)
@@ -401,7 +368,7 @@ object Merge {
     * touched files (a key matching ANY sink row matches in a touched
     * file, so update-vs-insert and delete targeting all derive from
     * the touched-file read alone), only those files rewrite, and the
-    * swap is the [[swapIn]] add → COMMIT → delete under [[CommitLog]]
+    * swap is the [[CommitLog.swap]] add → COMMIT → delete
     * (crash at any point leaves a manifest-resolving reader
     * exactly-once).
     *
@@ -508,19 +475,16 @@ object Merge {
       if (touched.isEmpty) 0L
       else touchedKeys.join(delKeys, keyCols, "left_semi").count()
 
-    val tmp = new Path(hPath.getParent, hPath.getName + "__cdc_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     val rewritten =
       if (touched.isEmpty) inserts
       else touchedRows
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         .unionByName(matched)
         .unionByName(inserts)
-    if (nUpdated + nInserted + nDeleted > 0) {
-      writeRewrite(rewritten, tmp, partColsOf(live))
-      swapIn(fs, hPath, tmp, baseGen, live, touchedRel, failpoint,
-        keepReplaced, txn)
-    } else txn.foreach { case (app, v) =>
+    if (nUpdated + nInserted + nDeleted > 0)
+      rewriteIn(fs, hPath, "cdc", rewritten, baseGen, live, touchedRel,
+        failpoint, keepReplaced, txn)
+    else txn.foreach { case (app, v) =>
       // no-effect batch still advances the idempotence ledger — the
       // exactly-once contract ([[Replicate]]) records "window applied"
       // even when the window nets to nothing; a no-file blind append,

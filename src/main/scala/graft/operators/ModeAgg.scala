@@ -43,19 +43,6 @@ object ModeAgg {
         col(s"__m.$valueCol").as(valueCol)): _*)
   }
 
-  /** Same, but keeps the winning frequency too. */
-  def modeWithFreq(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                   freqName: String = "freq"): DataFrame = {
-    val counted = df.groupBy((groupCols :+ valueCol).map(col): _*)
-      .agg(count(lit(1)).as(freqName))
-    val w = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(col(freqName).desc, col(valueCol).desc)
-    counted
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
   /** Generic deterministic top-k per group (O3 generalized): rank rows by
     * `ordering` within each group, keep the first k. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],

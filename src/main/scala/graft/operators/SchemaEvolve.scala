@@ -513,44 +513,22 @@ object SchemaEvolve {
       val l = cms.getOrElse(targets.head, Map.empty).getOrElse(p, p)
       if (l.isEmpty) None else Some(l)
     }
-    val tmp = new Path(hPath.getParent, hPath.getName + "__norm_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (partCols.nonEmpty)
-      graft.io.Sources.internalWriter(
-          mapped.repartition(partCols.map(col).toIndexedSeq: _*))
-        .partitionBy(partCols.toIndexedSeq: _*)
+    // add → COMMIT → delete: the targets leave the manifest, and their
+    // colmap AND dv records drop with them
+    val newFiles = CommitLog.stageIn(fs, hPath, "norm") { tmp =>
+      if (partCols.nonEmpty)
+        graft.io.Sources.internalWriter(
+            mapped.repartition(partCols.map(col).toIndexedSeq: _*))
+          .partitionBy(partCols.toIndexedSeq: _*)
+          .parquet(tmp.toString)
+      // flat rewrite: file count ∝ target bytes, never task count
+      // (Sources.sizedForWrite — guide §2.2/§6)
+      else graft.io.Sources.internalWriter(
+          graft.io.Sources.sizedForWrite(mapped))
         .parquet(tmp.toString)
-    // flat rewrite: file count ∝ target bytes, never task count
-    // (Sources.sizedForWrite — guide §2.2/§6)
-    else graft.io.Sources.internalWriter(
-        graft.io.Sources.sizedForWrite(mapped))
-      .parquet(tmp.toString)
-    // add → COMMIT → delete, the Compact/applyDeletes swap
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"normalize: could not move $f into $dest")
-        added += rel
-      }
     }
-    failpoint("added")
-    val newFiles = added.result()
-    // targets leave → their colmap AND dv records drop with them
-    CommitLog.commitNext(fs, hPath, baseGen,
-      live.diff(targets) ++ newFiles)
-    failpoint("committed")
-    targets.foreach { r => // GC, best-effort
-      try fs.delete(new Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
+    CommitLog.swap(fs, hPath, baseGen, live, targets, newFiles,
+      failpoint)
     (targets.length.toLong, (live.length - targets.length +
       newFiles.length).toLong)
   }
@@ -599,58 +577,29 @@ object SchemaEvolve {
     import spark.implicits._
     val planDF = absPlan.toSeq.toDF("__plan_path", "__plan_bin")
     val pathRe = "^(?:[A-Za-z][A-Za-z0-9+.-]*:(?://[^/]*)?)?(/.*)$"
-    val tmp = new Path(hPath.getParent, hPath.getName + "__nc_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    scan
-      .withColumn("__norm",
-        regexp_extract(CommitLog.decodeScanPathCol(col("__file_path")),
-          pathRe, 1))
-      .join(broadcast(planDF), col("__norm") === col("__plan_path"),
-        "left")
-      .withColumn("__bin",
-        when(col("__plan_bin").isNotNull, col("__plan_bin"))
-          .otherwise(raise_error(concat(
-            lit("normalizeCompact: scanned file not in plan after " +
-              "path normalization: "), col("__norm")))))
-      .drop("__norm", "__plan_path", "__plan_bin",
-        "__file_path", "__row_index")
-      .repartition(col("__bin"))
-      .write.partitionBy(partitionCol.toSeq :+ "__bin": _*)
-      .parquet(tmp.toString)
-    // add → COMMIT → delete; the __bin level is planning scaffolding
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val segs = rel.split('/')
-        val binVal = segs.find(_.startsWith("__bin="))
-          .getOrElse(throw new IllegalStateException(
-            s"normalizeCompact output $rel lost its __bin level"))
-          .stripPrefix("__bin=")
-        val outRel = (segs.filterNot(_.startsWith("__bin="))
-          .dropRight(1) :+ s"$binVal-${f.getName}").mkString("/")
-        val dest = new Path(hPath, outRel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"normalizeCompact: could not move $f into $dest")
-        added += outRel
-      }
+    // add → COMMIT → delete: the __bin level is planning scaffolding
+    // the move-in folds into the file name; assigned files leave with
+    // their colmap/coltype/dv/stats records in the same atomic publish
+    val newFiles = CommitLog.stageIn(fs, hPath, "nc") { tmp =>
+      scan
+        .withColumn("__norm",
+          regexp_extract(CommitLog.decodeScanPathCol(col("__file_path")),
+            pathRe, 1))
+        .join(broadcast(planDF), col("__norm") === col("__plan_path"),
+          "left")
+        .withColumn("__bin",
+          when(col("__plan_bin").isNotNull, col("__plan_bin"))
+            .otherwise(raise_error(concat(
+              lit("normalizeCompact: scanned file not in plan after " +
+                "path normalization: "), col("__norm")))))
+        .drop("__norm", "__plan_path", "__plan_bin",
+          "__file_path", "__row_index")
+        .repartition(col("__bin"))
+        .write.partitionBy(partitionCol.toSeq :+ "__bin": _*)
+        .parquet(tmp.toString)
     }
-    failpoint("added")
-    val newFiles = added.result()
-    // assigned files leave → their colmap/coltype/dv/stats records
-    // drop with them in the same atomic publish
-    CommitLog.commitNext(fs, hPath, baseGen,
-      live.diff(assigned) ++ newFiles)
-    failpoint("committed")
-    assigned.foreach { r => // GC, best-effort
-      try fs.delete(new Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
+    CommitLog.swap(fs, hPath, baseGen, live, assigned, newFiles,
+      failpoint)
     (assigned.size.toLong, newFiles.size.toLong +
       (live.length - assigned.length))
   }

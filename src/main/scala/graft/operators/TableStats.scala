@@ -235,36 +235,46 @@ object TableStats {
         !cols.forall(snap.stats.getOrElse(f, Map.empty).contains)
     }
     if (targets.isEmpty) return 0L
-    val prefix = fs.makeQualified(hPath).toUri.getPath + "/"
-    // scan-derived paths are URI-encoded — CommitLog.relPathCol
-    // decodes them back to the manifest's raw names, or the stats
-    // would key under e.g. 'p=NOT%20SPECIFIED/…' and be silently
-    // dropped by the commit's carry-forward filter
-    def relCol(fp: Column): Column = CommitLog.relPathCol(prefix, fp)
     val (mappedT, plainT) = targets.partition(mapped)
-    val empty = Map.empty[String, Map[String, CommitLog.ColStats]]
-    val plainStats =
-      if (plainT.isEmpty) empty
-      else boundsOf(
-        spark.read.option("mergeSchema", "true")
-          .option("basePath", hPath.toString)
-          .parquet(plainT.map(r => new Path(hPath, r).toString): _*)
-          .withColumn("__f", relCol(col("_metadata.file_path"))),
-        cols)
-    val mappedStats =
-      if (mappedT.isEmpty) empty
+    val mappedStats: Map[String, Map[String, CommitLog.ColStats]] =
+      if (mappedT.isEmpty) Map.empty
       else boundsOf(
         CommitLog.mappedScan(spark, hPath, mappedT, cms,
             identity = true, coltypes = cts)
-          .withColumn("__f", relCol(col("__file_path")))
+          .withColumn("__f", relCol(fs, hPath, col("__file_path")))
           .drop("__file_path", "__row_index"),
         cols)
-    val stats = plainStats ++ mappedStats
+    val stats = plainFileStats(spark, fs, hPath, plainT, cols) ++
+      mappedStats
     require(stats.nonEmpty,
       s"analyze: none of $cols is a stats-capable column of $path")
     CommitLog.commitNext(fs, hPath, gen, live, stats = stats)
     targets.length.toLong
   }
+
+  /** Scan-derived paths are URI-encoded — [[CommitLog.relPathCol]]
+    * decodes them back to the manifest's raw names, or the stats
+    * would key under e.g. 'p=NOT%20SPECIFIED/…' and be silently
+    * dropped by the commit's carry-forward filter. */
+  private def relCol(fs: org.apache.hadoop.fs.FileSystem, hPath: Path,
+                     fp: Column): Column =
+    CommitLog.relPathCol(fs.makeQualified(hPath).toUri.getPath + "/", fp)
+
+  /** Per-file bounds of `cols` over sink files with no column mapping,
+    * keyed by sink-relative name — one grouped pass over exactly
+    * `files`. Empty when `files` is. */
+  private[graft] def plainFileStats(spark: SparkSession,
+                                    fs: org.apache.hadoop.fs.FileSystem,
+                                    hPath: Path, files: Seq[String],
+                                    cols: Seq[String])
+  : Map[String, Map[String, CommitLog.ColStats]] =
+    if (files.isEmpty) Map.empty
+    else boundsOf(
+      spark.read.option("mergeSchema", "true")
+        .option("basePath", hPath.toString)
+        .parquet(files.map(r => new Path(hPath, r).toString): _*)
+        .withColumn("__f", relCol(fs, hPath, col("_metadata.file_path"))),
+      cols)
 
   /** Encode a USER value into the recorded domain, None when the
     * value's type cannot map into it (then the file is simply not
@@ -507,8 +517,7 @@ object TableStats {
   def pruneFiles(fs: org.apache.hadoop.fs.FileSystem, sink: Path,
                  filters: Seq[sources.Filter])
   : (Seq[String], Seq[String]) =
-    pruneSnapshot(fs, sink, CommitLog.ensureSnapshotAt(fs, sink)._2,
-      filters)
+    pruneSnapshot(fs, sink, CommitLog.readView(fs, sink), filters)
 
   /** [[pruneFiles]] over one snapshot's manifest: the free
     * (manifest-only) prunes, then the Bloom tier. */
@@ -722,7 +731,7 @@ object TableStats {
                 predicate: Column): DataFrame = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, m) = CommitLog.ensureSnapshotAt(fs, hPath)
+    val m = CommitLog.readView(fs, hPath)
     val (keep, _) = pruneSnapshot(fs, hPath, m, filters)
     if (keep.isEmpty)
       return CommitLog.readSnapshot(spark, path, fs, m).filter(predicate)

@@ -284,49 +284,27 @@ object Upsert {
     }
     val (baseGen, live) = CommitLog.ensureLoggedAt(fs, hPath)
     // stage the batch in the sink's exact layout
-    val tmp = new org.apache.hadoop.fs.Path(hPath.getParent,
-      hPath.getName + "__replace_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val watch = watchWrite(spark, tmp.toString)
-    deduped.repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(tmp.toString)
-    var n = watch.rows()
+    var n = -1L
+    val newFiles = CommitLog.stageIn(fs, hPath, "replace") { tmp =>
+      val watch = watchWrite(spark, tmp.toString)
+      deduped.repartition(col(partitionCol))
+        .write.partitionBy(partitionCol).parquet(tmp.toString)
+      n = watch.rows()
+    }
     if (n < 0) {
-      System.err.println(s"[replace] write metrics for $tmp did not " +
+      System.err.println(s"[replace] write metrics for $path did not " +
         "arrive — falling back to the deduped batch count")
       n = deduped.count()
     }
     // add → COMMIT → delete
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = CommitLog.relativize(fs, tmp, f.toString)
-        val dest = new org.apache.hadoop.fs.Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"replace: could not move $f into $dest")
-        added += rel
-      }
-    }
-    val newFiles = added.result()
     def dirOf(rel: String): String = {
       val i = rel.lastIndexOf('/')
       if (i < 0) "" else rel.substring(0, i)
     }
     val touchedDirs = newFiles.map(dirOf).toSet
-    val replaced = live.filter(r => touchedDirs.contains(dirOf(r)))
-    failpoint("added")
-    CommitLog.commitNext(fs, hPath, baseGen,
-      live.diff(replaced) ++ newFiles)
-    failpoint("committed")
-    replaced.foreach { r => // GC of unreferenced files, best-effort
-      try fs.delete(new org.apache.hadoop.fs.Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fs.delete(tmp, true)
+    CommitLog.swap(fs, hPath, baseGen, live,
+      live.filter(r => touchedDirs.contains(dirOf(r))), newFiles,
+      failpoint)
     n
   }
 
@@ -370,13 +348,9 @@ object Upsert {
       s"choose returned unknown partition values: ${drop.diff(values.toSet)}")
     val dropped = live.filter(r => valueOf(r).exists(drop))
     if (dropped.isEmpty) return (0L, 0L)
-    failpoint("resolved")
-    CommitLog.commitNext(fs, hPath, baseGen, live.diff(dropped))
-    failpoint("committed")
-    dropped.foreach { r => // GC, best-effort
-      try fs.delete(new org.apache.hadoop.fs.Path(hPath, r), false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // the swap's pre-commit point is this verb's "resolved"
+    CommitLog.swap(fs, hPath, baseGen, live, dropped, Nil,
+      p => failpoint(if (p == "added") "resolved" else p))
     drop.foreach { v => // remove now-empty partition dirs, best-effort
       val d = new org.apache.hadoop.fs.Path(hPath, prefix + v)
       try { if (fs.exists(d) && fs.listStatus(d).isEmpty)
@@ -534,48 +508,33 @@ object Upsert {
     // appended-row count from the write command's own committed-task
     // metrics — zero extra jobs; a footer count over exactly the new
     // files is the fallback should the listener event not arrive.
-    // Logged sinks write to a scratch dir (unique per attempt —
-    // concurrent upserts must not collide in staging) and move the
-    // EXACT staged names in; unlogged sinks append directly.
-    val scratch = snapBefore.map { _ =>
-      new org.apache.hadoop.fs.Path(hPath.getParent,
-        hPath.getName + "__append_tmp-" +
-          java.util.UUID.randomUUID().toString)
-    }
-    val writeTarget = scratch.map(_.toString).getOrElse(path)
-    val watch = watchWrite(spark, writeTarget)
-    partitionCol match {
-      case Some(p) => graft.io.Sources.internalWriter(
-          delta.repartition(col(p)))
-        .mode("append").partitionBy(p).parquet(writeTarget)
-      // flat appends: file count ∝ delta bytes, never task count
-      // (Sources.sizedForWrite — guide §2.2/§6)
-      case None => graft.io.Sources.internalWriter(
-          graft.io.Sources.sizedForWrite(delta))
-        .mode("append").parquet(writeTarget)
-    }
-    var n = watch.rows()
-    snapBefore.foreach { case (baseGen, mBase) =>
-      val tmp = scratch.get
-      // move the staged files in under their exact (globally-unique
-      // part-<uuid>) names, commit exactly that list — no listing
-      // diff, so a concurrent rewriter's in-flight move-ins can never
-      // be adopted into this append's manifest
-      val added = Seq.newBuilder[String]
-      val it = fs.listFiles(tmp, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) {
-          val rel = CommitLog.relativize(fs, tmp, f.toString)
-          val dest = new org.apache.hadoop.fs.Path(hPath, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(f, dest))
-            throw new java.io.IOException(
-              s"upsertParquet: could not move $f into $dest")
-          added += rel
-        }
+    // Logged sinks stage the append ([[CommitLog.stageIn]] — scratch
+    // unique per attempt, so concurrent upserts never collide in
+    // staging) and commit exactly the moved-in names; unlogged sinks
+    // append directly.
+    var n = -1L
+    def append(target: String): Unit = {
+      val watch = watchWrite(spark, target)
+      partitionCol match {
+        case Some(p) => graft.io.Sources.internalWriter(
+            delta.repartition(col(p)))
+          .mode("append").partitionBy(p).parquet(target)
+        // flat appends: file count ∝ delta bytes, never task count
+        // (Sources.sizedForWrite — guide §2.2/§6)
+        case None => graft.io.Sources.internalWriter(
+            graft.io.Sources.sizedForWrite(delta))
+          .mode("append").parquet(target)
       }
-      val newFiles = added.result()
+      n = watch.rows()
+    }
+    if (snapBefore.isEmpty) append(path)
+    snapBefore.foreach { case (baseGen, mBase) =>
+      // the staged files keep their exact (globally-unique
+      // part-<uuid>) names and the commit lists exactly them — no
+      // listing diff, so a concurrent rewriter's in-flight move-ins
+      // can never be adopted into this append's manifest
+      val newFiles = CommitLog.stageIn(fs, hPath, "append")(t =>
+        append(t.toString))
       if (n < 0) {
         System.err.println(s"[upsert] write metrics for $path did " +
           "not arrive — falling back to parquet footer counts")
@@ -657,7 +616,6 @@ object Upsert {
           }
         }
       }
-      fs.delete(tmp, true)
     }
     if (n < 0 && snapBefore.isEmpty) {
       System.err.println(s"[upsert] write metrics for $path did not " +

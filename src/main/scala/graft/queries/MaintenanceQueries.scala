@@ -1882,16 +1882,11 @@ object MaintenanceQueries {
       orders.filter(col("k") % 100 === 1).coalesce(1).write.parquet(sink)
       CommitLog.ensureLoggedAt(fs, hPath) // gen 0: bootstrap
       // gen 1: logged append of a second staged file
-      val tmp = new org.apache.hadoop.fs.Path(sink + "__stage")
-      orders.filter(col("k") % 100 === 2).coalesce(1)
-        .write.parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(_.getName.endsWith(".parquet")).get
-      require(fs.rename(part, new org.apache.hadoop.fs.Path(sink,
-        part.getName)))
-      fs.delete(tmp, true)
+      val staged = CommitLog.stageIn(fs, hPath, "stage")(tmp =>
+        orders.filter(col("k") % 100 === 2).coalesce(1)
+          .write.parquet(tmp.toString))
       val (g0, live0) = CommitLog.ensureLoggedAt(fs, hPath)
-      CommitLog.commitAppend(fs, hPath, g0, live0, Seq(part.getName))
+      CommitLog.commitAppend(fs, hPath, g0, live0, staged)
       // gen 2: predicate delete marks rows in BOTH files
       DeleteVectors.deleteWhere(s, sink, col("k") % 3 === 0)
       // gen 3: constraint; gen 4: analyze; gen 5: rename

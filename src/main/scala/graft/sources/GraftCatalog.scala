@@ -699,18 +699,13 @@ private[sources] final class GraftStagedTable(
     // writer must be re-decided), exactly the truncate contract
     val (gen, rm) = CommitLog.ensureSnapshotAt(fs, real)
     val (_, sm) = CommitLog.ensureSnapshotAt(fs, staged)
-    val moved = sm.files.map { r =>
-      val dest = new Path(real, r)
-      if (fs.exists(dest))
+    sm.files.foreach { r =>
+      if (fs.exists(new Path(real, r)))
         throw new java.io.IOException(
           s"graft catalog: staged file $r collides with an existing " +
             s"file under $real")
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(new Path(staged, r), dest))
-        throw new java.io.IOException(
-          s"graft catalog: could not move staged $r into $real")
-      r
     }
+    val moved = CommitLog.moveIn(fs, staged, real, sm.files)
     // the replaced table's properties and CHECK constraints are
     // tombstoned — REPLACE re-declares the table from scratch
     val metaTomb = rm.meta.keys.map(_ -> "").toMap

@@ -1399,9 +1399,9 @@ private[graft] object GraftWriter {
     // stage → move in under fresh names → one commit; a partitioned
     // batch stages under its hive directories and moves in preserving
     // them, so the committed relative paths carry the layout the
-    // partition-value pruner and basePath discovery read back
-    val tmp = new Path(hPath.getParent, hPath.getName + "__fmt_tmp-" +
-      java.util.UUID.randomUUID().toString)
+    // partition-value pruner and basePath discovery read back; the
+    // bucket-routing stage level becomes the file-name prefix
+    // (b00003-...) — directories stay purely hive-layout
     val routed = bucketSpec match {
       case Some((bc, n)) => guarded.withColumn(
         graft.operators.Bucketing.StageCol,
@@ -1410,59 +1410,38 @@ private[graft] object GraftWriter {
     }
     val stageParts = partCols ++
       bucketSpec.map(_ => graft.operators.Bucketing.StageCol)
-    try {
-      // staged file count follows the batch's BYTES, never the leaf
-      // task count (guide §2.2/§6 — see Sources.sizedForWrite):
-      // without this a fixture-sized append staged one tiny file per
-      // scan split (≈ the core count), each billing
-      // create+fsync+rename twice plus a manifest entry. Inside the
-      // try: the sizing estimate optimizes the plan, and optimization
-      // of a local-relation batch can evaluate the CHECK assert_true
-      // inline — that refusal must unwrap to the same loud
-      // IllegalArgumentException as a task-side one.
-      val sized = graft.io.Sources.internalWriter(
-        graft.io.Sources.sizedForWrite(routed))
-      if (stageParts.nonEmpty)
-        sized.partitionBy(stageParts: _*).parquet(tmp.toString)
-      else sized.parquet(tmp.toString)
-    } catch {
-      case t: Throwable =>
-        try fs.delete(tmp, true)
-        catch { case scala.util.control.NonFatal(_) => () }
-        // surface a CHECK violation as the same loud
-        // IllegalArgumentException the pre-staging gate threw
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-          .map(x => Option(x.getMessage).getOrElse(""))
-          .find(_.contains("violates CHECK constraint"))
-          .foreach { m =>
-            val i = m.indexOf("graft write:")
-            throw new IllegalArgumentException(
-              if (i >= 0) m.substring(i) else m)
-          }
-        throw t
-    }
-    failpoint("staged")
-    val added = Seq.newBuilder[String]
-    val it = fs.listFiles(tmp, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel0 = CommitLog.relativize(fs, tmp, f.toString)
-        // the bucket-routing stage level becomes the file-name prefix
-        // (b00003-...) — directories stay purely hive-layout
-        val rel =
-          if (bucketSpec.isDefined)
-            graft.operators.Bucketing.stripStageDir(rel0)
-          else rel0
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(
-            s"graft write: could not move $f into $dest")
-        added += rel
+    val newFiles = CommitLog.stageIn(fs, hPath, "fmt") { tmp =>
+      try {
+        // staged file count follows the batch's BYTES, never the leaf
+        // task count (guide §2.2/§6 — see Sources.sizedForWrite):
+        // without this a fixture-sized append staged one tiny file per
+        // scan split (≈ the core count), each billing
+        // create+fsync+rename twice plus a manifest entry. Inside the
+        // try: the sizing estimate optimizes the plan, and optimization
+        // of a local-relation batch can evaluate the CHECK assert_true
+        // inline — that refusal must unwrap to the same loud
+        // IllegalArgumentException as a task-side one.
+        val sized = graft.io.Sources.internalWriter(
+          graft.io.Sources.sizedForWrite(routed))
+        if (stageParts.nonEmpty)
+          sized.partitionBy(stageParts: _*).parquet(tmp.toString)
+        else sized.parquet(tmp.toString)
+      } catch {
+        case t: Throwable =>
+          // surface a CHECK violation as the same loud
+          // IllegalArgumentException the pre-staging gate threw
+          Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+            .map(x => Option(x.getMessage).getOrElse(""))
+            .find(_.contains("violates CHECK constraint"))
+            .foreach { m =>
+              val i = m.indexOf("graft write:")
+              throw new IllegalArgumentException(
+                if (i >= 0) m.substring(i) else m)
+            }
+          throw t
       }
+      failpoint("staged")
     }
-    val newFiles = added.result()
     failpoint("moved")
     branchState.foreach { case (k, bmm) =>
       // branch commit: same CAS discipline on the branch's own chain;
@@ -1490,7 +1469,6 @@ private[graft] object GraftWriter {
         case None => bmm.copy(files = bmm.files ++ newFiles)
       }
       CommitLog.commitBranch(fs, hPath, branch.get, k, committed)
-      fs.delete(tmp, true)
       return
     }
     if (overwrite)
@@ -1523,7 +1501,6 @@ private[graft] object GraftWriter {
         CommitLog.commitAppend(fs, hPath, gen, live, newFiles,
           txn = txn)
     }
-    fs.delete(tmp, true)
     // opt-in stats maintenance (`option("autoAnalyze", true)`): keep
     // the table's EXISTING stats coverage current over the files this
     // write added, so appends never open a pruning hole. The catch-up

@@ -93,10 +93,6 @@ private[sources] object GraftProcedures {
     }
   }
 
-  private def counts2(a: String, b: String) = StructType(Seq(
-    StructField(a, LongType, nullable = false),
-    StructField(b, LongType, nullable = false)))
-
   private def count1(a: String) = StructType(Seq(
     StructField(a, LongType, nullable = false)))
 

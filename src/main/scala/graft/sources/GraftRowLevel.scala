@@ -229,8 +229,8 @@ private[sources] final class GraftDeltaWrite(
 
 /** One SQL statement's distributed write: tasks stream position
   * marks and insert rows straight to staged parquet (sibling
-  * `__rlo_tmp-*` directory, same move-in discipline as the format
-  * writer), the driver publishes everything in one
+  * `__rlo_tmp-*` directory), the driver moves the inserts in with
+  * [[CommitLog.moveIn]] and publishes everything in one
   * [[DeleteVectors.commitRowLevelDelta]] commit. */
 private[sources] final class GraftDeltaBatchWrite(
     state: GraftState, dataSchema: StructType, partCols: Seq[String],
@@ -238,8 +238,7 @@ private[sources] final class GraftDeltaBatchWrite(
   extends DeltaBatchWrite {
 
   private val hPath = new Path(state.path)
-  private val stagingPath = new Path(hPath.getParent,
-    hPath.getName + "__rlo_tmp-" + java.util.UUID.randomUUID().toString)
+  private val stagingPath = CommitLog.scratchDir(hPath, "rlo")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
   : DeltaWriterFactory =
@@ -508,9 +507,7 @@ private[sources] final class GraftDynamicOverwriteBatchWrite(
     PhysicalWriteInfo => PWInfo}
 
   private val hPath = new Path(path)
-  private val stagingPath = new Path(hPath.getParent,
-    hPath.getName + "__dynov_tmp-" +
-      java.util.UUID.randomUUID().toString)
+  private val stagingPath = CommitLog.scratchDir(hPath, "dynov")
 
   private def fsOf(spark: SparkSession) =
     hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -560,16 +557,8 @@ private[sources] final class GraftDynamicOverwriteBatchWrite(
       // CHECK constraints were evaluated per row inside the task
       // writers — the commit is pure file motion + one publish, the
       // staged batch is never re-read
-      val added = insertRels.map { r =>
-        val rel = r.stripPrefix("inserts/")
-        val dest = new Path(hPath, rel)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(new Path(stagingPath, r), dest))
-          throw new java.io.IOException(
-            s"dynamic overwrite: could not move ${
-              new Path(stagingPath, r)} into $dest")
-        rel
-      }
+      val added = CommitLog.moveIn(fs, new Path(stagingPath, "inserts"),
+        hPath, insertRels.map(_.stripPrefix("inserts/")))
       def leafDir(rel: String): String = {
         val i = rel.lastIndexOf('/')
         if (i < 0) "" else rel.substring(0, i + 1)

@@ -46,9 +46,7 @@ class SnapshotBudgetSpec extends SparkSpec {
         Cluster.zorderBy(spark, sink, Seq("x", "y2"), nFiles = 2)),
       "AnnIndex.build" -> listings(
         AnnIndex.build(spark, sink, numCentroids = 2, iters = 1)))
-    // zorderBy commits twice: the rewrite, then the re-analyze of the
-    // new files against the generation the rewrite published
     assert(got == Seq("analyze" -> 1L, "addCheck" -> 1L,
-      "renameColumn" -> 1L, "zorderBy" -> 2L, "AnnIndex.build" -> 1L))
+      "renameColumn" -> 1L, "zorderBy" -> 1L, "AnnIndex.build" -> 1L))
   }
 }

@@ -433,4 +433,26 @@ class StatsSpec extends SparkSpec {
       Seq(sources.StringContains("s", "01")))
     assert(kU.size == 4 && sU.isEmpty)
   }
+
+  test("reads never commit: readBand and pruneBand on a plain parquet " +
+    "directory return the unpruned rows and leave no commit log") {
+    val root = java.nio.file.Files.createTempDirectory("st_ro").toString
+    val sink = s"$root/t"
+    (0 until 3).foreach { b =>
+      (0 until 10).map(i => (b * 10L + i, s"v$b")).toDF("k", "s")
+        .coalesce(1).write.mode("append").parquet(sink)
+    }
+    val fs = fsOf(sink); val hp = new Path(sink)
+    val want = spark.read.parquet(sink).filter(col("k").between(5L, 15L))
+      .orderBy("k").collect().toSeq
+    assert(TableStats.readBand(spark, sink, "k", 5L, 15L).orderBy("k")
+      .collect().toSeq == want)
+    val (kept, skipped) = TableStats.pruneBand(fs, hp, "k", 5L, 15L)
+    assert(kept.size == 3 && skipped.isEmpty,
+      "a never-analyzed sink prunes nothing")
+    assert(!fs.exists(new Path(hp, CommitLog.LogDirName)),
+      "a read bootstrapped the commit log")
+    assert(CommitLog.latestSnapshot(fs, hp).isEmpty)
+    graft.io.Sources.deleteRecursively(root)
+  }
 }
