@@ -226,12 +226,10 @@ object AnnIndex {
         0)
     }
     // deleted rows must never be candidates
-    val dvPaths = m.dvs.values.toSeq.distinct.sorted
     val vis =
-      if (dvPaths.isEmpty) rows
+      if (m.dvs.isEmpty) rows
       else rows.join(
-        spark.read.parquet(
-            dvPaths.map(r => new Path(hPath, r).toString): _*)
+        CommitLog.dvScan(spark, hPath, m.dvs.values.toSeq)
           .select(col("file").as("__dvf"), col("pos").as("__dvp")),
         col("file") === col("__dvf") && col("pos") === col("__dvp"),
         "left_anti")

@@ -103,6 +103,18 @@ object CommitLog {
     * reader nor [[listDataFiles]] ever mistakes a DV for data. */
   val DvDirName = "_graft_dv"
 
+  /** The schema of every DV parquet: the data file (sink-relative) and
+    * the deleted row ordinal. Every DV read passes it, so no read
+    * infers it from the footers (a Spark job per read). */
+  val DvSchema = "file STRING, pos BIGINT"
+
+  /** Scan the DV parquet at `rels` (sink-relative DV files or
+    * directories) as [[DvSchema]] rows. */
+  private[graft] def dvScan(spark: SparkSession, sink: Path,
+                            rels: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema)
+      .parquet(rels.distinct.sorted.map(r => new Path(sink, r).toString): _*)
+
   /** Sidecar directory for per-(file, column) Bloom-filter indexes
     * (`#bloom` records — [[TableStats.buildBloom]]). Sidecars, not
     * manifest-inline bytes: a Bloom bitset is KBs per file, and
@@ -133,11 +145,20 @@ object CommitLog {
     * carry-forward filter then drops the record with no error. `+` is
     * literal in paths (never form-encoding), so it is protected
     * before the url_decode. Column form for executor-side derivation,
-    * String form for driver-side (collected paths). */
+    * String form for driver-side (collected paths).
+    *
+    * The column form decodes only a path that contains a `%`: the
+    * decoder rewrites nothing but `%xx` sequences and `+`, and `+` is
+    * protected, so a path without `%` decodes to itself. The guard
+    * makes the common (unescaped) path a plain column reference —
+    * the regexp + url_decode pair otherwise runs on every scanned
+    * row. */
   private[graft] def decodeScanPathCol(fp: org.apache.spark.sql
       .Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{regexp_replace, url_decode}
-    url_decode(regexp_replace(fp, "\\+", "%2B"))
+    import org.apache.spark.sql.functions.{regexp_replace, url_decode,
+      when}
+    when(fp.contains("%"), url_decode(regexp_replace(fp, "\\+", "%2B")))
+      .otherwise(fp)
   }
 
   private[graft] def decodeScanPath(s: String): String =
@@ -147,7 +168,9 @@ object CommitLog {
     * canonical way to turn `_metadata.file_path` / `__file_path` into
     * a manifest file key. Raises (instead of emitting a garbage
     * substring) when the sink prefix cannot be located after
-    * decoding. */
+    * decoding. The decode inside ([[decodeScanPathCol]]) runs only on
+    * a path with a `%`; any other path is located and cut as it
+    * scans. */
   private[graft] def relPathCol(prefix: String,
                                 fp: org.apache.spark.sql.Column)
   : org.apache.spark.sql.Column = {
@@ -210,6 +233,19 @@ object CommitLog {
       .filter(n => n.nonEmpty && n.forall(_.isDigit))
       .map(_.toLong)
       .sorted.toSeq
+  }
+
+  /** The latest committed generation for a poller that last saw
+    * `seen` (None before its first answer): when manifest `seen + 1`
+    * is absent and manifest `seen` is still there, the tip has not
+    * moved and two stats answer; otherwise the log is listed.
+    * Generations commit consecutively, so any commit after `seen`
+    * creates `seen + 1` — an idle stream poll never lists. */
+  private[graft] def latestGeneration(fs: FileSystem, sink: Path,
+                                      seen: Option[Long]): Option[Long] = {
+    def committed(g: Long) = fs.exists(new Path(logDir(sink), manifestName(g)))
+    if (seen.exists(g => !committed(g + 1) && committed(g))) seen
+    else generations(fs, sink).lastOption
   }
 
   /** Test observability: manifests opened since process start. The
@@ -1665,10 +1701,8 @@ object CommitLog {
                        df: DataFrame,
                        dvs: Map[String, String]): DataFrame = {
     if (dvs.isEmpty) return df
-    import org.apache.spark.sql.functions.{col, length, lit, locate}
-    val dv = spark.read.parquet(
-      dvs.values.toSeq.distinct.sorted
-        .map(r => new Path(sink, r).toString): _*)
+    import org.apache.spark.sql.functions.col
+    val dv = dvScan(spark, sink, dvs.values.toSeq)
       .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
     val prefix = fs.makeQualified(sink).toUri.getPath + "/"
     df.withColumn("__rel",
@@ -1799,17 +1833,24 @@ object CommitLog {
     *
     * An UPDATE appears as its delete + insert halves — exactly a
     * positional changelog without row tracking — unless `keys` is
-    * given: then the window's delete and insert halves sharing a key
-    * are PAIRED into `update_preimage`/`update_postimage` rows (Delta
-    * CDF's vocabulary; what MoR-MERGE consumers expect), with
-    * unmatched rows staying plain insert/delete. Output is the sink
-    * schema plus a `_change_type` column. Cost ∝ changed files + DV
-    * sizes, never the table: unchanged files are excluded by set
-    * arithmetic on the two manifests before any scan is planned. */
+    * given: then a key with rows on BOTH halves of the window is an
+    * update, its delete rows becoming `update_preimage` and its
+    * insert rows `update_postimage` (Delta CDF's vocabulary; what
+    * MoR-MERGE consumers expect); every other row stays plain
+    * insert/delete. The pairing is one pass: the two halves union
+    * with their tag and one window over the keys sees whether a key
+    * carries both tags, so each changed file is scanned once. A key
+    * with a null column never pairs (SQL equality never matches a
+    * null). Output is the sink schema plus a `_change_type` column.
+    * Cost ∝ changed files + DV sizes, never the table: unchanged
+    * files are excluded by set arithmetic on the two manifests before
+    * any scan is planned, and an empty window reads only `toGen`'s
+    * schema. */
   def changesBetween(spark: SparkSession, sink: String,
                      fromGen: Long, toGen: Long,
                      keys: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions.{col, length, lit, locate}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, lit, max, min, when}
     val hPath = new Path(sink)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fromGen <= toGen, s"fromGen $fromGen > toGen $toGen")
@@ -1837,74 +1878,57 @@ object CommitLog {
         .withColumn("__rel",
           relPathCol(prefix, col("_metadata.file_path")))
         .withColumn("__pos", col("_metadata.row_index"))
-    def dvOf(dvs: Map[String, String], files: Seq[String]): DataFrame = {
-      val paths = files.flatMap(dvs.get).distinct.sorted
-      if (paths.isEmpty)
-        spark.emptyDataFrame.select(
-          lit("").as("__dv_file"), lit(0L).as("__dv_pos")).limit(0)
-      else spark.read.parquet(
-          paths.map(r => new Path(hPath, r).toString): _*)
-        .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
+    def dvOf(dvs: Map[String, String],
+             files: Seq[String]): Option[DataFrame] = {
+      val paths = files.flatMap(dvs.get)
+      if (paths.isEmpty) None
+      else Some(dvScan(spark, hPath, paths)
+        .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")))
     }
     val dvJoin = (l: DataFrame, r: DataFrame, how: String) =>
       l.join(r, col("__rel") === col("__dv_file") &&
         col("__pos") === col("__dv_pos"), how)
+    // rows of `files` not marked in `dvs`
+    def visible(files: Seq[String], dvs: Map[String, String]): DataFrame =
+      dvOf(dvs, files).fold(withIdentity(files))(
+        dvJoin(withIdentity(files), _, "left_anti"))
     val insParts = Seq.newBuilder[DataFrame]
     val delParts = Seq.newBuilder[DataFrame]
-    if (added.nonEmpty)
-      insParts += dvJoin(withIdentity(added), dvOf(mB.dvs, added),
-        "left_anti")
-    if (removed.nonEmpty)
-      delParts += dvJoin(withIdentity(removed), dvOf(mA.dvs, removed),
-        "left_anti")
+    if (added.nonEmpty) insParts += visible(added, mB.dvs)
+    if (removed.nonEmpty) delParts += visible(removed, mA.dvs)
     val grew = common.filter(f => mB.dvs.get(f) != mA.dvs.get(f) &&
       mB.dvs.contains(f))
     if (grew.nonEmpty) {
       // positions marked at toGen minus those already marked at fromGen
-      val newMarks = dvOf(mB.dvs, grew).except(dvOf(mA.dvs, grew))
+      val marksB = dvOf(mB.dvs, grew).get
+      val newMarks = dvOf(mA.dvs, grew).fold(marksB)(marksB.except)
       delParts += dvJoin(withIdentity(grew), newMarks, "left_semi")
     }
-    val ins = insParts.result().reduceOption(_ unionByName _)
-      .map(_.drop("__rel", "__pos"))
-    val del = delParts.result().reduceOption(_ unionByName _)
-      .map(_.drop("__rel", "__pos"))
-    val empty = readAt(spark, sink, toGen).limit(0)
-      .withColumn("_change_type", lit(""))
-    if (keys.isEmpty)
-      Seq(ins.map(_.withColumn("_change_type", lit("insert"))),
-        del.map(_.withColumn("_change_type", lit("delete"))))
-        .flatten.reduceOption(_ unionByName _).getOrElse(empty)
-    else {
-      // Delta-CDF update pairing: a key that both lost a row version
-      // and gained one inside the window is an UPDATE — its delete
-      // half becomes `update_preimage` and its insert half
-      // `update_postimage`; unmatched rows stay plain insert/delete.
-      // (A MoR MERGE otherwise surfaces as unlinked D+I.) Both key
-      // frames are changed-rows-sized, so AQE broadcasts the
-      // semi/anti joins; cost stays ∝ changed files, never the table.
-      (ins, del) match {
-        case (Some(i), Some(d)) =>
-          keys.foreach(k => require(i.columns.contains(k),
-            s"changesBetween: key column $k not in the sink schema " +
-              s"(${i.columns.mkString(",")})"))
-          val iK = i.select(keys.map(col): _*).distinct()
-          val dK = d.select(keys.map(col): _*).distinct()
-          Seq(
-            i.join(dK, keys, "left_anti")
-              .withColumn("_change_type", lit("insert")),
-            d.join(iK, keys, "left_anti")
-              .withColumn("_change_type", lit("delete")),
-            d.join(iK, keys, "left_semi")
-              .withColumn("_change_type", lit("update_preimage")),
-            i.join(dK, keys, "left_semi")
-              .withColumn("_change_type", lit("update_postimage"))
-          ).reduce(_ unionByName _)
-        case (Some(i), None) =>
-          i.withColumn("_change_type", lit("insert"))
-        case (None, Some(d)) =>
-          d.withColumn("_change_type", lit("delete"))
-        case _ => empty
-      }
+    def half(parts: Seq[DataFrame], tag: String): Option[DataFrame] =
+      parts.reduceOption(_ unionByName _)
+        .map(_.drop("__rel", "__pos").withColumn("_change_type", lit(tag)))
+    val ins = half(insParts.result(), "insert")
+    val del = half(delParts.result(), "delete")
+    (ins, del) match {
+      case (None, None) =>
+        readAt(spark, sink, toGen).limit(0)
+          .withColumn("_change_type", lit(""))
+      case (Some(i), Some(d)) if keys.nonEmpty =>
+        keys.foreach(k => require(i.columns.contains(k),
+          s"changesBetween: key column $k not in the sink schema " +
+            s"(${i.columns.mkString(",")})"))
+        // Delta-CDF update pairing: a non-null key whose window
+        // partition carries both tags lost a row version and gained
+        // one inside the window
+        val byKey = Window.partitionBy(keys.map(col): _*)
+        val tag = col("_change_type")
+        val paired = keys.map(col(_).isNotNull).reduce(_ && _) &&
+          (min(tag).over(byKey) =!= max(tag).over(byKey))
+        i.unionByName(d).withColumn("_change_type",
+          when(paired && tag === "insert", lit("update_postimage"))
+            .when(paired, lit("update_preimage"))
+            .otherwise(tag))
+      case _ => Seq(ins, del).flatten.reduce(_ unionByName _)
     }
   }
 

@@ -129,7 +129,7 @@ object DeleteVectors {
           (nMarks + shardRows - 1) / shardRows).toInt.max(1)
         graft.io.Sources.internalWriter(
             merged.repartition(shards, col("file"))).parquet(dvAbs)
-        val parts = spark.read.parquet(dvAbs)
+        val parts = spark.read.schema(CommitLog.DvSchema).parquet(dvAbs)
           .select(col("file"), col("_metadata.file_path").as("__part"))
           .distinct().collect()
           .map(r => r.getString(0) -> new Path(r.getString(1)).getName)
@@ -201,9 +201,7 @@ object DeleteVectors {
       val visible =
         if (dvs.isEmpty) raw
         else raw.join(
-          spark.read.parquet(
-              dvs.values.toSeq.distinct.sorted
-                .map(r => new Path(hPath, r).toString): _*)
+          CommitLog.dvScan(spark, hPath, dvs.values.toSeq)
             .select(col("file").as("__dv_file"),
               col("pos").as("__dv_pos")),
           col("__file") === col("__dv_file") &&
@@ -219,14 +217,11 @@ object DeleteVectors {
       // merged DV for the affected files = their previous delete sets
       // ∪ the new marks; unaffected files keep their old records
       // untouched (commitNext carries them forward)
-      val prior = affected.flatMap(dvs.get).distinct.sorted
+      val prior = affected.flatMap(dvs.get)
       val merged =
         if (prior.isEmpty) marks
-        else marks.union(
-          spark.read.parquet(
-              prior.map(r => new Path(hPath, r).toString): _*)
-            .filter(col("file").isin(affected: _*))
-            .select("file", "pos")).distinct()
+        else marks.union(CommitLog.dvScan(spark, hPath, prior)
+            .filter(col("file").isin(affected: _*))).distinct()
       val (dvMap, dvCounts) = writeDvSharded(spark, hPath, merged,
         affected.toIndexedSeq, dvShardRows)
       failpoint("dv_written")
@@ -333,9 +328,7 @@ object DeleteVectors {
     val visible =
       if (dvs.isEmpty) keyScan
       else keyScan.join(
-        spark.read.parquet(
-            dvs.values.toSeq.distinct.sorted
-              .map(r => new Path(hPath, r).toString): _*)
+        CommitLog.dvScan(spark, hPath, dvs.values.toSeq)
           .select(col("file").as("__dv_file"),
             col("pos").as("__dv_pos")),
         col("__file") === col("__dv_file") &&
@@ -352,14 +345,11 @@ object DeleteVectors {
       if (affected.isEmpty)
         (Map.empty[String, String], Map.empty[String, Long])
       else {
-        val prior = affected.flatMap(dvs.get).distinct.sorted
+        val prior = affected.flatMap(dvs.get)
         val merged =
           if (prior.isEmpty) marks
-          else marks.union(
-            spark.read.parquet(
-                prior.map(r => new Path(hPath, r).toString): _*)
-              .filter(col("file").isin(affected: _*))
-              .select("file", "pos")).distinct()
+          else marks.union(CommitLog.dvScan(spark, hPath, prior)
+              .filter(col("file").isin(affected: _*))).distinct()
         writeDvSharded(spark, hPath, merged, affected.toIndexedSeq,
           dvShardRows)
       }
@@ -508,17 +498,14 @@ object DeleteVectors {
       if (affected.isEmpty)
         (Map.empty[String, String], Map.empty[String, Long], 0L)
       else {
-        val marks = spark.read.parquet(markFiles: _*)
-          .select(col("file"), col("pos"))
+        val marks = spark.read.schema(CommitLog.DvSchema)
+          .parquet(markFiles: _*)
         val nNew = marks.count()
-        val prior = affected.flatMap(baseDvs.get).distinct.sorted
+        val prior = affected.flatMap(baseDvs.get)
         val merged =
           if (prior.isEmpty) marks
-          else marks.union(
-            spark.read.parquet(
-                prior.map(r => new Path(hPath, r).toString): _*)
-              .filter(col("file").isin(affected: _*))
-              .select("file", "pos")).distinct()
+          else marks.union(CommitLog.dvScan(spark, hPath, prior)
+              .filter(col("file").isin(affected: _*))).distinct()
         val (m, c) = writeDvSharded(spark, hPath, merged, affected,
           dvShardRows)
         (m, c, nNew)
@@ -620,9 +607,7 @@ object DeleteVectors {
     val dataSchema = spark.read.parquet(targetAbs.head).schema
     val readSchema = StructType(dataSchema.fields ++
       partCols.map(StructField(_, StringType)))
-    val dv = spark.read.parquet(
-        dvs.values.toSeq.distinct.sorted
-          .map(r => new Path(hPath, r).toString): _*)
+    val dv = CommitLog.dvScan(spark, hPath, dvs.values.toSeq)
       .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
     val prefix = fs.makeQualified(hPath).toUri.getPath + "/"
     val kept = spark.read.schema(readSchema)

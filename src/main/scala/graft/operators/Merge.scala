@@ -364,13 +364,21 @@ object Merge {
     * is the consumer side of the CDC family: q121 produces the feed,
     * q198 collapses it to net effect per key, and this operator lands
     * the net batch on a parquet sink with [[mergeParquet]]'s exact
-    * scale/durability shape — one key-projected sink scan finds the
-    * touched files (a key matching ANY sink row matches in a touched
-    * file, so update-vs-insert and delete targeting all derive from
-    * the touched-file read alone), only those files rewrite, and the
+    * scale/durability shape: only the touched files rewrite, and the
     * swap is the [[CommitLog.swap]] add → COMMIT → delete
     * (crash at any point leaves a manifest-resolving reader
     * exactly-once).
+    *
+    * Before the write, one aggregation over the batch answers
+    * emptiness, the net-batch guard and the upsert count. Then ONE key
+    * pass — the inner join of the sink's
+    * key-projected (file, keys) scan with the batch's (keys, op) —
+    * answers everything else: its file set is the touched files, its
+    * `D` rows are the sink rows deleted, and its distinct `U` keys
+    * are the updates (so the remaining upserts are the inserts). This
+    * is exact because the guard leaves one op per key. A key matching
+    * ANY sink row matches in a touched file, so the rewrite's
+    * update/insert/delete split reads the touched files alone.
     *
     * The batch must be NET: at most one op per key (what q198
     * produces). Conflicting ops on one key have no defined winner, so
@@ -441,17 +449,22 @@ object Merge {
     // CHECK constraints gate the rows that will LAND (U payloads; a
     // delete op's payload columns are ignored by contract)
     CommitLog.requireChecks(m.checks, upserts, "applyCdcParquet")
-    val delKeys = batch.filter(col(opCol) === "D")
-      .select(keyCols.map(col): _*)
 
-    val sinkKeys = scan
-      .select(col("__f") +: keyCols.map(col): _*)
-    val touched = sinkKeys
-      .join(batch.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .select("__f").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
+    // the one key pass: one row per matched sink row, because the
+    // guard above left one op per key
+    val hits = scan.select(col("__f") +: keyCols.map(col): _*)
+      .join(batch.select(keyCols.map(col) :+ col(opCol): _*), keyCols)
+      .agg(collect_set(col("__f")).as("__files"),
+        coalesce(sum(when(col(opCol) === "D", 1L)), lit(0L)).as("__del"),
+        count_distinct(when(col(opCol) === "U",
+          struct(keyCols.map(col): _*))).as("__upd"))
+      .head()
+    val touched = hits.getSeq[String](0).sorted
     val touchedRel = touched.map(f => CommitLog.relativize(fs, hPath,
       CommitLog.decodeScanPath(f)))
+    val nDeleted = hits.getLong(1)
+    val nUpdated = hits.getLong(2)
+    val nInserted = nUpserts - nUpdated
 
     val touchedRows =
       if (touched.isEmpty) null
@@ -466,14 +479,6 @@ object Merge {
     val inserts =
       if (touched.isEmpty) upserts
       else upserts.join(touchedKeys, keyCols, "left_anti")
-    val nUpdated = matched.count()
-    // semi/anti partition the upserts exactly; the count is arithmetic
-    // (nUpserts from the one pre-aggregation above), not another
-    // touched-file keys scan
-    val nInserted = nUpserts - nUpdated
-    val nDeleted =
-      if (touched.isEmpty) 0L
-      else touchedKeys.join(delKeys, keyCols, "left_semi").count()
 
     val rewritten =
       if (touched.isEmpty) inserts

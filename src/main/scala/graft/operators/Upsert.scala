@@ -272,16 +272,10 @@ object Upsert {
       else dedupKeepFirstAgg(cleaned, keys, orderCols)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) {
-      // first write: nothing to replace — plain partitioned write,
-      // then bring the new sink under log control
-      val watch = watchWrite(spark, path)
-      deduped.repartition(col(partitionCol))
-        .write.partitionBy(partitionCol).parquet(path)
-      val n = watch.rows()
-      CommitLog.ensureLogged(fs, hPath)
-      return if (n < 0) deduped.count() else n
-    }
+    // a first write stages like every later one: the log bootstraps
+    // an empty generation 0 and the batch lands in one swap, so a
+    // crash mid-write leaves no partial rows in the table
+    fs.mkdirs(hPath)
     val (baseGen, live) = CommitLog.ensureLoggedAt(fs, hPath)
     // stage the batch in the sink's exact layout
     var n = -1L

@@ -102,10 +102,8 @@ final class GraftBucketedScan private (
         else {
           val files = withDv.map(_._1).toSet
           import org.apache.spark.sql.functions.col
-          spark.read.parquet(withDv.map(_._2).distinct.sorted
-              .map(r => new Path(hPath, r).toString): _*)
-            .filter(col("file").isInCollection(files))
-            .select("file", "pos").collect()
+          CommitLog.dvScan(spark, hPath, withDv.map(_._2))
+            .filter(col("file").isInCollection(files)).collect()
             .groupBy(_.getString(0))
             .map { case (f, rows) =>
               f -> rows.map(_.getLong(1)).sorted

@@ -1037,10 +1037,14 @@ private[sources] final class GraftStreamSource(
 
   override def schema: StructType = pinnedSchema
 
+  // the latest generation the last poll saw: an idle poll stats the
+  // next manifest instead of listing the log
+  @volatile private var polled: Option[Long] = None
+
   override def getOffset: Option[SOffset] = {
-    val gens = CommitLog.generations(fs, hPath)
-    if (gens.isEmpty) return None
-    val latest = gens.last
+    polled = CommitLog.latestGeneration(fs, hPath, polled)
+    if (polled.isEmpty) return None
+    val latest = polled.get
     val next: Pos = offered match {
       case Some((g, i)) if i >= 0 =>
         // mid-snapshot: advance within the pinned generation's file

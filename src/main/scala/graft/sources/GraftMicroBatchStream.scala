@@ -134,9 +134,15 @@ private[sources] final class GraftMicroBatchStream(
     throw new UnsupportedOperationException(
       "latestOffset(start, limit) is the admission-control form")
 
+  // the latest generation the last poll saw: an idle poll stats the
+  // next manifest instead of listing the log
+  @volatile private var polled: Option[Long] = None
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val gens = CommitLog.generations(fs, hPath)
-      .filter(g => availableNowCeiling.forall(g <= _))
+    polled = CommitLog.latestGeneration(fs, hPath, polled)
+    val latestCapped = polled
+      .map(l => availableNowCeiling.fold(l)(math.min(l, _)))
+      .filter(_ >= 0)
     val base = {
       val s = posOf(start)
       // the committed offset IS visible here (unlike the V1 Source) —
@@ -144,8 +150,8 @@ private[sources] final class GraftMicroBatchStream(
       offered = Some(offered.map(maxPos(_, s)).getOrElse(s))
       offered.get
     }
-    if (gens.isEmpty) return GraftSourceOffset(base._1, base._2)
-    val latest = gens.last
+    if (latestCapped.isEmpty) return GraftSourceOffset(base._1, base._2)
+    val latest = latestCapped.get
     val next: Pos = base match {
       case (-1L, _) =>
         // fresh stream: pin the snapshot at the current latest
@@ -259,10 +265,8 @@ private[sources] final class GraftMicroBatchStream(
             "to stream through the V1 plan")
         val files = withDv.map(_._1).toSet
         import org.apache.spark.sql.functions.col
-        spark.read.parquet(withDv.map(_._2).distinct.sorted
-            .map(r => new Path(hPath, r).toString): _*)
-          .filter(col("file").isInCollection(files))
-          .select("file", "pos").collect()
+        CommitLog.dvScan(spark, hPath, withDv.map(_._2))
+          .filter(col("file").isInCollection(files)).collect()
           .groupBy(_.getString(0))
           .map { case (f, rows) =>
             f -> rows.map(_.getLong(1)).sorted

@@ -541,6 +541,31 @@ class CommitProtocolSpec extends SparkSpec {
     graft.io.Sources.deleteRecursively(root)
   }
 
+  test("replacePartitions' FIRST write stages and swaps too: killed " +
+    "before its commit, the new sink reads no rows, and the retry " +
+    "lands exactly the batch") {
+    val root = java.nio.file.Files.createTempDirectory("cps_r0").toString
+    val sink = s"$root/t"
+    val v1 = Seq((20240101L, 1L, 10L), (20240102L, 2L, 20L),
+      (20240102L, 3L, 30L)).toDF("day", "k", "v")
+    intercept[Killed] {
+      Upsert.replacePartitionsParquet(spark, v1, Seq("day", "k"),
+        Seq("v"), sink, "day", preDeduped = true,
+        failpoint = killAt("added"))
+    }
+    assert(CommitLog.read(spark, sink).count() == 0L,
+      "a first write killed before its commit must leave no rows")
+    assert(Upsert.replacePartitionsParquet(spark, v1, Seq("day", "k"),
+      Seq("v"), sink, "day", preDeduped = true) == 3L)
+    val got = CommitLog.read(spark, sink)
+      .select(col("day").cast("long"), col("k"), col("v"))
+      .orderBy("day", "k")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.toSeq == Seq((20240101L, 1L, 10L), (20240102L, 2L, 20L),
+      (20240102L, 3L, 30L)), "the retry lands the batch exactly once")
+    graft.io.Sources.deleteRecursively(root)
+  }
+
   test("manifest-resolved reads are snapshot-isolated: a frame planned " +
     "before a keepReplaced rewrite still returns the pre-rewrite rows " +
     "after the rewrite commits") {

@@ -99,4 +99,38 @@ class EscapedPathsSpec extends SparkSpec {
       s"every live file needs a bloom record: missing ${
         live.filterNot(blooms.contains)}")
   }
+
+  /** A `+` is literal in a path: `p=a+b` scans as itself (no `%`, so
+    * the decode is skipped), `p=a+ b` scans as `p=a+%20b` (decoded,
+    * with the `+` kept). Both must key DV records, reads and change
+    * feed windows by the raw on-disk names. */
+  Seq("a+b" -> "no escape: the decode is skipped",
+    "a+ b" -> "an escaped space: the decode runs").foreach {
+    case (value, branch) =>
+      test(s"partition value '$value' ($branch): a DV delete, a read " +
+        "and a change-feed window use the raw manifest names") {
+        val root = java.nio.file.Files.createTempDirectory("esc4").toString
+        val sink = s"$root/t"
+        Seq((1L, value), (2L, value), (3L, "plain"), (4L, "plain"))
+          .toDF("k", "p").repartition(1).write.partitionBy("p")
+          .parquet(sink)
+        val fs = fsOf(sink); val hp = new Path(sink)
+        val (g0, live) = CommitLog.ensureLoggedAt(fs, hp)
+        assert(live.exists(_.startsWith(s"p=$value/")),
+          s"the raw name is on disk: $live")
+        DeleteVectors.deleteWhere(spark, sink, col("k").isin(1L, 3L))
+        val (g1, m) = CommitLog.latestSnapshot(fs, hp).get
+        assert(m.dvs.keySet == live.toSet,
+          s"DV keys must be the raw manifest names: ${m.dvs.keySet}")
+        assert(CommitLog.read(spark, sink).select("k", "p").collect()
+          .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+          Seq((2L, value), (4L, "plain")))
+        val feed = CommitLog.changesBetween(spark, sink, g0, g1, Seq("k"))
+          .select("k", "p", "_change_type").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+          .sorted.toSeq
+        assert(feed == Seq((1L, value, "delete"), (3L, "plain", "delete")))
+        graft.io.Sources.deleteRecursively(root)
+      }
+  }
 }
