@@ -58,11 +58,78 @@ object Sources {
       df.withColumn(c, timestamp_micros(expr(s"$c div 1000")))
     else df
 
-  /** Lazy parquet scan for one table. */
+  /** Lazy parquet scan for one table. The first read of a path infers
+    * its schema (one footer job); later reads in the same session reuse
+    * that SCHEMA — never rows or plans — while the path's leaf files
+    * are unchanged, keyed by the path and the read confs and judged by
+    * each leaf file's name, length and modification time (one listing,
+    * no job). A rewritten input infers again. Concurrent first reads of
+    * one path infer once. The memo holds [[SchemaMemoSize]] paths per
+    * session and dies with the session. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     harnessReadConf(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = memoizedRead(spark, s"$dir/$name.parquet")
     nanosColumns.getOrElse(name, Nil).foldLeft(df)(normalizeNsTs)
+  }
+
+  /** Paths whose inferred schema one session keeps. */
+  val SchemaMemoSize = 256
+
+  /** One path's inferred schema and the leaf files it was inferred
+    * from; the cell is the lock its inference runs under. */
+  private final class SchemaCell {
+    var files: Seq[(String, Long, Long)] = Nil
+    var schema: StructType = _
+  }
+
+  /** Per session (weakly held): path + read confs → schema cell, LRU. */
+  private val schemaMemos =
+    new java.util.WeakHashMap[SparkSession,
+      java.util.LinkedHashMap[(String, String, String), SchemaCell]]
+
+  private def schemaCell(spark: SparkSession,
+                         key: (String, String, String)): SchemaCell =
+    schemaMemos.synchronized {
+      val memo = schemaMemos.computeIfAbsent(spark, _ =>
+        new java.util.LinkedHashMap[(String, String, String), SchemaCell](
+            16, 0.75f, true) {
+          override def removeEldestEntry(e: java.util.Map.Entry[
+              (String, String, String), SchemaCell]): Boolean =
+            size() > SchemaMemoSize
+        })
+      memo.computeIfAbsent(key, _ => new SchemaCell)
+    }
+
+  /** (name, length, mtime) of every file under `path`, sorted; empty
+    * when the path does not exist (the read then fails as before). */
+  private def leafFiles(spark: SparkSession,
+                        path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(st: org.apache.hadoop.fs.FileStatus)
+    : Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    try fs.listStatus(p).toSeq.flatMap(walk).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  private def memoizedRead(spark: SparkSession, path: String): DataFrame = {
+    val key = (path,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", ""),
+      spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", ""))
+    val files = leafFiles(spark, path)
+    val cell = schemaCell(spark, key)
+    cell.synchronized {
+      if (cell.schema != null && cell.files == files)
+        spark.read.schema(cell.schema).parquet(path)
+      else {
+        val df = spark.read.parquet(path)
+        cell.files = files
+        cell.schema = df.schema
+        df
+      }
+    }
   }
 
   /** CSV scan with explicit schema (S1) — explicit StructType rather than

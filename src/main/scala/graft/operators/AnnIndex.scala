@@ -12,15 +12,14 @@ import org.apache.spark.sql.functions._
   * Delta tracks its Bloom indexes):
   *
   *   - `#meta ann.<col>.centroids` names the TRAINED centroid sidecar
-  *     (`_graft_ann/...-centroids`, the [[Similarity.kmeansCentroids]]
-  *     output schema `(cid, ce, cn)`) — trained ONCE over the table
-  *     (optionally on a seeded SAMPLE — `sampleFraction` decouples
-  *     training cost from table size at 100 TB; assignment still
-  *     covers every row) and reused verbatim by every later catch-up
-  *     and probe;
+  *     (`_graft_ann/...-centroids`, [[CentroidSchema]]) — trained ONCE
+  *     over the table (optionally on a seeded SAMPLE — `sampleFraction`
+  *     decouples training cost from table size at 100 TB; assignment
+  *     still covers every row) and reused verbatim by every later
+  *     catch-up and probe;
   *   - `#ann\t<file>\t<physCol>\t<sidecarRel>` records, one per data
   *     file, name the postings sidecar holding that file's rows as
-  *     `(file, pos, did, de, dn, cid)` — quantized vectors
+  *     [[PostingsSchema]] `(file, pos, did, de, dn, cid)` — quantized vectors
   *     pre-assigned to their nearest committed centroid. Physical
   *     column keying and carry-per-surviving-file follow `#bloom`: a
   *     rename never invalidates, a rewrite retires exactly the
@@ -29,11 +28,23 @@ import org.apache.spark.sql.functions._
   *     itself becomes [[CommitLog.vacuum]] debris once no record
   *     names it);
   *   - `#meta ann.<col>.pq` (+ `.pq.m`, `.pq.dims`) names the trained
-  *     PQ CODEBOOK sidecar (`(m, cid, ce, cn)` per subspace — the
-  *     [[Similarity.pqTopK]] codebook discipline: integer slices,
-  *     exact sum/count recentering), and `#ann` records keyed
-  *     `<physCol>#pq` name per-file CODE sidecars
-  *     (`(file, pos, did, m, code)`) — the memory-light serving tier.
+  *     PQ CODEBOOK sidecar ([[CodebookSchema]] `(m, cid, ce, cn)` per
+  *     subspace — the [[Similarity.pqTopK]] codebook discipline:
+  *     integer slices, exact sum/count recentering), and `#ann` records
+  *     keyed `<physCol>#pq` name per-file CODE sidecars
+  *     ([[CodesSchema]] `(file, pos, did, m, code)`) — the
+  *     memory-light serving tier.
+  *
+  * TRAINED ON THE DRIVER: centroids and codebook train from their
+  * quantized rows collected once, in one job, capped at
+  * [[Similarity.TrainBytesCap]] bytes (above it the build fails and
+  * names `sampleFraction`); the Lloyd iterations and the recentering
+  * are local integer arithmetic, equal row for row to the SQL
+  * formulation. The trained rows ride as a local frame into both the
+  * sidecar write and the assignment that follows, which never re-reads
+  * the sidecar it just wrote. Every sidecar kind has ONE fixed schema,
+  * so no sidecar read infers a schema from parquet footers (the
+  * [[CommitLog.DvSchema]] discipline).
   *
   * INCREMENTAL by construction: [[build]]/[[buildPq]] target only
   * files lacking a record (the `ANALYZE onlyMissing` shape), so
@@ -74,10 +85,26 @@ object AnnIndex {
     m.collectFirst { case (p, l) if l == logical => p }
       .getOrElse(logical)
 
-  private def centroidsOf(spark: SparkSession, hPath: Path,
-                          rel: String): DataFrame =
-    spark.read.parquet(new Path(hPath, rel).toString)
-      .select(col("cid"), col("ce"), col("cn"))
+  /** Fixed sidecar schemas, one per kind. */
+  val CentroidSchema = "cid BIGINT, ce ARRAY<BIGINT>, cn BIGINT"
+  val PostingsSchema =
+    "file STRING, pos BIGINT, did BIGINT, de ARRAY<BIGINT>, dn BIGINT, " +
+      "cid BIGINT"
+  val CodebookSchema = "m INT, cid BIGINT, ce ARRAY<BIGINT>, cn BIGINT"
+  val CodesSchema =
+    "file STRING, pos BIGINT, did BIGINT, m INT, code BIGINT"
+
+  /** Scan the sidecars at `rels` (sink-relative) under their kind's
+    * fixed `schema`. */
+  private def sidecar(spark: SparkSession, hPath: Path, schema: String,
+                      rels: Seq[String]): DataFrame =
+    spark.read.schema(schema)
+      .parquet(rels.map(r => new Path(hPath, r).toString): _*)
+
+  /** The sidecar rows of `files` — a filter on the names the manifest
+    * holds, so no broadcast job ships the file list. */
+  private def ofFiles(rows: DataFrame, files: Seq[String]): DataFrame =
+    rows.filter(col("file").isInCollection(files))
 
   /** Inline IVF assignment of `files`' rows against the committed
     * centroids — the (file, pos, did, de, dn, cid) shape `#ann`
@@ -109,7 +136,7 @@ object AnnIndex {
   }
 
   /** Build (or catch up) the committed index for `column`: train
-    * centroids once if the table has none (on a seeded
+    * centroids on the driver once if the table has none (on a seeded
     * `sampleFraction` of the corpus when < 1.0 — the 100 TB path:
     * training cost ∝ sample, assignment still covers every row), then
     * index exactly the record-less files, land postings as ONE
@@ -132,8 +159,9 @@ object AnnIndex {
     // 1. centroids: train ONCE over the current table, reuse forever
     // (catch-ups assign against the committed centroids — an index
     // whose cells drift per build would not be an index)
-    val (centroidRel, trainedNow) = meta.get(centroidKey(column)) match {
-      case Some(rel) => (rel, false)
+    val (centroidRel, cents, trainedNow) = meta.get(centroidKey(column)) match {
+      case Some(rel) =>
+        (rel, sidecar(spark, hPath, CentroidSchema, Seq(rel)), false)
       case None =>
         val full = CommitLog.readSnapshot(spark, path, fs, m)
           .select(col(idColumn).cast("long").as("vec_id"),
@@ -151,7 +179,7 @@ object AnnIndex {
           java.util.UUID.randomUUID().toString + "-centroids"
         graft.io.Sources.internalWriter(cents.coalesce(1))
           .parquet(new Path(hPath, rel).toString)
-        (rel, true)
+        (rel, cents, true)
     }
     // 2. catch-up: exactly the files with no record for the column
     val targets = live.filter { f =>
@@ -168,7 +196,7 @@ object AnnIndex {
         // (Sources.sizedForWrite — guide §2.2/§6)
         graft.io.Sources.internalWriter(graft.io.Sources.sizedForWrite(
             assignFiles(spark, hPath, targets, cms, cts, meta, column,
-              idColumn, centroidsOf(spark, hPath, centroidRel))))
+              idColumn, cents)))
           .parquet(new Path(hPath, rel).toString)
         targets.map { f =>
           f -> Map(physOf(cms.getOrElse(f, Map.empty), column) -> rel)
@@ -205,12 +233,10 @@ object AnnIndex {
         val rels = covered.flatMap(f => m.anns(f).get(
           physOf(cms.getOrElse(f, Map.empty), column)))
           .distinct.sorted
-        val posts = spark.read.parquet(
-          rels.map(r => new Path(hPath, r).toString): _*)
+        val posts = sidecar(spark, hPath, PostingsSchema, rels)
         // liveness: a shared sidecar may hold rows of files since
         // rewritten out of the manifest — keep exactly the live set
-        Some(posts.join(broadcast(covered.toDF("file")), Seq("file"),
-          "left_semi"))
+        Some(ofFiles(posts, covered))
       }
     val inline: Option[DataFrame] =
       if (uncovered.isEmpty) None
@@ -257,7 +283,7 @@ object AnnIndex {
       throw new IllegalArgumentException(
         s"ann topK: no committed ANN index for '$column' at $path — " +
           "AnnIndex.build first"))
-    val cents = centroidsOf(spark, hPath, centroidRel)
+    val cents = sidecar(spark, hPath, CentroidSchema, Seq(centroidRel))
     val (vis, _) = visibleRows(spark, hPath, m, column, idColumn,
       cents)
     Similarity.ivfProbeCells(queries,
@@ -304,10 +330,11 @@ object AnnIndex {
   }
 
   /** Train (once) and catch up the committed PQ tier for `column`:
-    * ONE shared codebook over the committed postings' quantized
-    * vectors (seeds = first `codebookSize` by id, one exact
-    * sum/count recentering pass — the [[Similarity.pqTopK]]
-    * discipline), committed as `#meta ann.<col>.pq`; per-file CODE
+    * ONE shared codebook trained on the driver over the committed
+    * postings' quantized vectors ([[Similarity.pqCodebook]]: seeds =
+    * first `codebookSize` by id, one exact sum/count recentering pass
+    * — the [[Similarity.pqTopK]] discipline), committed as
+    * `#meta ann.<col>.pq`; per-file CODE
     * sidecars land as `#ann` records keyed `<physCol>#pq` for
     * exactly the files lacking one. Composes with [[build]] (runs it
     * first, so IVF coverage catches up in the same call). Returns
@@ -327,52 +354,36 @@ object AnnIndex {
     def postsOf(files: Seq[String]): DataFrame = {
       val rels = files.flatMap(f => m.anns(f).get(
         physOf(cms.getOrElse(f, Map.empty), column))).distinct.sorted
-      import spark.implicits._
-      spark.read.parquet(
-          rels.map(r => new Path(hPath, r).toString): _*)
-        .join(broadcast(files.toDF("file")), Seq("file"), "left_semi")
+      ofFiles(sidecar(spark, hPath, PostingsSchema, rels), files)
     }
-    // 1. codebook: train ONCE over the whole table's postings
-    val (cbRel, dims, trainedNow) = m.meta.get(pqKey(column)) match {
+    // 1. codebook: train ONCE over the whole table's postings, on the
+    // driver (seeds = first `codebookSize` by id, one exact sum/count
+    // recentering pass)
+    val (cbRel, cb, dims, trainedNow) = m.meta.get(pqKey(column)) match {
       case Some(rel) =>
-        (rel, m.meta(pqDimsKey(column)).toInt, false)
+        (rel, sidecar(spark, hPath, CodebookSchema, Seq(rel)),
+          m.meta(pqDimsKey(column)).toInt, false)
       case None =>
-        val posts = postsOf(live)
-        val d = posts.select(size(col("de")).as("w"))
-          .filter(col("w") > 0).limit(1).collect()
-          .headOption.map(_.getInt(0)).getOrElse(0)
+        val rows = Similarity.collectTraining(
+          postsOf(live).select(col("did"), col("de")),
+          "ann buildPq codebook training")
+        val d = rows.collectFirst {
+          case (_, v) if v != null && v.nonEmpty => v.length
+        }.getOrElse(0)
         require(d > 0, s"ann buildPq: no non-empty vectors at $path")
-        val seeds = sliceQ(
-          posts.orderBy("did").limit(codebookSize)
-            .select(col("did").as("cid"), col("de")),
-          Seq("cid"), "de", subspaces, d)
-          .select(col("m"), col("cid"), col("se").as("ce"),
-            col("sn").as("cn"))
-        val slices = sliceQ(posts.select(col("did"), col("de")),
-          Seq("did"), "de", subspaces, d)
-        // one exact sum/count recentering pass (the q95/q99
-        // exact-moment discipline — partial-aggregation-order-proof)
-        val cb = assignCodes(slices, Seq("did"), seeds)
-          .select(col("m"), col("cid"),
-            posexplode(col("se")).as(Seq("dim", "v")))
-          .groupBy("m", "cid", "dim")
-          .agg(sum("v").as("s"), count(lit(1)).as("c"))
-          .groupBy("m", "cid")
-          .agg(transform(
-            array_sort(collect_list(struct(col("dim"),
-              (col("s").cast("double") / col("c").cast("double"))
-                .as("mean")))),
-            s => round(s.getField("mean")).cast("long")).as("ce"))
-          .select(col("m"), col("cid"), col("ce"),
-            Similarity.dotQ(col("ce"), col("ce")).as("cn"))
+        require(d % subspaces == 0,
+          s"ann pq: dims $d not divisible into $subspaces subspaces")
+        val cb = spark.createDataFrame(java.util.Arrays.asList(
+            Similarity.pqCodebook(rows, subspaces, codebookSize, d)
+              .flatMap { case (mm, cells) => cells.map(c =>
+                org.apache.spark.sql.Row(mm, c.cid, c.ce, c.cn)) }: _*),
+          org.apache.spark.sql.types.StructType.fromDDL(CodebookSchema))
         val rel = CommitLog.AnnDirName + "/" +
           java.util.UUID.randomUUID().toString + "-pq"
         graft.io.Sources.internalWriter(cb.coalesce(1))
           .parquet(new Path(hPath, rel).toString)
-        (rel, d, true)
+        (rel, cb, d, true)
     }
-    val cb = spark.read.parquet(new Path(hPath, cbRel).toString)
-      .select(col("m"), col("cid"), col("ce"), col("cn"))
     // 2. code catch-up: files lacking a `<phys>#pq` record
     val targets = live.filter { f =>
       val phys = physOf(cms.getOrElse(f, Map.empty), column)
@@ -438,9 +449,8 @@ object AnnIndex {
           s"$path — AnnIndex.buildPq first"))
     val subspaces = m.meta(pqMKey(column)).toInt
     val dims = m.meta(pqDimsKey(column)).toInt
-    val cents = centroidsOf(spark, hPath, centroidRel)
-    val cb = spark.read.parquet(new Path(hPath, cbRel).toString)
-      .select(col("m"), col("cid"), col("ce"), col("cn"))
+    val cents = sidecar(spark, hPath, CentroidSchema, Seq(centroidRel))
+    val cb = sidecar(spark, hPath, CodebookSchema, Seq(cbRel))
     // visible corpus rows (committed + inline remainder, DV-filtered)
     val (vis, _) = visibleRows(spark, hPath, m, column, idColumn,
       cents)
@@ -449,17 +459,13 @@ object AnnIndex {
       m.anns.getOrElse(f, Map.empty)
         .contains(physOf(cms.getOrElse(f, Map.empty), column) + "#pq")
     }
-    import spark.implicits._
     val committedCodes: Option[DataFrame] =
       if (coded.isEmpty) None
       else {
         val rels = coded.flatMap(f => m.anns(f).get(
           physOf(cms.getOrElse(f, Map.empty), column) + "#pq"))
           .distinct.sorted
-        val c = spark.read.parquet(
-            rels.map(r => new Path(hPath, r).toString): _*)
-          .join(broadcast(coded.toDF("file")), Seq("file"),
-            "left_semi")
+        val c = ofFiles(sidecar(spark, hPath, CodesSchema, rels), coded)
         // the DV filter rode `vis` for rows; codes key by the same
         // (file, pos) domain — semi-join against visible rows keeps
         // exactly the servable positions

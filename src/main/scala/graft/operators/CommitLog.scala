@@ -1849,12 +1849,24 @@ object CommitLog {
   def changesBetween(spark: SparkSession, sink: String,
                      fromGen: Long, toGen: Long,
                      keys: Seq[String] = Nil): DataFrame = {
+    val hPath = new Path(sink)
+    changesWithin(spark, sink, generations(
+      hPath.getFileSystem(spark.sparkContext.hadoopConfiguration), hPath),
+      fromGen, toGen, keys)
+  }
+
+  /** [[changesBetween]] against `gens`, a listing of the retained
+    * generations the caller already made (a stream window that checked
+    * its start generation lists once). */
+  private[graft] def changesWithin(spark: SparkSession, sink: String,
+                                   gens: Seq[Long], fromGen: Long,
+                                   toGen: Long,
+                                   keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, lit, max, min, when}
     val hPath = new Path(sink)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fromGen <= toGen, s"fromGen $fromGen > toGen $toGen")
-    val gens = generations(fs, hPath)
     require(gens.contains(fromGen) && gens.contains(toGen),
       s"generations $fromGen and $toGen must both be retained " +
         s"(have ${gens.mkString(",")})")

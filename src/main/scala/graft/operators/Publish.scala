@@ -47,17 +47,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Publish {
 
   /** The six builders, in the reference's Table-enum order, as
-    * (model, builder) pairs over the staging analogs. Publish inputs are
-    * the UNSORTED builder frames: the q40/q44 oracle ordering is a global
-    * sort a keyed MERGE never needs. */
-  def builders(s: SparkSession, dir: String): Seq[(TableModel, DataFrame)] =
+    * (model, builder) pairs over the staging analogs. A builder resolves
+    * its inputs only when called, so each lineage resolves inside its
+    * own [[concurrently]] task. Publish inputs are the UNSORTED builder
+    * frames: the q40/q44 oracle ordering is a global sort a keyed MERGE
+    * never needs. */
+  def builders(s: SparkSession, dir: String)
+  : Seq[(TableModel, () => DataFrame)] =
     Seq(
-      StarModel.lineDim    -> graft.queries.StarSchema.lineDimFrame(s, dir),
-      StarModel.stopDim    -> graft.queries.StarSchema.stopDimFrame(s, dir),
-      StarModel.vehicleDim -> graft.queries.StarSchema.vehicleDimFrame(s, dir),
-      StarModel.weatherDim -> graft.queries.StarSchema.weather(s, dir),
-      StarModel.timeDim    -> graft.queries.CoreQueries.timeDimFrame(s, dir),
-      StarModel.delayFact  -> graft.queries.StarSchema.delayFactFrame(s, dir),
+      StarModel.lineDim -> (() => graft.queries.StarSchema.lineDimFrame(s, dir)),
+      StarModel.stopDim -> (() => graft.queries.StarSchema.stopDimFrame(s, dir)),
+      StarModel.vehicleDim ->
+        (() => graft.queries.StarSchema.vehicleDimFrame(s, dir)),
+      StarModel.weatherDim -> (() => graft.queries.StarSchema.weather(s, dir)),
+      StarModel.timeDim -> (() => graft.queries.CoreQueries.timeDimFrame(s, dir)),
+      StarModel.delayFact ->
+        (() => graft.queries.StarSchema.delayFactFrame(s, dir)),
     )
 
   /** Sink partition layout: the two time-keyed tables are written
@@ -114,8 +119,8 @@ object Publish {
 
   def stageAll(s: SparkSession, dir: String, stagingRoot: String)
   : Seq[StagedBatch] =
-    concurrently(builders(s, dir)) { case (m, df) =>
-      val conformed = StarModel.conform(df, m.schema)
+    concurrently(builders(s, dir)) { case (m, build) =>
+      val conformed = StarModel.conform(build(), m.schema)
       val orderCols = m.schema.fieldNames.filterNot(m.keys.contains).toSeq
       val path = s"$stagingRoot/${m.name}"
       val watch = Upsert.watchWrite(s, path)
@@ -196,16 +201,34 @@ object Publish {
           m.name -> sb.rows
         }
       } else {
-        // re-run / incremental path: conform restores the declared
-        // partition-column type (directory values re-infer narrower)
+        // re-run / incremental path: stageAll wrote the staging
+        // directory conformed to the declared schema, so it reads under
+        // that schema (no footer job; the partition column parses to
+        // its declared type) and conform restores the column order
         // before the keyed anti-join against the existing sink
         val batch = StarModel.conform(
-          s.read.parquet(stagingPath), m.schema)
+          s.read.schema(m.schema).parquet(stagingPath), m.schema)
         m.name -> Upsert.upsertParquet(s, batch, m.keys, m.keys,
           sinkPath, partitionCol = partitionColOf(m),
-          preDeduped = true)
+          preDeduped = true, batchPartitions = partitionColOf(m).map(p =>
+            stagedPartitions(fs, new org.apache.hadoop.fs.Path(stagingPath),
+              p)))
       }
     }
+
+  /** The values of partition column `p` a staging directory holds, read
+    * from its `p=V` directory names — the batch's partitions, known
+    * from one listing instead of a job over the staged rows. */
+  private def stagedPartitions(fs: org.apache.hadoop.fs.FileSystem,
+                               staging: org.apache.hadoop.fs.Path,
+                               p: String): Seq[Any] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    fs.listStatus(staging).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName).filter(_.startsWith(s"$p="))
+      .map(n => ExternalCatalogUtils.unescapePathName(n.drop(p.length + 1)))
+      .map(v => if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else v)
+  }
 
   /** Read a published sink back under its DECLARED schema. Partitioned
     * sinks re-infer partition-column types from directory names (long
@@ -262,8 +285,8 @@ object Publish {
     * sum of per-job scheduling latencies. */
   def publishAll(s: SparkSession, dir: String, sinkRoot: String)
   : Seq[(String, Long)] =
-    concurrently(builders(s, dir)) { case (m, df) =>
-      val conformed = StarModel.conform(df, m.schema)
+    concurrently(builders(s, dir)) { case (m, build) =>
+      val conformed = StarModel.conform(build(), m.schema)
       val orderCols = m.schema.fieldNames.filterNot(m.keys.contains).toSeq
       // pruneRerun = false: collecting the batch's partition values
       // would re-run the whole builder DAG — against an expensive

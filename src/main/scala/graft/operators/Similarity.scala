@@ -220,37 +220,203 @@ object Similarity {
   }
 
   /** Lloyd's k-means over quantized embeddings — the centroid-training
-    * step a production IVF deployment runs before [[ivfTopK]].
-    * Deterministic end to end: first-k-by-id init, cosine assignment
-    * with (similarity desc, cid asc) tie-break, element-wise mean
-    * re-quantized with HALF_UP rounding, and a FIXED iteration count —
-    * so the trained centroids are bit-identical across engines and
-    * re-runs (a convergence-threshold loop would not be portable).
+    * step a production IVF deployment runs before [[ivfTopK]], trained
+    * ON THE DRIVER: the corpus's (vec_id, quantized vector) rows are
+    * collected once, in one job, capped at [[TrainBytesCap]], and every
+    * iteration is local arithmetic instead of a Spark plan.
+    * Deterministic end to end and equal to the SQL formulation the q64
+    * oracle unrolls: seeds are the first k rows by id (null and empty
+    * embeddings included), assignment ranks by (cosine desc, cid asc)
+    * under Spark's ordering (NaN first, null last), a centre is the
+    * per-dimension long sum / count rounded HALF_UP, and the iteration
+    * count is FIXED — so the trained centroids are bit-identical across
+    * engines and re-runs (a convergence-threshold loop would not be
+    * portable). A cell that loses all members drops its centroid for
+    * the next iteration — deliberate: the oracle's SQL formulation has
+    * the identical semantics, and a keep-stale-centroid policy would
+    * diverge between engines. Null and empty embeddings join a cell but
+    * add nothing to it. A null vec_id fails loudly.
     *
-    * Scale shape per iteration: assignment is a broadcast of k tiny
-    * centroids against the corpus (map-side), and the update shuffles
-    * (cid, dim, value) triples — k·dims cells after partial aggregation,
-    * never the vectors themselves. Returns (cid, ce, cn): quantized
-    * centroid + squared norm, served directly by [[ivfTopKWith]].
-    * A cell that loses all members drops its centroid for the next
-    * iteration (the update groupBy emits no row for it) — deliberate:
-    * the oracle's SQL formulation has the identical semantics, and a
-    * keep-stale-centroid policy would diverge between engines. */
+    * Returns (cid, ce, cn) — quantized centroid + squared norm, with
+    * `cid` of the corpus's vec_id type — as a local frame, served
+    * directly by [[ivfTopKWith]] without re-running any training. */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
-    val d = prep(corpus, "did", "de", "dn")
-    var cents = firstNCentroids(corpus, k)
-    (0 until iters).foreach { _ =>
-      val assigned = assignNearest(d, cents)
-      cents = assigned
-        .select(col("cid"), posexplode(col("de")).as(Seq("dim", "v")))
-        .groupBy("cid", "dim").agg(avg("v").as("m"))
-        .groupBy("cid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("m")))),
-          s => round(s.getField("m")).cast("long")).as("ce"))
-        .select(col("cid"), col("ce"), dotQ(col("ce"), col("ce")).as("cn"))
+    val rows = collectTraining(corpus.select(col("vec_id").cast("long"),
+      quantize(col("embedding"))), "kmeans training")
+    val seeds = rows.sortBy(_._1).take(k).map { case (id, v) => Cell(id, v) }
+    val vecs = rows.map(_._2)
+    val norms = vecs.map(v => dotL(v, v))
+    val cells = (0 until iters).foldLeft(seeds.toIndexedSeq) { (cs, _) =>
+      if (cs.isEmpty) cs
+      else recenter(vecs, cs, vecs.indices.map(i =>
+        nearest(cs)(c => cosineL(dotL(vecs(i), c.ce), norms(i), c.cn))(
+          cosineOrder)))
     }
-    cents
+    cellFrame(corpus.sparkSession, cells)
+      .withColumn("cid", col("cid").cast(corpus.schema("vec_id").dataType))
+  }
+
+  /** Most bytes of training rows a driver-side trainer collects, at 8
+    * bytes an id and 8 a vector component: 64 MiB, about 127k 64-dim
+    * vectors. Each partition stops at the cap, so the driver never
+    * holds much more than partitions × cap; above it training fails
+    * loudly — train on a sample instead (`sampleFraction`). */
+  val TrainBytesCap: Long = 64L << 20
+
+  /** One trained cell: its id and quantized centre. `ce` is null only
+    * for a seed taken from a null embedding; `cn` is [[dotQ]] of the
+    * centre with itself. */
+  private[graft] final case class Cell(cid: Long, ce: Array[Long]) {
+    val cn: java.lang.Long = dotL(ce, ce)
+  }
+
+  /** (cid, ce, cn) rows of trained cells as a local frame, by cid. */
+  private def cellFrame(spark: org.apache.spark.sql.SparkSession,
+                        cells: Seq[Cell]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(cells.sortBy(_.cid)
+        .map(c => org.apache.spark.sql.Row(c.cid, c.ce, c.cn)): _*),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "cid BIGINT, ce ARRAY<BIGINT>, cn BIGINT"))
+
+  /** The (id, quantized vector) rows of a two-column (BIGINT,
+    * ARRAY<BIGINT>) frame, collected in ONE job under `cap` bytes. */
+  private[graft] def collectTraining(df: DataFrame, what: String,
+                                     cap: Long = TrainBytesCap)
+  : Array[(Long, Array[Long])] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val qe = df.queryExecution
+    val parts = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some(what)) {
+        df.sparkSession.sparkContext.runJob(qe.toRdd,
+          (it: Iterator[InternalRow]) => {
+            val out = Array.newBuilder[(Long, Array[Long])]
+            var bytes = 0L
+            while (bytes <= cap && it.hasNext) {
+              val r = it.next()
+              if (r.isNullAt(0))
+                throw new IllegalArgumentException(s"$what: null vector id")
+              val v = if (r.isNullAt(1)) null else r.getArray(1).toLongArray()
+              bytes += 8L * (1 + (if (v == null) 0 else v.length))
+              out += ((r.getLong(0), v))
+            }
+            (out.result(), bytes)
+          })
+      }
+    val bytes = parts.map(_._2).sum
+    if (bytes > cap)
+      throw new IllegalArgumentException(
+        s"$what: training rows exceed the driver cap of $cap bytes; " +
+          "train on a sample — lower AnnIndex.build's sampleFraction")
+    parts.flatMap(_._1)
+  }
+
+  /** [[dotQ]] on the driver: null when either side is null or the
+    * lengths differ, else the (wrapping) long sum of products. */
+  private def dotL(a: Array[Long], b: Array[Long]): java.lang.Long =
+    if (a == null || b == null || a.length != b.length) null
+    else {
+      var acc = 0L
+      var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+
+  /** [[cosineFrom]] on the driver, with Spark's ANSI division: a null
+    * side gives null, a zero divisor under a non-null dot fails. */
+  private def cosineL(dot: java.lang.Long, na: java.lang.Long,
+                      nb: java.lang.Long): java.lang.Double =
+    if (na == null || nb == null || dot == null) null
+    else {
+      val den = math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)
+      if (den == 0.0)
+        throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero " +
+          "in a cosine: an empty vector met an empty centroid")
+      dot.toDouble / den
+    }
+
+  /** Cosine-desc rank order under Spark's ordering: NaN above every
+    * number, 0.0 = -0.0, nulls last. Negative when `a` ranks first. */
+  private def cosineOrder(a: java.lang.Double, b: java.lang.Double): Int =
+    if (a == null) (if (b == null) 0 else 1)
+    else if (b == null) -1
+    else if (a.isNaN) (if (b.isNaN) 0 else -1)
+    else if (b.isNaN) 1
+    else if (a > b) -1 else if (a < b) 1 else 0
+
+  /** Squared-L2-asc rank order, nulls first (Spark's asc). */
+  private def l2Order(a: java.lang.Long, b: java.lang.Long): Int =
+    if (a == null) (if (b == null) 0 else -1)
+    else if (b == null) 1
+    else java.lang.Long.compare(a, b)
+
+  /** sn + cn − 2·dot(se, ce) in ANSI (overflow-checked) long
+    * arithmetic; null when any term is null. */
+  private def l2L(se: Array[Long], sn: java.lang.Long,
+                  c: Cell): java.lang.Long = {
+    val dot = dotL(se, c.ce)
+    if (sn == null || c.cn == null || dot == null) null
+    else Math.subtractExact(Math.addExact(sn.longValue, c.cn.longValue),
+      Math.multiplyExact(2L, dot.longValue))
+  }
+
+  /** Index of the cell ranking first by its `key` under `order`, ties
+    * by cid asc. `cells` is non-empty. */
+  private def nearest[K](cells: IndexedSeq[Cell])(key: Cell => K)
+                        (order: (K, K) => Int): Int = {
+    val keys = cells.map(key)
+    cells.indices.reduce { (i, j) =>
+      val o = order(keys(j), keys(i))
+      if (o < 0 || (o == 0 && cells(j).cid < cells(i).cid)) j else i
+    }
+  }
+
+  /** One recentering pass: each cell becomes the per-dimension mean of
+    * its members' components — long sum / count, one IEEE division,
+    * Spark's HALF_UP `round` — and a cell no component reached drops.
+    * `assigned(i)` is the cell index of `vecs(i)`. */
+  private def recenter(vecs: Array[Array[Long]], cells: IndexedSeq[Cell],
+                       assigned: IndexedSeq[Int]): IndexedSeq[Cell] = {
+    val width = vecs.iterator.filter(_ != null).map(_.length)
+      .foldLeft(0)(math.max)
+    val sums = Array.ofDim[Long](cells.size, width)
+    val counts = Array.ofDim[Long](cells.size, width)
+    vecs.indices.foreach { i =>
+      val v = vecs(i)
+      if (v != null) v.indices.foreach { d =>
+        sums(assigned(i))(d) = Math.addExact(sums(assigned(i))(d), v(d))
+        counts(assigned(i))(d) += 1
+      }
+    }
+    cells.indices.flatMap { c =>
+      val n = counts(c).lastIndexWhere(_ > 0) + 1
+      if (n == 0) None
+      else Some(Cell(cells(c).cid, Array.tabulate(n)(d =>
+        java.math.BigDecimal.valueOf(sums(c)(d).toDouble / counts(c)(d))
+          .setScale(0, java.math.RoundingMode.HALF_UP).longValue())))
+    }
+  }
+
+  /** One PQ codebook trained on the driver over (id, quantized vector)
+    * rows: each vector splits into `subspaces` slices of `dims /
+    * subspaces` components; per subspace the seeds are the first
+    * `codebookSize` rows' slices by id, each slice joins its nearest
+    * seed by (squared L2 asc, cid asc), and one recentering pass gives
+    * the codewords. Returns (m, cells) per subspace. */
+  private[graft] def pqCodebook(rows: Array[(Long, Array[Long])],
+                                subspaces: Int, codebookSize: Int,
+                                dims: Int): Seq[(Int, IndexedSeq[Cell])] = {
+    val w = dims / subspaces
+    def sliceOf(v: Array[Long], m: Int) =
+      if (v == null) null else v.slice(m * w, m * w + w)
+    val seeds = rows.sortBy(_._1).take(codebookSize)
+    (0 until subspaces).map { m =>
+      val cells = seeds.toIndexedSeq.map { case (id, v) => Cell(id, sliceOf(v, m)) }
+      val slices = rows.map(r => sliceOf(r._2, m))
+      m -> recenter(slices, cells, slices.indices.map { i =>
+        val sn = dotL(slices(i), slices(i))
+        nearest(cells)(c => l2L(slices(i), sn, c))(l2Order)
+      })
+    }
   }
 
   /** Nearest centroid per corpus row: broadcast k centroids, rank by

@@ -387,7 +387,9 @@ object Upsert {
     * extra evaluation of the incoming plan, so enable it when incoming
     * is a cheap scan (the staged path) and leave it off when incoming
     * is an expensive builder DAG (a full-sink keys-only scan is cheaper
-    * than re-running the builder).
+    * than re-running the builder). `batchPartitions` hands in those
+    * values when the caller already knows them (a staging directory's
+    * partition names), so no job collects them.
     *
     * `preDeduped`: skip the keyed dedup when the incoming frame is
     * already unique per key — the staging-load pattern, where the
@@ -406,6 +408,7 @@ object Upsert {
                     partitionCol: Option[String] = None,
                     preDeduped: Boolean = false,
                     pruneRerun: Boolean = true,
+                    batchPartitions: Option[Seq[Any]] = None,
                     failpoint: String => Unit = _ => ()): Long = {
     partitionCol.foreach(p => require(keys.contains(p),
       s"partitionCol $p must be a key column (keys=$keys): pruning by a " +
@@ -454,11 +457,12 @@ object Upsert {
     snapBefore.foreach { case (_, m) =>
       CommitLog.requireNoDvs(m.dvs, hPath, "upsertParquet")
     }
-    // batch partition values, collected ONCE and shared by the pruned
-    // anti-join scan and the pruned before/after counts
+    // batch partition values, collected ONCE (unless the caller
+    // already knows them) and shared by the pruned anti-join scan and
+    // the pruned before/after counts
     val pvals = partitionCol match {
       case Some(p) if existed && pruneRerun =>
-        Some(p -> partitionValuesOf(deduped, p))
+        Some(p -> batchPartitions.getOrElse(partitionValuesOf(deduped, p)))
       case _ => None
     }
     // ONE sink read when the sink exists: its (possibly pruned) file

@@ -1123,11 +1123,12 @@ private[sources] final class GraftStreamSource(
     def tailWindow(g: Long, toGen: Long): DataFrame = {
       if (readChangeFeed) {
         // CDF window: manifest-derived change feed, cost ∝ changed
-        // files
-        require(CommitLog.generations(fs, hPath).contains(g),
+        // files; the retention check's listing serves the window too
+        val gens = CommitLog.generations(fs, hPath)
+        require(gens.contains(g),
           s"graft stream: generation $g of $path is expired — the " +
             "CDF stream lagged past retention; re-snapshot")
-        CommitLog.changesBetween(spark, path, g, toGen, cdfKeys)
+        CommitLog.changesWithin(spark, path, gens, g, toGen, cdfKeys)
           .select(pinnedCols: _*)
       } else {
         require(CommitLog.generations(fs, hPath).contains(g),

@@ -150,8 +150,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("publish builder frames plan no global sort and dedup without " +
       "sort-based aggregation (the q56 round-3 contract)") {
-    graft.operators.Publish.builders(spark, dir).foreach { case (m, df) =>
-      val conformed = graft.model.StarModel.conform(df, m.schema)
+    graft.operators.Publish.builders(spark, dir).foreach { case (m, build) =>
+      val conformed = graft.model.StarModel.conform(build(), m.schema)
       val ord = m.schema.fieldNames.filterNot(m.keys.contains).toSeq
       val deduped = graft.operators.Upsert.dedupKeepFirstAgg(conformed,
         m.keys, if (ord.nonEmpty) ord else m.keys)

@@ -1,8 +1,9 @@
 package graft
 
 import graft.operators.{AnnIndex, Cluster, CommitLog, DeleteVectors,
-  Merge, SchemaEvolve, TableStats}
+  Merge, Publish, SchemaEvolve, TableStats}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.connector.catalog.SupportsRead
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit,
   SupportsAdmissionControl}
@@ -44,6 +45,31 @@ class SnapshotBudgetSpec extends SparkSpec {
       now = seen
     }
     now
+  }
+
+  /** Spark jobs `f` starts outside any SQL execution — the footer reads
+    * of schema inference, which run while a plan is analyzed — counted
+    * through the job group `f` runs in (inherited by the threads it
+    * starts). */
+  private def footerJobs(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"footer-${System.nanoTime()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group &&
+            e.properties.getProperty("spark.sql.execution.id") == null)
+          seen.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      var last = -1
+      while (seen.get != last) { last = seen.get; Thread.sleep(300) }
+      last
+    } finally sc.removeSparkListener(l)
   }
 
   private def fsOf(path: String) = new Path(path)
@@ -158,6 +184,77 @@ class SnapshotBudgetSpec extends SparkSpec {
     // scan per changed file, no schema inference of DV parquet and no
     // empty-frame schema read
     assert((cdcJobs, cdfJobs) == (12, 5))
+    graft.io.Sources.deleteRecursively(root)
+  }
+
+  test("one keyed CDF stream window lists the log once") {
+    val root = java.nio.file.Files.createTempDirectory("lb_cdf").toString
+    val sink = twoFileTable(root)
+    val v1 = new graft.sources.GraftDataSource().createSource(
+      spark.sqlContext, s"$root/ck", None, "graft",
+      Map("path" -> sink, "readChangeFeed" -> "true", "cdfKeys" -> "k"))
+    val from = v1.getOffset.get
+    DeleteVectors.mergeOnRead(spark, sink,
+      Seq((2L, 22L), (30L, 300L)).toDF("k", "v"), Seq("k"))
+    val to = v1.getOffset.get
+    assert(listings(v1.getBatch(Some(from), to)) == 1L) // parent: 2
+    v1.stop()
+    graft.io.Sources.deleteRecursively(root)
+  }
+
+  test("Spark-job budgets of the ANN index on 200 x 64 vectors: " +
+    "training on the driver, sidecars read under fixed schemas") {
+    val root = java.nio.file.Files.createTempDirectory("lb_ann").toString
+    val sink = s"$root/t"
+    (0 until 200).map(i => (i.toLong,
+        Array.tabulate(64)(d => math.sin(i * (d + 1) + 1).toFloat)))
+      .toDF("vec_id", "embedding").repartition(2).write.parquet(sink)
+    CommitLog.ensureLoggedAt(fsOf(sink), new Path(sink))
+    val build = jobs(AnnIndex.build(spark, sink, numCentroids = 16))
+    val buildPq = jobs(AnnIndex.buildPq(spark, sink, subspaces = 8,
+      codebookSize = 16))
+    // serving is pinned by its footer reads: its total (10 or 13 jobs)
+    // varies with the order in which AQE sees its concurrently running
+    // query stages finish, since it re-plans the serve joins after each
+    val queries = spark.read.parquet(sink).filter($"vec_id" < 6)
+    val servedFooters = footerJobs(assert(AnnIndex.topKPq(spark, sink,
+      queries, nProbe = 4, k = 5).collect().length == 30))
+    // parent: 18, 15 and 4 — 12 and 6 Spark-plan training jobs, a dims
+    // probe, footer reads of sidecars (some just written), and
+    // broadcasts of live file names
+    assert((build, buildPq, servedFooters) == (7, 5, 0))
+    graft.io.Sources.deleteRecursively(root)
+  }
+
+  test("input schemas: a re-read of an unchanged input runs no job, " +
+    "and one stageAll infers each distinct input once") {
+    val root = java.nio.file.Files.createTempDirectory("lb_src").toString
+    // one row per harness input the six builders read
+    def writeInputs(dir: String): String = {
+      val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+      def put(name: String, df: org.apache.spark.sql.DataFrame) =
+        df.coalesce(1).write.parquet(s"$dir/$name.parquet")
+      put("orders", Seq((1L, 1L, "O", 10.0, ts, "1-URGENT")).toDF(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority"))
+      put("lineitem", Seq((1L, 1L, 1L, 1, 1.0, 10.0, 0.0, 0.0, "N", "O",
+        ts)).toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+        "l_returnflag", "l_linestatus", "l_shipdate"))
+      put("customer", Seq((1L, "c", 1, 0.0, "BUILDING")).toDF("c_custkey",
+        "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
+      put("supplier", Seq((1L, "s", 1, 0.0)).toDF("s_suppkey", "s_name",
+        "s_nationkey", "s_acctbal"))
+      put("events", Seq((1L, ts, 1L, "click", 1.0, "{}")).toDF("event_id",
+        "ts", "user_id", "event_type", "value", "props"))
+      dir
+    }
+    val in = writeInputs(s"$root/in")
+    graft.io.Sources.table(spark, in, "orders")
+    assert(jobs(graft.io.Sources.table(spark, in, "orders")) == 0) // parent: 1
+    val fresh = writeInputs(s"$root/in2")
+    // parent: 15 — every lineage inferred its inputs again, serially
+    assert(footerJobs(Publish.stageAll(spark, fresh, s"$root/stage")) == 5)
     graft.io.Sources.deleteRecursively(root)
   }
 }

@@ -128,4 +128,27 @@ class SourcesSpec extends SparkSpec {
     }
     assert(spark.conf.get(key) == before)
   }
+
+  test("table reuses an input's schema until its files change; " +
+    "concurrent first reads infer one schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("memo").toString
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/t.parquet")
+    assert(Sources.table(spark, dir, "t").schema.fieldNames.toSeq ==
+      Seq("id", "name"))
+    // a rewrite with a different schema is seen by the next read
+    Seq((2L, 3.5, "b")).toDF("id", "score", "name").write
+      .mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Sources.table(spark, dir, "t")
+    assert(again.schema.fieldNames.toSeq == Seq("id", "score", "name"))
+    assert(again.collect().map(r => (r.getLong(0), r.getDouble(1),
+      r.getString(2))).toSeq == Seq((2L, 3.5, "b")))
+    // two concurrent first reads of a fresh path
+    Seq((4L, "d")).toDF("id", "name").write.parquet(s"$dir/u.parquet")
+    val reads = graft.operators.Publish.concurrently(Seq(1, 2)) { _ =>
+      Sources.table(spark, dir, "u").schema
+    }
+    assert(reads.distinct.size == 1 &&
+      reads.head.fieldNames.toSeq == Seq("id", "name"))
+  }
 }

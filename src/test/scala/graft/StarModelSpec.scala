@@ -9,17 +9,17 @@ class StarModelSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("all six builders conform to their declared StructType") {
-    Publish.builders(spark, dir).foreach { case (m, df) =>
-      val conformed = StarModel.conform(df, m.schema)
+    Publish.builders(spark, dir).foreach { case (m, build) =>
+      val conformed = StarModel.conform(build(), m.schema)
       assert(StarModel.structurallyEqual(conformed.schema, m.schema),
         s"${m.name}: ${conformed.schema.treeString} != ${m.schema.treeString}")
     }
   }
 
   test("REQUIRED columns carry no nulls in any builder output") {
-    Publish.builders(spark, dir).foreach { case (m, df) =>
+    Publish.builders(spark, dir).foreach { case (m, build) =>
       val nulls = StarModel
-        .requiredNullCounts(StarModel.conform(df, m.schema), m.schema)
+        .requiredNullCounts(StarModel.conform(build(), m.schema), m.schema)
         .filter(_._2 > 0)
       assert(nulls.isEmpty, s"${m.name}: nulls in REQUIRED columns $nulls")
     }
