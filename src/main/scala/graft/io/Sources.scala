@@ -248,11 +248,42 @@ object Sources {
     * batch is already right-sized; frames whose size Catalyst cannot
     * estimate (e.g. rewrapped micro-batches, which report
     * `defaultSizeInBytes`) hit the cap and pass through unchanged.
-    * Results are layout-independent — file counts change, rows never
-    * do. */
+    * The estimate is Catalyst's, and one that undershoots (after a
+    * filter or join) would also coalesce the narrow stages upstream of
+    * the write down to a few tasks — so the count never falls below
+    * the frame's input partition count / [[MaxWriteShrink]]: a bad
+    * estimate costs file size, not stage parallelism. Results are
+    * layout-independent — file counts change, rows never do. */
   def sizedForWrite(df: DataFrame): DataFrame =
     df.coalesce(sizeDerivedPartitions(df.sparkSession,
-      df.queryExecution.optimizedPlan.stats.sizeInBytes))
+      df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .max(ceilDiv(inputPartitions(df.queryExecution.sparkPlan),
+        MaxWriteShrink)))
+
+  /** The most [[sizedForWrite]] narrows a frame's input parallelism. */
+  val MaxWriteShrink = 16
+
+  private def ceilDiv(a: Int, b: Int): Int = (a + b - 1) / b
+
+  /** The partitions a physical plan reads its inputs in, known before
+    * it runs: file-scan splits, range slices and RDD partitions, summed
+    * over a union and the widest input of any other operator; 1 for an
+    * input whose count it cannot learn without running something. */
+  private def inputPartitions(plan: org.apache.spark.sql.execution
+      .SparkPlan): Int = {
+    import org.apache.spark.sql.execution._
+    plan match {
+      case s: FileSourceScanExec =>
+        // a runtime-filtered scan's splits wait on its subqueries
+        Try(s.inputRDD.getNumPartitions).getOrElse(1)
+      case r: RangeExec => r.numSlices
+      case r: RDDScanExec => r.inputRDD.getNumPartitions
+      case r: ExternalRDDScanExec[_] => r.rdd.getNumPartitions
+      case u: UnionExec => u.children.map(inputPartitions).sum
+      case p if p.children.nonEmpty => p.children.map(inputPartitions).max
+      case _ => 1
+    }
+  }
 
   /** DataFrameWriter for graft-INTERNAL writes (staging dirs, logged
     * sinks, index sidecars): suppresses the job-level `_SUCCESS`

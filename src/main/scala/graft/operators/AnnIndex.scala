@@ -111,16 +111,13 @@ object AnnIndex {
     * postings carry, computed the IDENTICAL way [[build]] computes
     * them (which is what makes hybrid serving ≡ the index). */
   private def assignFiles(spark: SparkSession, hPath: Path,
-                          files: Seq[String],
-                          cms: Map[String, Map[String, String]],
-                          cts: Map[String, Map[String, String]],
-                          meta: Map[String, String],
+                          files: Seq[String], m: CommitLog.Manifest,
                           column: String, idColumn: String,
                           centroids: DataFrame): DataFrame = {
     val fs = fsOf(spark, hPath)
     val prefix = fs.makeQualified(hPath).toUri.getPath + "/"
-    val scan = CommitLog.mappedScan(spark, hPath, files, cms,
-      identity = true, coltypes = cts, meta = meta)
+    val scan = CommitLog.mappedScan(spark, hPath, files, m,
+      identity = true)
     val rows = scan.select(
         struct(
           CommitLog.relPathCol(prefix, col("__file_path"))
@@ -155,7 +152,6 @@ object AnnIndex {
     require(live.nonEmpty, s"ann build on an empty sink $path")
     val meta = m.meta
     val cms = m.colmaps
-    val cts = m.coltypes
     // 1. centroids: train ONCE over the current table, reuse forever
     // (catch-ups assign against the committed centroids — an index
     // whose cells drift per build would not be an index)
@@ -195,8 +191,8 @@ object AnnIndex {
         // postings file count ∝ bytes, never task count
         // (Sources.sizedForWrite — guide §2.2/§6)
         graft.io.Sources.internalWriter(graft.io.Sources.sizedForWrite(
-            assignFiles(spark, hPath, targets, cms, cts, meta, column,
-              idColumn, cents)))
+            assignFiles(spark, hPath, targets, m, column, idColumn,
+              cents)))
           .parquet(new Path(hPath, rel).toString)
         targets.map { f =>
           f -> Map(physOf(cms.getOrElse(f, Map.empty), column) -> rel)
@@ -240,8 +236,8 @@ object AnnIndex {
       }
     val inline: Option[DataFrame] =
       if (uncovered.isEmpty) None
-      else Some(assignFiles(spark, hPath, uncovered, cms, m.coltypes,
-        m.meta, column, idColumn, centroids))
+      else Some(assignFiles(spark, hPath, uncovered, m, column,
+        idColumn, centroids))
     val rows = (committed, inline) match {
       case (Some(a), Some(b)) => a.unionByName(b)
       case (Some(a), None) => a

@@ -92,8 +92,7 @@ object Cluster {
     val priorStatsCols =
       snap.stats.values.flatMap(_.keySet).toSeq.distinct.sorted
     // logical, DV-applied view: the rewrite pays down mapping/DV debt
-    val scan = CommitLog.mappedScan(spark, hPath, live, snap.colmaps,
-      snap.dvs, coltypes = snap.coltypes)
+    val scan = CommitLog.mappedScan(spark, hPath, live, snap, snap.dvs)
     val missing = cols.filterNot(scan.columns.contains)
     require(missing.isEmpty,
       s"zorderBy column(s) ${missing.mkString(", ")} not in $path's " +
@@ -193,7 +192,8 @@ object Cluster {
     CommitLog.swap(fs, hPath, baseGen, live, live, newFiles, failpoint,
       keepReplaced,
       stats = TableStats.plainFileStats(spark, fs, hPath, newFiles,
-        covered))
+        covered, Some(scan.schema)),
+      schema = Some(scan.schema))
     (live.size.toLong, newFiles.size.toLong)
   }
 

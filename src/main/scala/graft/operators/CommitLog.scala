@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
+  StructType}
 
 /** Generation-manifest commit protocol for plain-parquet sinks — the
   * table-format `_commit` pointer that makes the rewrite family
@@ -319,13 +321,21 @@ object CommitLog {
     *     row written by a constraint-aware writer must satisfy
     *     ([[requireChecks]]); carried UNCONDITIONALLY like `#txn`
     *     (constraints describe the table, not files);
-    *   - `#meta\t<keyEnc>\t<valueEnc>`: table PROPERTY (the catalog's
-    *     declared bootstrap schema `schema.ddl` and partition layout
-    *     `partition.cols`) — carried unconditionally like `#check`;
-    *     authoritative only while the table has NO files (once data
-    *     lands, the files' mapped schema and the committed hive
-    *     layout are the source of truth, so evolution never needs to
-    *     rewrite these records);
+    *   - `#meta\t<keyEnc>\t<valueEnc>`: table PROPERTY, carried
+    *     unconditionally like `#check`. `schema.ddl` ([[SchemaKey]])
+    *     is the table's LOGICAL schema, and every logged read plans
+    *     its parquet scan under it instead of inferring one from the
+    *     footers ([[scanFiles]]). The bootstrap of a never-logged
+    *     sink infers it once; the catalog's CREATE declares it; a
+    *     commit that writes files names their columns and the record
+    *     widens by them (or is replaced, when no earlier file
+    *     survives); a [[SchemaEvolve]] verb rewrites it; and a commit
+    *     that adds files without naming their columns drops it, so a
+    *     read then infers again rather than miss a column. A manifest
+    *     without it (one written before the record existed) reads by
+    *     inference. `partition.cols` is the declared layout, which
+    *     only a still-empty table reads — once files land the
+    *     committed hive layout is the truth;
     *   - `#bloom\t<dataRel>\t<physColEnc>\t<sidecarRelEnc>`: per-(file,
     *     column) Bloom-filter INDEX pointer into [[BloomDirName]]
     *     ([[TableStats.buildBloom]]) — point-lookup pruning for
@@ -352,6 +362,97 @@ object CommitLog {
       meta: Map[String, String] = Map.empty,
       blooms: Map[String, Map[String, String]] = Map.empty,
       anns: Map[String, Map[String, String]] = Map.empty)
+
+  /** `#meta` key of the table's logical schema record (a DDL string). */
+  val SchemaKey = "schema.ddl"
+
+  /** The logical schema `meta` records, every field nullable as a
+    * parquet read returns it; None when the manifest has no record. */
+  private[graft] def recordedSchema(meta: Map[String, String])
+  : Option[StructType] =
+    meta.get(SchemaKey).map(d => nullable(StructType.fromDDL(d)))
+
+  private def nullable(s: StructType): StructType = {
+    def of(dt: DataType): DataType = dt match {
+      case st: StructType => nullable(st)
+      case ArrayType(e, _) => ArrayType(of(e), containsNull = true)
+      case MapType(k, v, _) =>
+        MapType(of(k), of(v), valueContainsNull = true)
+      case other => other
+    }
+    StructType(s.fields.map(f =>
+      f.copy(dataType = of(f.dataType), nullable = true)))
+  }
+
+  /** `base` followed by the fields of `more` it lacks, in `more`'s
+    * order — the columns of a table that keeps `base`'s files and
+    * gains files written with `more`'s. */
+  private def widenSchema(base: StructType,
+                          more: StructType): StructType = {
+    val have = base.fieldNames.toSet
+    StructType(base.fields ++ more.fields.filterNot(f => have(f.name)))
+  }
+
+  /** Hive partition columns named by the `k=v` levels of `files`. */
+  private def pathPartCols(files: Seq[String]): Set[String] =
+    files.iterator.flatMap(_.split('/').init.iterator
+      .filter(_.contains('='))
+      .map(l => org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.unescapePathName(l.takeWhile(_ != '='))))
+      .toSet
+
+  /** A parquet scan of `files` (sink-relative; `basePath` keeps hive
+    * partition columns) planned under the logical schema `record`:
+    * each data column is read under the physical name `mapping` (a
+    * file group's `#colmap`, physical → logical, "" = dropped) gives
+    * it — itself when unmapped, left out when the name is renamed
+    * away or dropped in these files — with its logical type, so a
+    * file that lacks a column reads it as null and a widened one
+    * reads through the parquet reader's type promotion. Partition
+    * columns come from the paths. No Spark job plans it. Without a
+    * record the scan infers the union of every footer (one job). */
+  private[graft] def scanFiles(spark: SparkSession, sink: Path,
+                               files: Seq[String],
+                               record: Option[StructType],
+                               mapping: Map[String, String] = Map.empty)
+  : DataFrame = {
+    val reader = record match {
+      case Some(s) =>
+        val parts = pathPartCols(files)
+        spark.read.schema(StructType(s.fields.flatMap { f =>
+          mapping.collectFirst { case (p, l) if l == f.name => p }
+            .orElse(Some(f.name).filterNot(mapping.contains))
+            .filterNot(parts).map(p => f.copy(name = p))
+        }))
+      case None => spark.read.option("mergeSchema", "true")
+    }
+    reader.option("basePath", sink.toString)
+      .parquet(files.map(r => new Path(sink, r).toString): _*)
+  }
+
+  /** The columns of `m` as [[mappedScan]] returns them, without
+    * planning a scan when the record answers: a flat table's record,
+    * ADD-ed columns last. A partitioned table (partition types come
+    * from the paths) or one without a record plans the scan. */
+  private[graft] def logicalSchema(spark: SparkSession, sink: Path,
+                                   m: Manifest): StructType =
+    recordedSchema(m.meta) match {
+      case Some(s) if pathPartCols(m.files).isEmpty =>
+        StructType(addedLast(s.fieldNames.toIndexedSeq, m.meta)
+          .map(n => s(n)))
+      case _ => mappedScan(spark, sink, m.files, m).schema
+    }
+
+  /** `cols` with the columns `#meta schema.addorder` lists (written by
+    * [[SchemaEvolve]]'s ADD) moved to the end in declaration order. */
+  private def addedLast(cols: IndexedSeq[String],
+                        meta: Map[String, String]): IndexedSeq[String] = {
+    val addOrder: Map[String, Int] = meta.get("schema.addorder")
+      .map(_.split(',').toSeq.filter(_.nonEmpty).zipWithIndex.toMap)
+      .getOrElse(Map.empty)
+    val (added, rest) = cols.partition(addOrder.contains)
+    rest ++ added.sortBy(addOrder)
+  }
 
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
@@ -756,7 +857,11 @@ object CommitLog {
     * file prunable. `#txn` records carry UNCONDITIONALLY (highest
     * version per app id, `txn` overlays one) — they describe writer
     * history, not files, and must survive every rewrite or an
-    * idempotent writer would re-apply after a compaction. */
+    * idempotent writer would re-apply after a compaction.
+    *
+    * `schema` names the columns of the frame this commit's new files
+    * were written from; the [[SchemaKey]] record follows the rule in
+    * [[Manifest]]'s grammar (an explicit `meta` entry for it wins). */
   def commitNext(fs: FileSystem, sink: Path, baseGen: Long,
                  files: Seq[String],
                  dvs: Map[String, String] = Map.empty,
@@ -769,7 +874,8 @@ object CommitLog {
                  statsReplace: Boolean = false,
                  meta: Map[String, String] = Map.empty,
                  blooms: Map[String, Map[String, String]] = Map.empty,
-                 anns: Map[String, Map[String, String]] = Map.empty)
+                 anns: Map[String, Map[String, String]] = Map.empty,
+                 schema: Option[StructType] = None)
   : Long = {
     val gen = baseGen + 1
     val dir = logDir(sink)
@@ -843,8 +949,12 @@ object CommitLog {
     // writer bucket-routed drops the declaration LOUDLY in this same
     // commit (Bucketing.guardMeta), so the storage-partitioned-join
     // eligibility can never silently diverge from the files
+    val record =
+      if (meta.contains(SchemaKey)) meta.get(SchemaKey)
+      else nextRecord(base, files, schema)
     val mergedMeta = Bucketing.guardMeta(
-      (base.meta ++ meta).filter(_._2.nonEmpty),
+      (base.meta ++ meta - SchemaKey ++ record.map(SchemaKey -> _))
+        .filter(_._2.nonEmpty),
       base.files.toSet, files).filter(_._2.nonEmpty)
     // Bloom-index records carry per surviving file with per-(file,
     // column) overlay like #stats (an incremental build adds columns,
@@ -865,6 +975,24 @@ object CommitLog {
       files, mergedDvs, mergedStats, mergedTxns, mergedColmaps,
       mergedColtypes, mergedChecks, mergedDvMarks, mergedMeta,
       mergedBlooms, mergedAnns))
+  }
+
+  /** The [[SchemaKey]] record of a commit of `files` over `base` whose
+    * new files were written from a frame with `schema`: that schema
+    * when no file of `base` survives, else `base`'s record widened by
+    * it; with no `schema`, `base`'s record while the commit adds no
+    * file, else none (the added files' columns are unknown). */
+  private[graft] def nextRecord(base: Manifest, files: Seq[String],
+                                schema: Option[StructType])
+  : Option[String] = {
+    val baseFiles = base.files.toSet
+    schema match {
+      case Some(s) if !files.exists(baseFiles) => Some(nullable(s).toDDL)
+      case Some(s) => recordedSchema(base.meta)
+        .map(widenSchema(_, nullable(s)).toDDL)
+      case None if files.forall(baseFiles) => base.meta.get(SchemaKey)
+      case None => None
+    }
   }
 
   /** Serialize a FULL manifest verbatim and publish it exclusively as
@@ -969,12 +1097,14 @@ object CommitLog {
     * ledger on every attempt. Rewriters (compaction, merge, partition
     * replace) must NOT use this — their read snapshot is invalidated
     * by any winner, which is what the terminal [[commitNext]] conflict
-    * is for. */
+    * is for. `schema` names the appended files' columns and widens
+    * the schema record of whichever manifest the append lands on. */
   def commitAppend(fs: FileSystem, sink: Path, baseGen: Long,
                    liveAtBase: Seq[String], newFiles: Seq[String],
                    stats: Map[String, Map[String, ColStats]] = Map.empty,
                    txn: Option[(String, Long)] = None,
-                   maxAttempts: Int = 8): Long = {
+                   maxAttempts: Int = 8,
+                   schema: Option[StructType] = None): Long = {
     var base = baseGen
     var live = liveAtBase
     var attempt = 0
@@ -992,7 +1122,7 @@ object CommitLog {
           return base
       }
       try return commitNext(fs, sink, base, live ++ newFiles,
-        Map.empty, stats, txn)
+        Map.empty, stats, txn, schema = schema)
       catch {
         case e: CommitConflictException =>
           attempt += 1
@@ -1087,8 +1217,9 @@ object CommitLog {
     * `failpoint` fires after the adds ("added") and after the commit
     * ("committed") so CommitProtocolSpec can kill the swap at both
     * windows. A lost CAS is terminal: a rewriter's read snapshot is
-    * invalid once another writer commits. `stats` rides the commit as
-    * in [[commitNext]]. Returns the committed generation. */
+    * invalid once another writer commits. `stats` and `schema` (the
+    * columns of the frame `added` was written from) ride the commit
+    * as in [[commitNext]]. Returns the committed generation. */
   private[graft] def swap(fs: FileSystem, sink: Path, baseGen: Long,
                           live: Seq[String], replaced: Seq[String],
                           added: Seq[String],
@@ -1096,10 +1227,11 @@ object CommitLog {
                           keepReplaced: Boolean = false,
                           txn: Option[(String, Long)] = None,
                           stats: Map[String, Map[String, ColStats]] =
-                            Map.empty): Long = {
+                            Map.empty,
+                          schema: Option[StructType] = None): Long = {
     failpoint("added")
     val gen = commitNext(fs, sink, baseGen, live.diff(replaced) ++ added,
-      stats = stats, txn = txn)
+      stats = stats, txn = txn, schema = schema)
     failpoint("committed")
     if (!keepReplaced) replaced.foreach { r => // GC, best-effort
       try fs.delete(new Path(sink, r), false)
@@ -1713,14 +1845,15 @@ object CommitLog {
       .drop("__rel", "__pos")
   }
 
-  /** Scan `files` (sink-relative) with the manifest's per-file column
-    * mapping applied — the LOGICAL-schema view of a sink that has
-    * lived through [[SchemaEvolve]] renames/drops. Files group by
-    * mapping signature ("schema epoch"); each epoch is ONE
-    * mergeSchema scan whose columns are renamed/dropped by a single
-    * simultaneous select (swap-safe), then the epochs union by name
-    * with null-fill for additive differences. The epoch count is the
-    * number of DISTINCT surviving mappings — one rename of a quiet
+  /** Scan `files` (sink-relative) of manifest `m` with its per-file
+    * column mapping applied — the LOGICAL-schema view of a sink that
+    * has lived through [[SchemaEvolve]] renames/drops/widens/adds.
+    * Files group by mapping signature ("schema epoch"); each epoch is
+    * ONE scan under the schema record ([[scanFiles]], the group's
+    * physical names), whose columns are cast and renamed/dropped by a
+    * single simultaneous select (swap-safe), then the epochs union by
+    * name with null-fill for additive differences. The epoch count is
+    * the number of DISTINCT surviving mappings — one rename of a quiet
     * table is two epochs (pre-rename files, post-rename appends) — so
     * the union never fans out with file count, and with no mapping at
     * all this is exactly one scan, zero overhead. Per-epoch `dvs` are
@@ -1729,35 +1862,27 @@ object CommitLog {
     * per branch for callers that need per-row provenance across the
     * union (the merge family's touched-file scans). */
   private[graft] def mappedScan(spark: SparkSession, sink: Path,
-                                    files: Seq[String],
-                                    colmaps: Map[String, Map[String,
-                                      String]],
-                                    dvs: Map[String, String] =
-                                      Map.empty,
-                                    identity: Boolean = false,
-                                    coltypes: Map[String, Map[String,
-                                      String]] = Map.empty,
-                                    meta: Map[String, String] =
-                                      Map.empty)
+                                files: Seq[String], m: Manifest,
+                                dvs: Map[String, String] = Map.empty,
+                                identity: Boolean = false)
   : DataFrame = {
     import org.apache.spark.sql.functions.col
     require(files.nonEmpty, "mappedScan of an empty file list")
+    val record = recordedSchema(m.meta)
     // declaration order of metadata-added columns (`#meta
     // schema.addorder`, written by SchemaEvolve's ADD) — without it a
     // map-keyed sort would surface added columns name-ordered and
     // break positional INSERT resolution
-    val addOrder: Map[String, Int] = meta.get("schema.addorder")
+    val addOrder: Map[String, Int] = m.meta.get("schema.addorder")
       .map(_.split(',').toSeq.filter(_.nonEmpty).zipWithIndex.toMap)
       .getOrElse(Map.empty)
     val fs = sink.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val groups = files.groupBy(f => (colmaps.getOrElse(f, Map.empty),
-        coltypes.getOrElse(f, Map.empty)))
+    val groups = files.groupBy(f => (m.colmaps.getOrElse(f, Map.empty),
+        m.coltypes.getOrElse(f, Map.empty)))
       .toSeq.sortBy(_._2.head) // deterministic branch order
     val branches = groups.map { case ((mapping, types), gFiles) =>
       val gSet = gFiles.toSet
-      var df = spark.read.option("mergeSchema", "true")
-        .option("basePath", sink.toString)
-        .parquet(gFiles.map(r => new Path(sink, r).toString): _*)
+      var df = scanFiles(spark, sink, gFiles, record, mapping)
       if (identity)
         df = df.withColumn("__file_path", col("_metadata.file_path"))
           .withColumn("__row_index", col("_metadata.row_index"))
@@ -1765,7 +1890,7 @@ object CommitLog {
         dvs.filter { case (f, _) => gSet(f) })
       // widening casts first (keyed by PHYSICAL name), then the
       // rename/drop mapping in one simultaneous select. A `#coltype`
-      // record whose physical column is ABSENT from the scanned files
+      // record whose physical column is ABSENT from the scan
       // materializes as a typed NULL column (appended after the
       // physical ones, in `schema.addorder` declaration order) —
       // [[SchemaEvolve.addColumn]]'s metadata-only ADD: pre-ADD files
@@ -1806,14 +1931,9 @@ object CommitLog {
     // they were added after every physical column existed, and
     // positional INSERT resolution depends on a stable slot. (The
     // extra projection collapses into the plan.)
-    if (addOrder.isEmpty) unioned
-    else {
-      val cols = unioned.columns.toIndexedSeq
-      val (added, rest) = cols.partition(addOrder.contains)
-      if (added.isEmpty) unioned
-      else unioned.select((rest ++ added.sortBy(addOrder))
-        .map(col): _*)
-    }
+    val cols = unioned.columns.toIndexedSeq
+    val ordered = addedLast(cols, m.meta)
+    if (ordered == cols) unioned else unioned.select(ordered.map(col): _*)
   }
 
   /** Row-level change data feed between two committed generations,
@@ -1884,9 +2004,12 @@ object CommitLog {
     require(missing.isEmpty,
       s"changed files were reclaimed (vacuumed): $missing")
     val prefix = fs.makeQualified(hPath).toUri.getPath + "/"
+    // every changed file reads under `toGen`'s schema record; files
+    // under a column mapping read their physical columns, inferred
+    val record = recordedSchema(mB.meta).filter(_ => Seq(mA, mB).forall(
+      m => m.colmaps.isEmpty && m.coltypes.isEmpty))
     def withIdentity(files: Seq[String]): DataFrame =
-      spark.read.option("basePath", sink)
-        .parquet(files.map(r => new Path(hPath, r).toString): _*)
+      scanFiles(spark, hPath, files, record)
         .withColumn("__rel",
           relPathCol(prefix, col("_metadata.file_path")))
         .withColumn("__pos", col("_metadata.row_index"))
@@ -1962,13 +2085,29 @@ object CommitLog {
   private[graft] def ensureSnapshotAt(fs: FileSystem, sink: Path)
   : (Long, Manifest) =
     latestSnapshot(fs, sink).getOrElse {
-      // generation 0 records nothing but the listed files
-      val m = listedManifest(fs, sink)
-      try (commitNext(fs, sink, -1L, m.files), m)
+      // generation 0 records the listed files and the schema their
+      // footers carry, inferred this once
+      val listed = listedManifest(fs, sink)
+      val m = listed.copy(meta = inferredSchema(sink, listed.files)
+        .fold(Map.empty[String, String])(s => Map(SchemaKey -> s.toDDL)))
+      try (commitNext(fs, sink, -1L, m.files, meta = m.meta), m)
       catch {
         case _: CommitConflictException => latestSnapshot(fs, sink).get
       }
     }
+
+  /** The union of the footer schemas of `files` (one Spark job), for
+    * the bootstrap of a never-logged sink — None without files, without
+    * an active session, or when the footers do not merge (the sink then
+    * reads by inference, as before it was logged). */
+  private def inferredSchema(sink: Path,
+                             files: Seq[String]): Option[StructType] =
+    if (files.isEmpty) None
+    else SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .flatMap { spark =>
+        try Some(nullable(scanFiles(spark, sink, files, None).schema))
+        catch { case scala.util.control.NonFatal(_) => None }
+      }
 
   /** [[ensureSnapshotAt]] for callers that need only (generation, live
     * files). */
@@ -2053,11 +2192,11 @@ object CommitLog {
     * so partition columns still materialize from directory names),
     * plain directory read otherwise. This is THE reader the protocol's
     * guarantee is stated for — a plain `spark.read.parquet(sink)` is
-    * only equivalent once [[vacuum]] has run. `mergeSchema = true`
-    * unions the live files' footer schemas — the reader side of
-    * [[Merge.mergeParquet]]'s lazy schema evolution, where untouched
-    * files legitimately carry an older (narrower) schema and their
-    * rows take NULLs for the widened columns. */
+    * only equivalent once [[vacuum]] has run. A logged sink reads
+    * under its schema record, so files that carry an older (narrower)
+    * schema — [[Merge.mergeParquet]]'s lazy schema evolution — read
+    * NULLs for the widened columns. `mergeSchema` applies only to the
+    * directory read of a never-logged sink. */
   def read(spark: SparkSession, sink: String,
            mergeSchema: Boolean = false): DataFrame = {
     val hPath = new Path(sink)
@@ -2065,27 +2204,22 @@ object CommitLog {
     latestSnapshot(fs, hPath) match {
       case None => spark.read.option("mergeSchema", mergeSchema.toString)
         .parquet(sink)
-      case Some((_, m)) => readSnapshot(spark, sink, fs, m, mergeSchema)
+      case Some((_, m)) => readSnapshot(spark, sink, fs, m)
     }
   }
 
   /** The visible rows of one manifest: its live files through their
-    * column mappings and deletion vectors — what [[read]] and
-    * [[readAt]] return, and the read for a caller already holding the
-    * snapshot it commits against. */
+    * column mappings and deletion vectors, under its schema record —
+    * what [[read]] and [[readAt]] return, and the read for a caller
+    * already holding the snapshot it commits against. */
   private[graft] def readSnapshot(spark: SparkSession, sink: String,
-                                  fs: FileSystem, m: Manifest,
-                                  mergeSchema: Boolean = false)
+                                  fs: FileSystem, m: Manifest)
   : DataFrame = {
     val hPath = new Path(sink)
     if (m.files.isEmpty) spark.emptyDataFrame
     else if (m.colmaps.nonEmpty || m.coltypes.nonEmpty)
-      mappedScan(spark, hPath, m.files, m.colmaps, m.dvs,
-        coltypes = m.coltypes, meta = m.meta)
+      mappedScan(spark, hPath, m.files, m, m.dvs)
     else applyDvs(spark, hPath, fs,
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .option("basePath", sink)
-        .parquet(m.files.map(r => new Path(hPath, r).toString): _*),
-      m.dvs)
+      scanFiles(spark, hPath, m.files, recordedSchema(m.meta)), m.dvs)
   }
 }

@@ -115,10 +115,7 @@ object Compact {
             (live.map(r => new Path(hPath, r).toString).toSet --
               found.map(_.getPath.toString).toSet).toSeq.sorted.take(5)
               .mkString(", ")}")
-      // deterministic order: groupBy is hash-ordered, and
-      // before.head's footer is the partitioned read's schema source —
-      // on a mixed-footer (evolved) sink the winner must not be
-      // run-dependent
+      // deterministic order: groupBy is hash-ordered
       found.sortBy(_.getPath.toString)
     }
     if (before.isEmpty) return (0L, 0L)
@@ -145,39 +142,38 @@ object Compact {
     val stageCols = partitionCols ++
       bucketSpec.map(_ => Bucketing.StageCol)
 
+    // every live row, under the schema record; a partitioned sink
+    // reads each partition column as STRING via the explicit schema:
+    // directory names round-trip verbatim (no int re-inference)
+    val record = CommitLog.recordedSchema(m.meta)
+    val rows =
+      if (partitionCols.isEmpty)
+        CommitLog.scanFiles(spark, hPath, live, record)
+      else {
+        val logical = record.getOrElse(
+          CommitLog.scanFiles(spark, hPath, live, None).schema)
+        spark.read.schema(StructType(logical.fields
+            .filterNot(f => partitionCols.contains(f.name)) ++
+            partitionCols.map(StructField(_, StringType))))
+          .option("basePath", hPath.toString).parquet(liveAbs: _*)
+      }
+
     // add → COMMIT → delete: the compacted files move in (partition
     // directories preserved, bucket ids folded into fresh names), the
     // new generation commits, then every pre-compaction file is GC'd
     val newFiles = CommitLog.stageIn(fs, hPath, "compact") { tmp =>
-      if (partitionCols.nonEmpty) {
-        // read every partition column as STRING via an explicit schema:
-        // directory names round-trip verbatim (no int re-inference)
-        val dataSchema = spark.read
-          .parquet(before.head.getPath.toString).schema
-        val readSchema = StructType(dataSchema.fields ++
-          partitionCols.map(StructField(_, StringType)))
+      if (stageCols.nonEmpty)
         graft.io.Sources.internalWriter(
-          routed(spark.read.schema(readSchema)
-              .option("basePath", hPath.toString)
-              .parquet(liveAbs: _*))
-            // one task per LEAF (partition tuple, bucket) → one file per
-            // leaf (a partition larger than targetBytes stays one file
-            // here; a finer split would hash-salt within the partition)
-            .repartition(stageCols.map(col): _*))
+          // one task per LEAF (partition tuple, bucket) → one file per
+          // leaf (a partition larger than targetBytes stays one file
+          // here; a finer split would hash-salt within the partition)
+          routed(rows).repartition(stageCols.map(col): _*))
           .partitionBy(stageCols: _*).parquet(tmp.toString)
-      } else if (bucketSpec.isDefined) {
-        graft.io.Sources.internalWriter(
-          routed(spark.read.parquet(liveAbs: _*))
-            .repartition(col(Bucketing.StageCol)))
-          .partitionBy(Bucketing.StageCol).parquet(tmp.toString)
-      } else {
-        graft.io.Sources.internalWriter(
-          spark.read.parquet(liveAbs: _*)
-            .repartition(targetFiles.toInt)).parquet(tmp.toString)
-      }
+      else graft.io.Sources.internalWriter(
+          rows.repartition(targetFiles.toInt)).parquet(tmp.toString)
     }
     CommitLog.swap(fs, hPath, baseGen, live, live, newFiles, failpoint,
-      keepReplaced)
+      keepReplaced, schema = Some(rows.schema))
     (before.size, newFiles.size)
   }
 
@@ -252,9 +248,10 @@ object Compact {
       // add → COMMIT → delete: each bin's single file moves into its
       // partition directory (the __bin level is planning scaffolding,
       // folded into the file name by the move-in)
+      val rows = CommitLog.scanFiles(spark, hPath, assigned,
+        CommitLog.recordedSchema(m.meta))
       val newFiles = CommitLog.stageIn(fs, hPath, "plan") { tmp =>
-        spark.read.option("basePath", hPath.toString)
-          .parquet(assigned.map(r => new Path(hPath, r).toString): _*)
+        rows
           .withColumn("__norm",
             regexp_extract(col("_metadata.file_path"), pathRe, 1))
           .join(broadcast(planDF), col("__norm") === col("__plan_path"),
@@ -272,7 +269,7 @@ object Compact {
           .partitionBy(partitionCol, "__bin").parquet(tmp.toString)
       }
       CommitLog.swap(fs, hPath, baseGen, live, assigned, newFiles,
-        failpoint)
+        failpoint, schema = Some(rows.drop(collapseCols: _*).schema))
       (assigned.size.toLong, newFiles.size.toLong)
     }
   }

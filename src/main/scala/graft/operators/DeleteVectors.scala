@@ -59,25 +59,21 @@ object DeleteVectors {
   : Column = CommitLog.relPathCol(prefix, fp)
 
   /** Live scan carrying (`__file` sink-relative, `__pos`) row
-    * identity — raw single scan for unmapped sinks, the
-    * [[CommitLog.mappedScan]] logical view (identity columns
-    * materialized per epoch) for [[SchemaEvolve]]-mapped ones, so
-    * predicate deletes keep working after a rename with predicates in
-    * LOGICAL names. */
+    * identity under the manifest's schema record — one scan for
+    * unmapped sinks, the [[CommitLog.mappedScan]] logical view
+    * (identity columns materialized per epoch) for
+    * [[SchemaEvolve]]-mapped ones, so predicate deletes keep working
+    * after a rename with predicates in LOGICAL names. */
   private def identityScan(spark: SparkSession, hPath: Path,
-                           live: Seq[String], prefix: String,
-                           cms: Map[String, Map[String, String]],
-                           cts: Map[String, Map[String, String]])
+                           m: CommitLog.Manifest, prefix: String)
   : org.apache.spark.sql.DataFrame = {
-    if (cms.isEmpty && cts.isEmpty)
-      spark.read.option("mergeSchema", "true")
-        .option("basePath", hPath.toString)
-        .parquet(live.map(r => new Path(hPath, r).toString): _*)
+    if (m.colmaps.isEmpty && m.coltypes.isEmpty)
+      CommitLog.scanFiles(spark, hPath, m.files,
+          CommitLog.recordedSchema(m.meta))
         .withColumn("__file", relPathCol(prefix))
         .withColumn("__pos", col("_metadata.row_index"))
     else
-      CommitLog.mappedScan(spark, hPath, live, cms, identity = true,
-          coltypes = cts)
+      CommitLog.mappedScan(spark, hPath, m.files, m, identity = true)
         .withColumn("__file", relPathCol(prefix, col("__file_path")))
         .withColumn("__pos", col("__row_index"))
         .drop("__file_path", "__row_index")
@@ -196,8 +192,7 @@ object DeleteVectors {
       // EXISTING deletes are anti-joined away so rows already deleted
       // can't be re-marked and the returned count is exactly the rows
       // this call removed
-      val raw = identityScan(spark, hPath, live, prefix,
-        m.colmaps, m.coltypes)
+      val raw = identityScan(spark, hPath, m, prefix)
       val visible =
         if (dvs.isEmpty) raw
         else raw.join(
@@ -294,14 +289,13 @@ object DeleteVectors {
     val prefix = fs.makeQualified(hPath).toUri.getPath + "/"
     // the Merge/applyCdc discipline, enforced BEFORE any mark or
     // append: (1) the batch must carry exactly the sink's columns — a
-    // mis-shaped batch would write mixed-schema files that
-    // mergeSchema=false readers silently drop columns from; (2) the
+    // mis-shaped batch would write files with columns the schema
+    // record does not name, which readers would never see; (2) the
     // batch must be unique per key — two update rows sharing a key
     // would BOTH land as live rows, and with no per-key sequence
     // column an automatic keep-one would be nondeterministic, so the
     // producer dedupes first ([[Upsert.dedupKeepFirstAgg]])
-    val scanId = identityScan(spark, hPath, live, prefix,
-      m.colmaps, m.coltypes)
+    val scanId = identityScan(spark, hPath, m, prefix)
     val sinkCols = scanId.columns.filterNot(c =>
       c == "__file" || c == "__pos")
     require(sinkCols.sorted.sameElements(updates.columns.sorted),
@@ -385,7 +379,7 @@ object DeleteVectors {
     while (!committed) {
       try {
         CommitLog.commitNext(fs, hPath, base, liveNow ++ newFiles,
-          dvMap, dvMarks = dvCounts)
+          dvMap, dvMarks = dvCounts, schema = Some(conformed.schema))
         committed = true
       } catch {
         case e: CommitConflictException =>
@@ -413,11 +407,8 @@ object DeleteVectors {
                 s"constraints at $path — re-run the MERGE so the " +
                 "batch is re-validated")
           val winnerNew = l2.filterNot(seen)
-          val keyOverlap = winnerNew.nonEmpty && spark.read
-            .option("mergeSchema", "true")
-            .option("basePath", hPath.toString)
-            .parquet(winnerNew.map(r =>
-              new Path(hPath, r).toString): _*)
+          val keyOverlap = winnerNew.nonEmpty && CommitLog.scanFiles(
+              spark, hPath, winnerNew, CommitLog.recordedSchema(m2.meta))
             .select(keys.map(col): _*)
             .join(batch, keys, "left_semi").take(1).nonEmpty
           val commutes = attempt < maxAttempts && !keyOverlap &&
@@ -543,8 +534,10 @@ object DeleteVectors {
     val mBase = CommitLog.manifestAt(fs, hPath, baseGen)
     while (!committed) {
       try {
+        // the inserts carry the pinned snapshot's columns
         CommitLog.commitNext(fs, hPath, base, liveNow ++ added,
-          dvMap, dvMarks = dvCounts)
+          dvMap, dvMarks = dvCounts,
+          schema = CommitLog.recordedSchema(mBase.meta))
         committed = true
       } catch {
         case e: CommitConflictException =>
@@ -604,8 +597,10 @@ object DeleteVectors {
     val partCols = targets.head.split('/').dropRight(1)
       .filter(_.contains('=')).map(_.takeWhile(_ != '='))
     val targetAbs = targets.map(r => new Path(hPath, r).toString)
-    val dataSchema = spark.read.parquet(targetAbs.head).schema
-    val readSchema = StructType(dataSchema.fields ++
+    val logical = CommitLog.recordedSchema(m.meta).getOrElse(
+      CommitLog.scanFiles(spark, hPath, targets, None).schema)
+    val readSchema = StructType(logical.fields
+      .filterNot(f => partCols.contains(f.name)) ++
       partCols.map(StructField(_, StringType)))
     val dv = CommitLog.dvScan(spark, hPath, dvs.values.toSeq)
       .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
@@ -631,7 +626,7 @@ object DeleteVectors {
           graft.io.Sources.sizedForWrite(kept)).parquet(tmp.toString)
     }
     CommitLog.swap(fs, hPath, baseGen, live, targets, newFiles,
-      failpoint)
+      failpoint, schema = Some(kept.schema))
     (targets.length.toLong, newFiles.length.toLong)
   }
 }

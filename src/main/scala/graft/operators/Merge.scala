@@ -16,16 +16,16 @@ import org.apache.spark.sql.functions._
   * Scale shape: the cost is proportional to the files the update
   * batch TOUCHES, not the sink —
   *   1. ONE key-projected scan of the sink tags each key with its file
-  *      (`_metadata.file_path`, a generated column — no extra I/O) and
-  *      a semi-join against the batch keys reduces to the distinct
-  *      touched-file list (bounded by |sink files|, collected);
+  *      (`_metadata.file_path`, a generated column — no extra I/O); its
+  *      join with the batch keys, aggregated once, yields the distinct
+  *      touched-file list (bounded by |sink files|, collected) and the
+  *      matched-row count;
   *   2. only those files are re-read; because a batch key that matches
-  *      ANY sink row matches it in a touched file, the matched/insert
-  *      split of the batch derives from this touched-file read too —
-  *      no second or third full-sink key pass (the round-6 demand);
-  *   3. unmatched touched rows union the matched payloads and the
-  *      inserts, and rewrite.
-  * The batch-key side of the semi-join is left UNHINTED: a small batch
+  *      ANY sink row matches it in a touched file, their rows whose key
+  *      the batch does not carry, plus the whole batch (its matched
+  *      payloads and its inserts), are the rewrite — no second
+  *      full-sink key pass (the round-6 demand).
+  * The batch-key side of the join is left UNHINTED: a small batch
   * broadcasts by AQE's own estimate, a reconciliation-sized batch
   * shuffles — the same guard discipline as
   * [[Graphs.triangleStats]]'s degree table.
@@ -83,32 +83,88 @@ object Merge {
     * present): matched/inserted rows land with the new columns,
     * unmatched rows in touched files take NULLs, and UNTOUCHED files
     * keep their old schema byte-identically — exactly a table
-    * format's automatic schema merge. Readers resolve the mixed
-    * on-disk schemas via [[CommitLog.read]]'s `mergeSchema = true`
-    * (per-footer union, the standard parquet evolution contract);
+    * format's automatic schema merge. The commit widens the table's
+    * schema record by the new columns, so every reader resolves the
+    * mixed on-disk schemas through it (a narrower file reads NULLs);
     * cost stays touched-file-proportional because widening is lazy —
     * no untouched file is ever rewritten to add a NULL column. */
   /** Live-file scan in the table's LOGICAL schema plus `__f` (the
     * absolute file path — per-row provenance that survives a union,
-    * unlike `_metadata`). With no column mapping this is exactly the
-    * historical one mergeSchema scan; a [[SchemaEvolve]]-mapped sink
-    * routes through [[CommitLog.mappedScan]] (one scan per schema
+    * unlike `_metadata`), planned under the manifest's schema record.
+    * With no column mapping this is one scan; a [[SchemaEvolve]]-mapped
+    * sink routes through [[CommitLog.mappedScan]] (one scan per schema
     * epoch) so the merge family keeps working after a rename/drop
     * without any rewrite. */
   private def liveScan(spark: SparkSession, hPath: Path,
-                       live: Seq[String],
-                       cms: Map[String, Map[String, String]],
-                       cts: Map[String, Map[String, String]])
-  : DataFrame = {
-    if (cms.isEmpty && cts.isEmpty)
-      spark.read.option("mergeSchema", "true")
-        .option("basePath", hPath.toString)
-        .parquet(live.map(r => new Path(hPath, r).toString): _*)
+                       m: CommitLog.Manifest): DataFrame =
+    if (m.colmaps.isEmpty && m.coltypes.isEmpty)
+      CommitLog.scanFiles(spark, hPath, m.files,
+          CommitLog.recordedSchema(m.meta))
         .withColumn("__f", col("_metadata.file_path"))
-    else CommitLog.mappedScan(spark, hPath, live, cms,
-        identity = true, coltypes = cts)
+    else CommitLog.mappedScan(spark, hPath, m.files, m, identity = true)
       .withColumnRenamed("__file_path", "__f").drop("__row_index")
+
+  /** `df` pinned for the passes of one call: a lazy local checkpoint.
+    * The first job that reads it keeps its rows and every later plan
+    * reads them back — without the cache-building job that a cached
+    * frame's query stage runs for each place a plan reads it, and with
+    * the size estimate that lets AQE broadcast it. [[release]] drops
+    * the kept rows. */
+  private def pinned(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = false)
+
+  private def release(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** The one key pass of the merge family: ONE aggregation over the
+    * batch's keys (and ops, when `op` is given) and the sink rows they
+    * match. The match is an inner join of the sink's key-projected
+    * (`__f`, keys) scan with the batch, which AQE broadcasts; the
+    * batch rows and the matches then group by key, so the shuffle
+    * carries the batch and its matches, never the sink. A null key
+    * groups with the other null keys of the batch and never matches
+    * the sink. Without `op` every key counts as `U`. */
+  private def keyPass(scan: DataFrame, batch: DataFrame,
+                      keyCols: Seq[String], op: Option[String])
+  : KeyPass = {
+    val keys = keyCols.map(col)
+    val opOf = op.fold(lit("U"))(col(_)).as("__op")
+    val hits = scan.select(col("__f") +: keys: _*)
+      .join(batch.select(keys :+ opOf: _*), keyCols)
+      .select(keys :+ col("__op") :+ col("__f") :+ lit(0L).as("__b"): _*)
+    val rows = batch.select(keys :+ opOf :+ lit(null).cast("string")
+      .as("__f") :+ lit(1L).as("__b"): _*)
+    val perKey = rows.unionByName(hits).groupBy(keys: _*).agg(
+      sum(col("__b")).as("__n"), first(col("__op")).as("__op"),
+      count(col("__f")).as("__hits"), collect_set(col("__f")).as("__fs"))
+    def total(c: org.apache.spark.sql.Column) = coalesce(sum(c), lit(0L))
+    val isU = col("__op") === "U"
+    val hit = col("__hits") > 0
+    val r = perKey.agg(total(col("__n")), count(lit(1)),
+      total(when(col("__n") > 1, 1L).otherwise(0L)),
+      total(when(isU, 1L).otherwise(0L)),
+      total(when(col("__op") === "D", col("__hits")).otherwise(0L)),
+      total(when(isU && hit, 1L).otherwise(0L)),
+      total(when(hit, col("__n")).otherwise(0L)),
+      flatten(collect_set(col("__fs")))).head()
+    KeyPass(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4), r.getLong(5), r.getLong(6),
+      r.getSeq[String](7).distinct.sorted)
   }
+
+  /** What [[keyPass]] answers: batch rows and keys, keys carrying more
+    * than one row, keys whose op is `U`, sink rows matched by a `D`
+    * key, `U` keys that match a sink row, batch rows whose key matches
+    * a sink row, and the touched files (scan paths, sorted). */
+  private final case class KeyPass(rows: Long, keys: Long,
+                                   conflicts: Long, upserts: Long,
+                                   deleted: Long, updatedKeys: Long,
+                                   matchedRows: Long,
+                                   touched: Seq[String])
 
   /** Hive-partition column names of the sink's live layout, from the
     * rel paths alone (no I/O); Nil for a flat sink. The family
@@ -145,20 +201,17 @@ object Merge {
     * additive columns null-filled — the `.schema(...)` pinning the
     * unmapped path used, expressed mapping-aware). */
   private def touchedScan(spark: SparkSession, hPath: Path,
-                          touchedRel: Seq[String],
-                          cms: Map[String, Map[String, String]],
-                          cts: Map[String, Map[String, String]],
+                          touchedRel: Seq[String], m: CommitLog.Manifest,
                           schema: org.apache.spark.sql.types.StructType)
   : DataFrame = {
     // read paths rebuilt from the DECODED rel names — the collected
     // absolute strings are URI-encoded (`_metadata.file_path`) and a
     // literal '%20' in a Path is a different file
-    if (cms.isEmpty && cts.isEmpty) spark.read.schema(schema)
+    if (m.colmaps.isEmpty && m.coltypes.isEmpty) spark.read.schema(schema)
       .option("basePath", hPath.toString)
       .parquet(touchedRel.map(r => new Path(hPath, r).toString): _*)
     else {
-      val df = CommitLog.mappedScan(spark, hPath, touchedRel, cms,
-        coltypes = cts)
+      val df = CommitLog.mappedScan(spark, hPath, touchedRel, m)
       val have = df.columns.toSet
       df.select(schema.fields.toIndexedSeq.map { f =>
         if (have(f.name)) col(f.name).cast(f.dataType)
@@ -184,11 +237,8 @@ object Merge {
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
     CommitLog.requireNoDvs(m.dvs, hPath, "mergeParquet")
-    val cms = m.colmaps
-    val cts = m.coltypes
-    val scan = liveScan(spark, hPath, live, cms, cts)
-    val sinkDF = scan.drop("__f")
-    val sinkSchema = sinkDF.schema
+    val scan = liveScan(spark, hPath, m)
+    val sinkSchema = scan.drop("__f").schema
     if (allowSchemaEvolution)
       require(sinkSchema.fieldNames.forall(updates.columns.contains),
         s"schema evolution widens only: updates must carry every sink " +
@@ -204,66 +254,46 @@ object Merge {
     // CHECK constraints gate the batch before anything stages
     CommitLog.requireChecks(m.checks, keyed, "mergeParquet")
 
-    // small frame, three consumers (touched files, matched rewrite,
-    // insert anti-join) — cache, released in the finally (a crash —
-    // real or failpoint-injected — must not leak the blocks)
-    val batch = keyed.cache()
+    // small frame, read by the key pass and the rewrite — pinned,
+    // released in the finally (a crash — real or failpoint-injected —
+    // must not leak the blocks)
+    val batch = pinned(keyed)
     try {
 
-    // 1. touched files: THE one full-sink key scan (key columns only —
-    // the file path is parquet metadata, no extra I/O)
-    val sinkKeys = scan
-      .select(col("__f") +: keyCols.map(col): _*)
-    val touched = sinkKeys
-      .join(batch.select(keyCols.map(col): _*), keyCols, "left_semi")
-      .select("__f").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
+    // 1. THE one full-sink key scan (key columns only — the file path
+    // is parquet metadata, no extra I/O): the touched files, the batch
+    // rows and the batch rows whose key matches a sink row
+    val pass = keyPass(scan, batch, keyCols, None)
+    val touched = pass.touched
     val touchedRel = touched.map(f => CommitLog.relativize(fs, hPath,
       CommitLog.decodeScanPath(f)))
+    val nUpdated = pass.matchedRows
+    val nInserted = pass.rows - nUpdated
 
-    // 2. matched/inserts split of the batch, derived from the touched
-    // files alone: a batch key matching ANY sink row matches it in a
-    // touched file, so the full sink is never key-scanned again
-    val touchedKeys =
-      if (touched.isEmpty) null
-      else touchedScan(spark, hPath, touchedRel, cms,
-          cts, sinkSchema)
-        .select(keyCols.map(col): _*)
-    val matched =
-      if (touched.isEmpty) batch.filter(lit(false))
-      else batch.join(touchedKeys, keyCols, "left_semi")
-    val inserts =
-      if (touched.isEmpty) batch
-      else batch.join(touchedKeys, keyCols, "left_anti")
-    val nUpdated = matched.count()
-    // the semi/anti pair partitions the cached batch EXACTLY, so the
-    // insert count is arithmetic over the cached batch — the anti-join
-    // count job (one more keys-scan of every touched file) is never run
-    // (guide §1.2: remove unnecessary passes)
-    val nInserted = batch.count() - nUpdated
-
-    // 3. rewrite = touched files' unmatched rows + matched payloads;
-    // inserts ride the same write. Staged first so a failed job can't
-    // leave partial part-files inside the sink.
+    // 2. rewrite = touched files' rows whose key the batch does not
+    // carry + the whole batch: a batch key that matches ANY sink row
+    // matches it in a touched file, so the batch's matched and
+    // unmatched rows — the updates and the inserts — are all of it.
+    // Staged first so a failed job can't leave partial part-files
+    // inside the sink.
     val rewritten =
-      if (touched.isEmpty) inserts
-      else touchedScan(spark, hPath, touchedRel, cms,
-          cts, sinkSchema)
+      if (touched.isEmpty) batch
+      else touchedScan(spark, hPath, touchedRel, m, sinkSchema)
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
         // evolution: the kept old-schema rows take NULLs for the
         // batch's new columns
-        .unionByName(matched, allowMissingColumns = allowSchemaEvolution)
-        .unionByName(inserts, allowMissingColumns = allowSchemaEvolution)
+        .unionByName(batch, allowMissingColumns = allowSchemaEvolution)
     if (nUpdated + nInserted > 0)
       rewriteIn(fs, hPath, "merge", rewritten, baseGen, live,
         touchedRel, failpoint, keepReplaced)
     MergeStats(live.length.toLong, touched.length.toLong,
       nUpdated, nInserted)
-    } finally batch.unpersist(blocking = false)
+    } finally release(batch)
   }
 
   /** Stage `rewritten` in the sink's layout, move it in and swap it
-    * for `touchedRel` ([[CommitLog.stageIn]] → [[CommitLog.swap]]). */
+    * for `touchedRel` ([[CommitLog.stageIn]] → [[CommitLog.swap]]);
+    * its columns widen the table's schema record. */
   private def rewriteIn(fs: org.apache.hadoop.fs.FileSystem, hPath: Path,
                         tag: String, rewritten: DataFrame, baseGen: Long,
                         live: Seq[String], touchedRel: Seq[String],
@@ -273,7 +303,7 @@ object Merge {
     val added = CommitLog.stageIn(fs, hPath, tag)(
       writeRewrite(rewritten, _, partColsOf(live)))
     CommitLog.swap(fs, hPath, baseGen, live, touchedRel, added,
-      failpoint, keepReplaced, txn)
+      failpoint, keepReplaced, txn, schema = Some(rewritten.schema))
   }
 
   /** Erasure outcome: live files in the sink before, files rewritten,
@@ -313,16 +343,12 @@ object Merge {
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
     CommitLog.requireNoDvs(m.dvs, hPath, "eraseParquet")
-    val cms = m.colmaps
-    val cts = m.coltypes
-    // mergeSchema (inside liveScan): a sink widened by
+    // under the schema record: a sink widened by
     // mergeParquet(allowSchemaEvolution) legitimately carries mixed
-    // footer schemas; without the union one narrow footer could win
-    // and the rewrite would silently drop the evolved columns' values
-    // from every touched wide file
-    val scan = liveScan(spark, hPath, live, cms, cts)
-    val sinkDF = scan.drop("__f")
-    val sinkSchema = sinkDF.schema
+    // footer schemas, and the rewrite of a touched wide file must keep
+    // the evolved columns' values
+    val scan = liveScan(spark, hPath, m)
+    val sinkSchema = scan.drop("__f").schema
     val batch = keys.select(keyCols.map(col): _*).distinct().cache()
     try {
 
@@ -336,8 +362,8 @@ object Merge {
       CommitLog.decodeScanPath(f)))
     var deleted = 0L
     if (touched.nonEmpty) {
-      val touchedRows = touchedScan(spark, hPath, touchedRel,
-        cms, cts, sinkSchema)
+      val touchedRows = touchedScan(spark, hPath, touchedRel, m,
+        sinkSchema)
       val kept = touchedRows.join(batch, keyCols, "left_anti")
       // one KEYS-ONLY pruned semi-join count instead of two full
       // touched-file count jobs (count(full) − count(kept) re-read
@@ -369,21 +395,21 @@ object Merge {
     * (crash at any point leaves a manifest-resolving reader
     * exactly-once).
     *
-    * Before the write, one aggregation over the batch answers
-    * emptiness, the net-batch guard and the upsert count. Then ONE key
-    * pass — the inner join of the sink's
-    * key-projected (file, keys) scan with the batch's (keys, op) —
-    * answers everything else: its file set is the touched files, its
-    * `D` rows are the sink rows deleted, and its distinct `U` keys
-    * are the updates (so the remaining upserts are the inserts). This
-    * is exact because the guard leaves one op per key. A key matching
-    * ANY sink row matches in a touched file, so the rewrite's
-    * update/insert/delete split reads the touched files alone.
+    * The sink is read under its schema record, so planning runs no
+    * footer job. Before the write, ONE aggregation ([[keyPass]]) over
+    * the batch and the sink rows its keys match answers everything:
+    * emptiness, the net-batch guard, the upsert count, the sink rows
+    * deleted (matches of `D` keys), the updates (`U` keys with a
+    * match; the other upserts are the inserts) and the touched files
+    * (every file with a match). The rewrite is then the touched
+    * files' rows whose key the batch does not carry, plus every
+    * upsert: a key matching ANY sink row matches in a touched file,
+    * so the updates and the inserts together are exactly the upserts,
+    * and a null key never matches, so its upsert inserts.
     *
     * The batch must be NET: at most one op per key (what q198
     * produces). Conflicting ops on one key have no defined winner, so
-    * the operator fails fast — the check is one aggregation over the
-    * batch, dimension-sized next to the sink scan it guards. */
+    * the operator fails fast, before anything stages. */
   def applyCdcParquet(spark: SparkSession, changes: DataFrame,
                       keyCols: Seq[String], opCol: String, path: String,
                       failpoint: String => Unit = _ => (),
@@ -397,95 +423,49 @@ object Merge {
     val (baseGen, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     val live = m.files
     CommitLog.requireNoDvs(m.dvs, hPath, "applyCdcParquet")
-    val cms = m.colmaps
-    val cts = m.coltypes
-    // mergeSchema (inside liveScan) for the same reason as
-    // eraseParquet: an evolved sink has mixed footers, and rewriting
-    // touched wide files through one narrow footer's schema would
-    // drop the evolved columns
-    val scan = liveScan(spark, hPath, live, cms, cts)
-    val sinkDF = scan.drop("__f")
-    val sinkSchema = sinkDF.schema
+    // under the schema record, as in eraseParquet
+    val scan = liveScan(spark, hPath, m)
+    val sinkSchema = scan.drop("__f").schema
     require(sinkSchema.fieldNames.sorted.sameElements(
         changes.columns.filterNot(_ == opCol).sorted),
       s"changes must carry the sink schema plus '$opCol'; got " +
         changes.columns.sorted.mkString(","))
-    val batch = changes.cache()
+    val batch = pinned(changes)
     try {
+    val pass = keyPass(scan, batch, keyCols, Some(opCol))
     // An empty feed no-ops (a streaming CDF replica's idle windows
     // land here every trigger) — only the ledger advances when the
     // caller is tracking exactly-once windows. The advance is a
     // no-file blind append, so it REBASES past any concurrent commit
     // (a terminal CAS here would kill a standing replica's idle
     // trigger whenever maintenance raced it).
-    // ONE aggregation job answers emptiness, the net-batch guard AND
-    // the upsert count (the old shape ran isEmpty + a conflict count as
-    // two separate jobs and later an anti-join count for the inserts —
-    // three passes over the batch/touched files that this arithmetic
-    // replaces; guide §1.2). `first(op)` per key is exact because a net
-    // batch carries one row per key — and when it doesn't, the require
-    // below throws before the value is used.
-    val pre = batch.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("__n"), first(col(opCol)).as("__op"))
-      .agg(count(lit(1)).as("__keys"),
-        coalesce(sum(when(col("__n") > 1, 1L).otherwise(0L)), lit(0L))
-          .as("__conflicts"),
-        coalesce(sum(when(col("__op") === "U", 1L).otherwise(0L)),
-          lit(0L)).as("__upserts"))
-      .head()
-    if (pre.getLong(0) == 0L) {
+    if (pass.keys == 0L) {
       txn.foreach { case (app, v) =>
         CommitLog.commitAppend(fs, hPath, baseGen, live, Nil,
           txn = Some((app, v)))
       }
       return CdcStats(live.length.toLong, 0L, 0L, 0L, 0L)
     }
-    val nConflict = pre.getLong(1)
+    val nConflict = pass.conflicts
     require(nConflict == 0,
       s"CDC batch is not net: $nConflict keys carry more than one op — " +
         "collapse it first (q198's net-effect reduction)")
-    val nUpserts = pre.getLong(2)
     val upserts = batch.filter(col(opCol) === "U").drop(opCol)
     // CHECK constraints gate the rows that will LAND (U payloads; a
     // delete op's payload columns are ignored by contract)
     CommitLog.requireChecks(m.checks, upserts, "applyCdcParquet")
-
-    // the one key pass: one row per matched sink row, because the
-    // guard above left one op per key
-    val hits = scan.select(col("__f") +: keyCols.map(col): _*)
-      .join(batch.select(keyCols.map(col) :+ col(opCol): _*), keyCols)
-      .agg(collect_set(col("__f")).as("__files"),
-        coalesce(sum(when(col(opCol) === "D", 1L)), lit(0L)).as("__del"),
-        count_distinct(when(col(opCol) === "U",
-          struct(keyCols.map(col): _*))).as("__upd"))
-      .head()
-    val touched = hits.getSeq[String](0).sorted
+    val touched = pass.touched
     val touchedRel = touched.map(f => CommitLog.relativize(fs, hPath,
       CommitLog.decodeScanPath(f)))
-    val nDeleted = hits.getLong(1)
-    val nUpdated = hits.getLong(2)
-    val nInserted = nUpserts - nUpdated
-
-    val touchedRows =
-      if (touched.isEmpty) null
-      else touchedScan(spark, hPath, touchedRel, cms,
-        cts, sinkSchema)
-    val touchedKeys =
-      if (touched.isEmpty) null
-      else touchedRows.select(keyCols.map(col): _*)
-    val matched =
-      if (touched.isEmpty) upserts.filter(lit(false))
-      else upserts.join(touchedKeys, keyCols, "left_semi")
-    val inserts =
-      if (touched.isEmpty) upserts
-      else upserts.join(touchedKeys, keyCols, "left_anti")
+    val nDeleted = pass.deleted
+    val nUpdated = pass.updatedKeys
+    val nInserted = pass.upserts - nUpdated
 
     val rewritten =
-      if (touched.isEmpty) inserts
-      else touchedRows
+      if (touched.isEmpty) upserts
+      else touchedScan(spark, hPath, touchedRel, m, sinkSchema)
         .join(batch.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(matched)
-        .unionByName(inserts)
+        .unionByName(upserts)
     if (nUpdated + nInserted + nDeleted > 0)
       rewriteIn(fs, hPath, "cdc", rewritten, baseGen, live, touchedRel,
         failpoint, keepReplaced, txn)
@@ -499,6 +479,6 @@ object Merge {
     }
     CdcStats(live.length.toLong, touched.length.toLong,
       nUpdated, nDeleted, nInserted)
-    } finally batch.unpersist(blocking = false)
+    } finally release(batch)
   }
 }

@@ -88,16 +88,20 @@ object SchemaEvolve {
     }
   }
 
-  /** Current LOGICAL column names of a logged sink — one schema-only
-    * mapped scan. */
+  /** Current LOGICAL column names of a logged sink, from its schema
+    * record ([[CommitLog.logicalSchema]]). */
   def logicalColumns(spark: SparkSession, path: String): Seq[String] = {
     val hPath = new Path(path)
     val fs = fsOf(spark, hPath)
     val (_, m) = CommitLog.ensureSnapshotAt(fs, hPath)
     if (m.files.isEmpty) return Nil
-    CommitLog.mappedScan(spark, hPath, m.files, m.colmaps,
-      coltypes = m.coltypes).columns.toIndexedSeq
+    CommitLog.logicalSchema(spark, hPath, m).fieldNames.toIndexedSeq
   }
+
+  /** The `#meta` overlay recording `schema` as the table's logical
+    * schema — every verb below commits it with the change it makes. */
+  private def schemaRecord(schema: org.apache.spark.sql.types.StructType)
+  : Map[String, String] = Map(CommitLog.SchemaKey -> schema.toDDL)
 
   /** Widening promotions allowed per target catalog DDL type —
     * Iceberg's type-promotion classes plus the smaller integral
@@ -144,7 +148,8 @@ object SchemaEvolve {
     * cast record for the column's physical name; files appended
     * afterwards are written with the wide type directly and need no
     * record. Widen-only (see [[Widenings]]): a narrowing request is
-    * refused, so the cast is lossless by construction. Returns the
+    * refused, so the cast is lossless by construction. The schema
+    * record takes the wide type in the same commit. Returns the
     * committed generation. */
   def widenColumn(spark: SparkSession, path: String,
                   name: String, toDdl: String): Long = {
@@ -156,8 +161,7 @@ object SchemaEvolve {
     require(live.nonEmpty, s"widen on an empty sink $path")
     val cms = m.colmaps
     val cts = m.coltypes
-    val schema = CommitLog.mappedScan(spark, hPath, live, cms,
-      coltypes = cts).schema
+    val schema = CommitLog.logicalSchema(spark, hPath, m)
     require(schema.fieldNames.contains(name),
       s"widen: no logical column '$name' (have ${
         schema.fieldNames.mkString(",")})")
@@ -183,9 +187,13 @@ object SchemaEvolve {
             f -> (cs - name)
         }
       }
+    val widened = org.apache.spark.sql.types.StructType(schema.map(f =>
+      if (f.name == name) f.copy(dataType =
+        org.apache.spark.sql.types.DataType.fromDDL(target))
+      else f))
     CommitLog.commitNext(fs, hPath, gen, live, coltypes = newTypes,
       stats = statsSansCol,
-      statsReplace = statsSansCol.nonEmpty)
+      statsReplace = statsSansCol.nonEmpty, meta = schemaRecord(widened))
   }
 
   /** Physical name a logical column reads from in file `f`'s mapping:
@@ -270,8 +278,7 @@ object SchemaEvolve {
     var addOrder: Seq[String] = meta0.get("schema.addorder")
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     val addOrder0 = addOrder
-    var schema = CommitLog.mappedScan(spark, hPath, live, cms0,
-      coltypes = cts0, meta = meta0).schema
+    var schema = CommitLog.logicalSchema(spark, hPath, m0)
     changes.foreach {
       case Change.Add(name, toDdl) =>
         require(name.trim.nonEmpty, "add: empty column name")
@@ -370,7 +377,7 @@ object SchemaEvolve {
       else Map("schema.addorder" -> addOrder.mkString(","))
     CommitLog.commitNext(fs, hPath, gen, live, colmaps = cms,
       coltypes = cts, checks = checkOverlay, stats = stats,
-      statsReplace = true, meta = meta ++ orderMeta)
+      statsReplace = true, meta = meta ++ orderMeta ++ schemaRecord(schema))
   }
 
   /** RENAME a column: one manifest commit, zero data motion. Every
@@ -396,8 +403,8 @@ object SchemaEvolve {
     val live = snap.files
     require(live.nonEmpty, s"rename on an empty sink $path")
     val cms = snap.colmaps
-    val logical = CommitLog.mappedScan(spark, hPath, live, cms,
-      coltypes = snap.coltypes).columns.toSeq
+    val schema = CommitLog.logicalSchema(spark, hPath, snap)
+    val logical = schema.fieldNames.toSeq
     require(logical.contains(oldName),
       s"rename: no logical column '$oldName' (have ${
         logical.mkString(",")})")
@@ -423,9 +430,11 @@ object SchemaEvolve {
       if (!order.contains(oldName)) Map.empty[String, String]
       else Map("schema.addorder" -> order.map(n =>
         if (n == oldName) newName else n).mkString(","))
+    val renamed = org.apache.spark.sql.types.StructType(schema.map(f =>
+      if (f.name == oldName) f.copy(name = newName) else f))
     CommitLog.commitNext(fs, hPath, gen, live, colmaps = newMaps,
       checks = newChecks, stats = rekeyed, statsReplace = true,
-      meta = orderMeta)
+      meta = orderMeta ++ schemaRecord(renamed))
   }
 
   /** DROP a column: one manifest commit, zero data motion — every
@@ -456,8 +465,8 @@ object SchemaEvolve {
       s"drop: CHECK constraint(s) ${refChecks.keys.toSeq.sorted
         .mkString(", ")} reference column '$name' — dropCheck first")
     val cms = snap.colmaps
-    val logical = CommitLog.mappedScan(spark, hPath, live, cms,
-      coltypes = snap.coltypes).columns.toSeq
+    val schema = CommitLog.logicalSchema(spark, hPath, snap)
+    val logical = schema.fieldNames.toSeq
     require(logical.contains(name),
       s"drop: no logical column '$name' (have ${logical.mkString(",")})")
     require(logical.size > 1, s"drop: cannot drop the only column")
@@ -476,7 +485,9 @@ object SchemaEvolve {
       else Map("schema.addorder" ->
         order.filterNot(_ == name).mkString(","))
     CommitLog.commitNext(fs, hPath, gen, live, colmaps = newMaps,
-      stats = dekeyed, statsReplace = true, meta = orderMeta)
+      stats = dekeyed, statsReplace = true, meta = orderMeta ++
+        schemaRecord(org.apache.spark.sql.types.StructType(
+          schema.filterNot(_.name == name))))
   }
 
   /** Pay the mapping debt down: rewrite every mapped file to the
@@ -503,8 +514,7 @@ object SchemaEvolve {
     if (targets.isEmpty) return (0L, live.length.toLong)
     val tSet = targets.toSet
     val dvs = snap.dvs.filter { case (f, _) => tSet(f) }
-    val mapped = CommitLog.mappedScan(spark, hPath, targets, cms, dvs,
-      coltypes = cts)
+    val mapped = CommitLog.mappedScan(spark, hPath, targets, snap, dvs)
     // logical partition columns: the physical k=v levels of the rel
     // paths, pushed through the owning file's mapping ("" = dropped)
     val physParts = targets.head.split('/').dropRight(1)
@@ -528,7 +538,7 @@ object SchemaEvolve {
         .parquet(tmp.toString)
     }
     CommitLog.swap(fs, hPath, baseGen, live, targets, newFiles,
-      failpoint)
+      failpoint, schema = Some(mapped.schema))
     (targets.length.toLong, (live.length - targets.length +
       newFiles.length).toLong)
   }
@@ -563,14 +573,12 @@ object SchemaEvolve {
     val assigned = live.filter(plan.contains)
     require(assigned.nonEmpty, "plan assigns no live file of this sink")
     val aSet = assigned.toSet
-    val cms = snap.colmaps
-    val cts = snap.coltypes
     val dvs = snap.dvs.filter { case (f, _) => aSet(f) }
     // logical view WITH per-row file identity: the bin lookup needs
     // the owning file, and metadata pseudo-columns don't survive the
     // epoch union — mappedScan materializes them per branch
-    val scan = CommitLog.mappedScan(spark, hPath, assigned, cms, dvs,
-      identity = true, coltypes = cts)
+    val scan = CommitLog.mappedScan(spark, hPath, assigned, snap, dvs,
+      identity = true)
     val absPlan = assigned
       .map(r => fs.makeQualified(new Path(hPath, r)).toUri.getPath
         -> plan(r)).toMap
@@ -599,7 +607,8 @@ object SchemaEvolve {
         .parquet(tmp.toString)
     }
     CommitLog.swap(fs, hPath, baseGen, live, assigned, newFiles,
-      failpoint)
+      failpoint, schema = Some(scan.drop("__file_path", "__row_index")
+        .schema))
     (assigned.size.toLong, newFiles.size.toLong +
       (live.length - assigned.length))
   }

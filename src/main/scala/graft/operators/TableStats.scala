@@ -239,12 +239,13 @@ object TableStats {
     val mappedStats: Map[String, Map[String, CommitLog.ColStats]] =
       if (mappedT.isEmpty) Map.empty
       else boundsOf(
-        CommitLog.mappedScan(spark, hPath, mappedT, cms,
-            identity = true, coltypes = cts)
+        CommitLog.mappedScan(spark, hPath, mappedT, snap,
+            identity = true)
           .withColumn("__f", relCol(fs, hPath, col("__file_path")))
           .drop("__file_path", "__row_index"),
         cols)
-    val stats = plainFileStats(spark, fs, hPath, plainT, cols) ++
+    val stats = plainFileStats(spark, fs, hPath, plainT, cols,
+      CommitLog.recordedSchema(snap.meta)) ++
       mappedStats
     require(stats.nonEmpty,
       s"analyze: none of $cols is a stats-capable column of $path")
@@ -262,17 +263,17 @@ object TableStats {
 
   /** Per-file bounds of `cols` over sink files with no column mapping,
     * keyed by sink-relative name — one grouped pass over exactly
-    * `files`. Empty when `files` is. */
+    * `files`, read under the schema `record` ([[CommitLog.scanFiles]]).
+    * Empty when `files` is. */
   private[graft] def plainFileStats(spark: SparkSession,
                                     fs: org.apache.hadoop.fs.FileSystem,
                                     hPath: Path, files: Seq[String],
-                                    cols: Seq[String])
+                                    cols: Seq[String],
+                                    record: Option[StructType])
   : Map[String, Map[String, CommitLog.ColStats]] =
     if (files.isEmpty) Map.empty
     else boundsOf(
-      spark.read.option("mergeSchema", "true")
-        .option("basePath", hPath.toString)
-        .parquet(files.map(r => new Path(hPath, r).toString): _*)
+      CommitLog.scanFiles(spark, hPath, files, record)
         .withColumn("__f", relCol(fs, hPath, col("_metadata.file_path"))),
       cols)
 
@@ -586,7 +587,6 @@ object TableStats {
     val live = snap.files
     if (live.isEmpty) return 0L
     val cms = snap.colmaps
-    val cts = snap.coltypes
     val existing = snap.blooms
     def physOf(f: String, logical: String): String =
       cms.getOrElse(f, Map.empty)
@@ -597,8 +597,8 @@ object TableStats {
         existing.getOrElse(f, Map.empty).contains(physOf(f, c)))
     }
     if (targets.isEmpty) return 0L
-    val scan = CommitLog.mappedScan(spark, hPath, targets, cms,
-      identity = true, coltypes = cts)
+    val scan = CommitLog.mappedScan(spark, hPath, targets, snap,
+      identity = true)
     cols.foreach { c =>
       require(scan.columns.contains(c),
         s"buildBloom: no column `$c` in $path's logical schema")
@@ -737,8 +737,8 @@ object TableStats {
       return CommitLog.readSnapshot(spark, path, fs, m).filter(predicate)
         .limit(0)
     val keepSet = keep.toSet
-    CommitLog.mappedScan(spark, hPath, keep, m.colmaps,
-      m.dvs.filter { case (f, _) => keepSet(f) }, coltypes = m.coltypes)
+    CommitLog.mappedScan(spark, hPath, keep, m,
+      m.dvs.filter { case (f, _) => keepSet(f) })
       .filter(predicate)
   }
 }

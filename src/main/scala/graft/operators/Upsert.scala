@@ -298,7 +298,7 @@ object Upsert {
     val touchedDirs = newFiles.map(dirOf).toSet
     CommitLog.swap(fs, hPath, baseGen, live,
       live.filter(r => touchedDirs.contains(dirOf(r))), newFiles,
-      failpoint)
+      failpoint, schema = Some(deduped.schema))
     n
   }
 
@@ -482,11 +482,9 @@ object Upsert {
          case Some((_, m)) if m.files.isEmpty => None
          case Some((_, m)) =>
            if (m.colmaps.isEmpty && m.coltypes.isEmpty)
-             Some(spark.read.option("basePath", path).parquet(
-               m.files.map(r =>
-                 new org.apache.hadoop.fs.Path(hPath, r).toString): _*))
-           else Some(CommitLog.mappedScan(spark, hPath, m.files,
-             m.colmaps, coltypes = m.coltypes))
+             Some(CommitLog.scanFiles(spark, hPath, m.files,
+               CommitLog.recordedSchema(m.meta)))
+           else Some(CommitLog.mappedScan(spark, hPath, m.files, m))
          case None => Some(spark.read.parquet(path))
        }).map { s =>
         pvals match {
@@ -566,7 +564,8 @@ object Upsert {
         var committed = false
         while (!committed) {
           try {
-            CommitLog.commitNext(fs, hPath, base, live ++ newFiles)
+            CommitLog.commitNext(fs, hPath, base, live ++ newFiles,
+              schema = Some(delta.schema))
             committed = true
           } catch {
             case e: CommitConflictException =>
@@ -592,14 +591,12 @@ object Upsert {
               val winnerNew = l2.filterNot(seen)
               if (winnerNew.nonEmpty) {
                 if (stagedKeys == null)
-                  stagedKeys = spark.read.option("basePath", path)
-                    .parquet(absOf(newFiles): _*)
+                  stagedKeys = CommitLog.scanFiles(spark, hPath,
+                      newFiles, Some(delta.schema))
                     .select(keys.map(col): _*).distinct()
                     .localCheckpoint()
-                val overlap = spark.read
-                  .option("mergeSchema", "true")
-                  .option("basePath", path)
-                  .parquet(absOf(winnerNew): _*)
+                val overlap = CommitLog.scanFiles(spark, hPath,
+                    winnerNew, CommitLog.recordedSchema(m2.meta))
                   .select(keys.map(col): _*)
                   .join(stagedKeys, keys, "left_semi").take(1)
                 if (overlap.nonEmpty)

@@ -243,10 +243,8 @@ private[sources] object GraftState {
           "exclusive")
       val (k, m) = CommitLog.branchHead(fs, hPath, b)
       val schema =
-        if (m.files.nonEmpty)
-          CommitLog.mappedScan(spark, hPath, m.files, m.colmaps,
-            coltypes = m.coltypes, meta = m.meta).schema
-        else m.meta.get("schema.ddl").map(StructType.fromDDL)
+        if (m.files.nonEmpty) CommitLog.logicalSchema(spark, hPath, m)
+        else m.meta.get(CommitLog.SchemaKey).map(StructType.fromDDL)
           .getOrElse(StructType(Nil))
       return Some(new GraftState(path, k, m, schema, Some(b)))
     }
@@ -273,14 +271,10 @@ private[sources] object GraftState {
         s"$path — retained: ${gens.head}..${gens.last}")
     val m = CommitLog.manifestAt(fs, hPath, gen)
     val schema =
-      if (m.files.nonEmpty)
-        CommitLog.mappedScan(spark, hPath, m.files, m.colmaps,
-          coltypes = m.coltypes, meta = m.meta).schema
-      else
-        // a CREATE'd-but-empty table reads under its DECLARED schema
-        // (the #meta bootstrap record); once files land, the mapped
-        // scan's schema is the source of truth
-        m.meta.get("schema.ddl").map(StructType.fromDDL)
+      // the schema record answers without a scan; a CREATE'd-but-empty
+      // table reads under its DECLARED schema as written
+      if (m.files.nonEmpty) CommitLog.logicalSchema(spark, hPath, m)
+      else m.meta.get(CommitLog.SchemaKey).map(StructType.fromDDL)
           .getOrElse(StructType(Nil))
     Some(new GraftState(path, gen, m, schema))
   }
@@ -1113,9 +1107,8 @@ private[sources] final class GraftStreamSource(
       if (files.isEmpty) emptyPinned
       else {
         val fSet = files.toSet
-        val base = CommitLog.mappedScan(spark, hPath, files, m.colmaps,
-          m.dvs.filter { case (f, _) => fSet(f) },
-          coltypes = m.coltypes)
+        val base = CommitLog.mappedScan(spark, hPath, files, m,
+          m.dvs.filter { case (f, _) => fSet(f) })
         val full = if (readChangeFeed) base.withColumn("_change_type",
           org.apache.spark.sql.functions.lit("insert")) else base
         full.select(pinnedCols: _*)
@@ -1154,9 +1147,8 @@ private[sources] final class GraftStreamSource(
         if (added.isEmpty) emptyPinned
         else {
           val aSet = added.toSet
-          CommitLog.mappedScan(spark, hPath, added, mEnd.colmaps,
-              mEnd.dvs.filter { case (f, _) => aSet(f) },
-              coltypes = mEnd.coltypes)
+          CommitLog.mappedScan(spark, hPath, added, mEnd,
+              mEnd.dvs.filter { case (f, _) => aSet(f) })
             .select(pinnedCols: _*)
         }
       }
@@ -1335,25 +1327,23 @@ private[graft] object GraftWriter {
     // would land files that break the union read later — refuse both
     // at write time. The table's logical schema (names AND types,
     // including path-derived partition columns) comes from ONE live
-    // file planned through its mapping/widening records
-    // ([[CommitLog.mappedScan]] — O(1) footers per batch, never a
-    // mergeSchema pass); a batch carrying the WIDENED type of a
-    // `#coltype`-evolved column therefore passes, a narrower or
+    // file planned through its mapping/widening records under the
+    // schema record ([[CommitLog.mappedScan]] — no footer read while
+    // the table records its schema); a batch carrying the WIDENED type
+    // of a `#coltype`-evolved column therefore passes, a narrower or
     // unrelated type refuses. Supersets are allowed (additive
-    // evolution), order is free (parquet resolves by name).
+    // evolution; the commit widens the record), order is free
+    // (parquet resolves by name).
     // the same guard holds for the FIRST raw batch into a still-empty
     // catalog-created table: the declared `#meta` schema is what the
     // table promised its readers, so a conflicting bootstrap batch
     // refuses just as loudly as one against live files would
+    val snap = bm.getOrElse(mainManifest)
     val logicalSchemaOpt: Option[StructType] =
       if (live.nonEmpty)
-        Some(CommitLog.mappedScan(spark, hPath,
-          Seq(live.head),
-          bm.map(_.colmaps).getOrElse(mainManifest.colmaps),
-          coltypes = bm.map(_.coltypes)
-            .getOrElse(mainManifest.coltypes),
-          meta = metaRecs).schema)
-      else metaRecs.get("schema.ddl").map(StructType.fromDDL)
+        Some(CommitLog.mappedScan(spark, hPath, Seq(live.head), snap)
+          .schema)
+      else metaRecs.get(CommitLog.SchemaKey).map(StructType.fromDDL)
     logicalSchemaOpt.foreach { logicalSchema =>
       val missing = logicalSchema.fieldNames.toSeq
         .filterNot(data.columns.contains)
@@ -1417,20 +1407,22 @@ private[graft] object GraftWriter {
       bucketSpec.map(_ => graft.operators.Bucketing.StageCol)
     val newFiles = CommitLog.stageIn(fs, hPath, "fmt") { tmp =>
       try {
-        // staged file count follows the batch's BYTES, never the leaf
-        // task count (guide §2.2/§6 — see Sources.sizedForWrite):
+        // a flat batch's staged file count follows its BYTES, never the
+        // leaf task count (guide §2.2/§6 — see Sources.sizedForWrite):
         // without this a fixture-sized append staged one tiny file per
         // scan split (≈ the core count), each billing
-        // create+fsync+rename twice plus a manifest entry. Inside the
+        // create+fsync+rename twice plus a manifest entry. A
+        // partitioned (or bucket-routed) batch writes one file per
+        // value per task and is left unsized, as in Merge. Inside the
         // try: the sizing estimate optimizes the plan, and optimization
         // of a local-relation batch can evaluate the CHECK assert_true
         // inline — that refusal must unwrap to the same loud
         // IllegalArgumentException as a task-side one.
-        val sized = graft.io.Sources.internalWriter(
-          graft.io.Sources.sizedForWrite(routed))
         if (stageParts.nonEmpty)
-          sized.partitionBy(stageParts: _*).parquet(tmp.toString)
-        else sized.parquet(tmp.toString)
+          graft.io.Sources.internalWriter(routed)
+            .partitionBy(stageParts: _*).parquet(tmp.toString)
+        else graft.io.Sources.internalWriter(
+            graft.io.Sources.sizedForWrite(routed)).parquet(tmp.toString)
       } catch {
         case t: Throwable =>
           // surface a CHECK violation as the same loud
@@ -1456,12 +1448,20 @@ private[graft] object GraftWriter {
       // directories (file-keyed records of replaced files pruned in
       // the same commit — the main path's commitNext carry rule,
       // applied manually since commitBranch takes a full manifest)
+      val branchFiles = replacePrefix match {
+        case _ if overwrite => newFiles
+        case Some(prefix) =>
+          bmm.files.filterNot(_.startsWith(prefix)) ++ newFiles
+        case None => bmm.files ++ newFiles
+      }
+      val meta = bmm.meta - CommitLog.SchemaKey ++ CommitLog.nextRecord(
+        bmm, branchFiles, Some(data.schema)).map(CommitLog.SchemaKey -> _)
       val committed = replacePrefix match {
         case _ if overwrite =>
           bmm.copy(files = newFiles, dvs = Map.empty,
             dvMarks = Map.empty, stats = Map.empty,
             colmaps = Map.empty, coltypes = Map.empty,
-            blooms = Map.empty, anns = Map.empty)
+            blooms = Map.empty, anns = Map.empty, meta = meta)
         case Some(prefix) =>
           val rogue = newFiles.filterNot(_.startsWith(prefix))
           require(rogue.isEmpty,
@@ -1469,9 +1469,9 @@ private[graft] object GraftWriter {
               s"got row(s) outside the spec (staged ${rogue.take(3)
                 .mkString(", ")}) — the batch must carry only the " +
               "overwritten partition's rows")
-          CommitLog.prunedToFiles(bmm.copy(files =
-            bmm.files.filterNot(_.startsWith(prefix)) ++ newFiles))
-        case None => bmm.copy(files = bmm.files ++ newFiles)
+          CommitLog.prunedToFiles(bmm.copy(files = branchFiles,
+            meta = meta))
+        case None => bmm.copy(files = branchFiles, meta = meta)
       }
       CommitLog.commitBranch(fs, hPath, branch.get, k, committed)
       return
@@ -1481,7 +1481,8 @@ private[graft] object GraftWriter {
       // files; the replaced ones remain time-travel history until
       // expireGenerations/vacuum (a CAS loss here is terminal — a
       // truncate that raced another writer must be re-decided)
-      CommitLog.commitNext(fs, hPath, gen, newFiles, txn = txn)
+      CommitLog.commitNext(fs, hPath, gen, newFiles, txn = txn,
+        schema = Some(data.schema))
     else replacePrefix match {
       case Some(prefix) =>
         // static partition overwrite: the next generation swaps the
@@ -1501,10 +1502,10 @@ private[graft] object GraftWriter {
         // terminal on CAS loss, like truncate: replacing a region
         // that raced another writer must be re-decided
         CommitLog.commitNext(fs, hPath, gen, keep ++ newFiles,
-          txn = txn)
+          txn = txn, schema = Some(data.schema))
       case None =>
         CommitLog.commitAppend(fs, hPath, gen, live, newFiles,
-          txn = txn)
+          txn = txn, schema = Some(data.schema))
     }
     // opt-in stats maintenance (`option("autoAnalyze", true)`): keep
     // the table's EXISTING stats coverage current over the files this
@@ -1777,10 +1778,8 @@ private[sources] final class GraftPartialAggRelation(
     val hPath = new Path(state.path)
     val keep = planned.dirty.toSet
     val scan = CommitLog.mappedScan(spark, hPath, planned.dirty,
-      state.manifest.colmaps,
-      state.manifest.dvs.filter { case (f, _) => keep(f) },
-      coltypes = state.manifest.coltypes,
-      meta = state.manifest.meta)
+      state.manifest,
+      state.manifest.dvs.filter { case (f, _) => keep(f) })
     val aggCols = planned.aggSpecs.zipWithIndex.map {
       case (("count_star", _), i) => count(lit(1)).as(s"agg_$i")
       case (("count", n), i) => count(c(n)).as(s"agg_$i")
@@ -2231,10 +2230,9 @@ private[sources] final class GraftRelation(
     // never pay the extra columns)
     val needsId = schema.fieldNames.exists(GraftRowLevel.isMetaCol)
     val mapped = CommitLog.mappedScan(spark, hPath, keptFiles,
-      state.manifest.colmaps,
+      state.manifest,
       state.manifest.dvs.filter { case (f, _) => keepSet(f) },
-      identity = needsId,
-      coltypes = state.manifest.coltypes)
+      identity = needsId)
     val df =
       if (!needsId) mapped
       else {

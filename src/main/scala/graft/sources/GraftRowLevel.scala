@@ -573,7 +573,10 @@ private[sources] final class GraftDynamicOverwriteBatchWrite(
           val keep = bm.files.filterNot(f =>
             replaced.contains(leafDir(f)))
           CommitLog.commitBranch(fs, hPath, b, k,
-            CommitLog.prunedToFiles(bm.copy(files = keep ++ added)))
+            CommitLog.prunedToFiles(bm.copy(files = keep ++ added,
+              meta = bm.meta - CommitLog.SchemaKey ++ CommitLog
+                .nextRecord(bm, keep ++ added, Some(dataSchema))
+                .map(CommitLog.SchemaKey -> _))))
         case None =>
           val (gen, live) = CommitLog.ensureLoggedAt(fs, hPath)
           val keep = live.filterNot(f => replaced.contains(leafDir(f)))
@@ -581,7 +584,7 @@ private[sources] final class GraftDynamicOverwriteBatchWrite(
           // replaced region that raced another writer must be
           // re-decided
           CommitLog.commitNext(fs, hPath, gen, keep ++ added,
-            txn = txn)
+            txn = txn, schema = Some(dataSchema))
       }
     } finally fs.delete(stagingPath, true)
   }

@@ -326,8 +326,8 @@ class SchemaEvolveSpec extends SparkSpec {
     // assign the files holding keys 1..10 to two bins; leave 11..20
     // untouched (a wave-based planner's partial pass)
     val keyOf: Map[String, Long] = live.map { f =>
-      f -> CommitLog.mappedScan(spark, hp, Seq(f),
-        latest(fs, hp).colmaps).select("key")
+      f -> CommitLog.mappedScan(spark, hp, Seq(f), latest(fs, hp))
+        .select("key")
         .head.getLong(0)
     }.toMap
     val assigned = live.filter(f => keyOf(f) <= 10L)

@@ -180,10 +180,53 @@ class SnapshotBudgetSpec extends SparkSpec {
       assert(got == Seq((2L, "update_postimage"), (2L, "update_preimage"),
         (30L, "insert")))
     }
-    // the apply: no count job beside its one key pass; the window: one
-    // scan per changed file, no schema inference of DV parquet and no
-    // empty-frame schema read
-    assert((cdcJobs, cdfJobs) == (12, 5))
+    // the apply: one aggregation and the rewrite, under the schema
+    // record; the window: one scan per changed file, no schema
+    // inference of data files or DV parquet, no empty-frame schema read
+    // (parent: 12 and 5)
+    assert((cdcJobs, cdfJobs) == (6, 3))
+    graft.io.Sources.deleteRecursively(root)
+  }
+
+  test("reads under the schema record: no footer job in the table " +
+    "verbs, and a format(\"graft\") count runs only its own jobs") {
+    val root = java.nio.file.Files.createTempDirectory("lb_footer")
+      .toString
+    val sink = twoFileTable(root)
+    val fs = fsOf(sink); val hp = new Path(sink)
+    // a CDF stream over the table, polled once before the writes
+    val v1 = new graft.sources.GraftDataSource().createSource(
+      spark.sqlContext, s"$root/ck", None, "graft",
+      Map("path" -> sink, "readChangeFeed" -> "true", "cdfKeys" -> "k"))
+    val from = v1.getOffset.get
+    val g0 = CommitLog.latestSnapshot(fs, hp).get._1
+    val count = jobs(assert(spark.read.format("graft").load(sink).count()
+      == 8L))
+    val footers = Seq(
+      "format(graft) count" -> footerJobs(
+        spark.read.format("graft").load(sink).count()),
+      "readAt" -> footerJobs(CommitLog.readAt(spark, sink, g0).count()),
+      "mergeOnRead" -> footerJobs(DeleteVectors.mergeOnRead(spark, sink,
+        Seq((2L, 22L), (30L, 300L)).toDF("k", "v"), Seq("k"))))
+    // the stream's window over that upsert runs its own stages outside
+    // a SQL execution, so it is pinned by its total: those two stages
+    val window = jobs(v1.getBatch(Some(from), v1.getOffset.get))
+    val writeFooters = Seq(
+      "deleteWhere" -> footerJobs(DeleteVectors.deleteWhere(spark, sink,
+        $"k" === 7L)),
+      "applyDeletes" -> footerJobs(DeleteVectors.applyDeletes(spark, sink)),
+      "compactSink" -> footerJobs(graft.operators.Compact.compactSink(
+        spark, sink, targetBytes = 1L << 20)),
+      "mergeParquet" -> footerJobs(Merge.mergeParquet(spark,
+        Seq((3L, 33L), (40L, 400L)).toDF("k", "v"), Seq("k"), sink)),
+      "applyCdcParquet" -> footerJobs(Merge.applyCdcParquet(spark,
+        Seq((4L, 44L, "U"), (5L, 0L, "D")).toDF("k", "v", "__op"),
+        Seq("k"), "__op", sink)))
+    assert((footers ++ writeFooters).filter(_._2 != 0) == Nil)
+    // parent: 5 and 4, with footer reads (the table's schema and the
+    // scan's, both planned with mergeSchema; the window's files)
+    assert((count, window) == (2, 2))
+    v1.stop()
     graft.io.Sources.deleteRecursively(root)
   }
 
@@ -219,10 +262,9 @@ class SnapshotBudgetSpec extends SparkSpec {
     val queries = spark.read.parquet(sink).filter($"vec_id" < 6)
     val servedFooters = footerJobs(assert(AnnIndex.topKPq(spark, sink,
       queries, nProbe = 4, k = 5).collect().length == 30))
-    // parent: 18, 15 and 4 — 12 and 6 Spark-plan training jobs, a dims
-    // probe, footer reads of sidecars (some just written), and
-    // broadcasts of live file names
-    assert((build, buildPq, servedFooters) == (7, 5, 0))
+    // build reads the table under its schema record: no footer read
+    // for the training rows or the assignment scan (parent: 7)
+    assert((build, buildPq, servedFooters) == (5, 5, 0))
     graft.io.Sources.deleteRecursively(root)
   }
 

@@ -112,6 +112,21 @@ class SourcesSpec extends SparkSpec {
     assert(Sources.sizedForWrite(opaque).rdd.getNumPartitions == 3)
   }
 
+  test("sizedForWrite never narrows a frame's input partitions more " +
+    "than MaxWriteShrink-fold, however low the size estimate") {
+    // 64 range slices projected to 100 KB strings: Catalyst sizes the
+    // projection by the string type's default width (tens of KB in
+    // all), while the rows hold ~100 MB — the byte rule alone would
+    // coalesce the whole projection into one task
+    val wide = spark.range(0, 1000, 1, 64)
+      .selectExpr("repeat('x', 100000) AS s")
+    assert(wide.queryExecution.optimizedPlan.stats.sizeInBytes <
+      spark.sessionState.conf.getConf(org.apache.spark.sql.internal
+        .SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    assert(Sources.sizedForWrite(wide).rdd.getNumPartitions ==
+      64 / Sources.MaxWriteShrink)
+  }
+
   test("withShufflePartitions scopes the override and always restores") {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
